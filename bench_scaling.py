@@ -149,7 +149,7 @@ def child(n_exec: int, fixture: str) -> None:
     """
     from pyspark.sql import SparkSession
 
-    from data_quality_check_spark.pipeline.run import FilterConfig, run_filter
+    from data_quality_check_spark.pipeline.run import run_filter
 
     cpus = n_exec * CORES_PER_EXEC
     # ParallelGCThreads: each executor JVM sizes its GC pool from the cpuset it
@@ -203,9 +203,6 @@ def child(n_exec: int, fixture: str) -> None:
                     fixture,
                     os.path.join(out, "data"),
                     os.path.join(out, "ckpt"),
-                    # SPARK_GRAFT_PPL_MODE=grouped measures the salted
-                    # applyInPandas shuffle path instead of the fused map stage
-                    cfg=FilterConfig(ppl_mode=os.environ.get("SPARK_GRAFT_PPL_MODE", "map")),
                 )
                 results.append((time.perf_counter() - t0, summary, ext))
             finally:
@@ -372,11 +369,10 @@ def main() -> None:
         "loadavg_before": [round(x, 2) for x in load_before],
         "loadavg_after": [round(x, 2) for x in load_after],
     }
-    result["ppl_mode"] = os.environ.get("SPARK_GRAFT_PPL_MODE", "map")
-    # headline table records the default path at the default fixture size;
-    # SPARK_GRAFT_NO_BENCHMD=1 for auxiliary runs (second fixture scale,
-    # grouped mode) whose JSON is recorded by hand in their own section
-    if result["ppl_mode"] == "map" and not os.environ.get("SPARK_GRAFT_NO_BENCHMD"):
+    # headline table records the default fixture size; SPARK_GRAFT_NO_BENCHMD=1
+    # for auxiliary runs (second fixture scale) whose JSON is recorded by hand
+    # in their own section
+    if not os.environ.get("SPARK_GRAFT_NO_BENCHMD"):
         update_bench_md(result)
     print(json.dumps(result), flush=True)
 

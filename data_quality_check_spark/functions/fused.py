@@ -1,12 +1,13 @@
 """Fused model stage: decode-check + language-ID + perplexity in ONE Python
 crossing.
 
-The modular column UDFs (`with_decode_check` → `with_langid` →
-`with_perplexity`) are three chained ArrowEvalPython nodes: the rowset crosses
-the JVM↔Python boundary three times per task, and per-crossing overhead
-(worker round-trip, Arrow [de]serialization) dominates wall time long before
-CPU does. `with_model_scores_fused` computes all three with the same kernels in
-one crossing; results are bit-identical to the modular path (tested).
+This is the filter job's only model-scoring path. Three chained column UDFs
+(decode check → `with_langid` → `with_perplexity`) would be three
+ArrowEvalPython nodes: the rowset would cross the JVM↔Python boundary three
+times per task, and per-crossing overhead (worker round-trip, Arrow
+[de]serialization) dominates wall time long before CPU does.
+`with_model_scores_fused` computes all three in one crossing; its output
+matches the python golden (`reference_impl.compute_golden`, tested).
 
 Shape matters as much as count: this is a *struct-returning pandas_udf*, NOT a
 `mapInPandas` over full rows — with mapInPandas the multi-KB `bytes` column
@@ -14,9 +15,9 @@ would be Arrow-serialized into Python AND back out again (measured ~2× the
 cost of the whole scoring pass at 2M rows). As a column UDF, `bytes` crosses
 into Python exactly once and the JVM row it came from keeps the original.
 
-Use the modular path when per-language models are too big to co-load
-(`perplexity_grouped`'s salted shuffle); use the fused path — the default —
-when one worker can hold the model set, which is the common case.
+The built-in char-trigram model set is small enough for every python worker
+to hold (`default_model()`, cached per worker), so the stage is map-side: no
+language-keyed shuffle, hence no skewed language key to salt.
 """
 
 from __future__ import annotations
@@ -89,11 +90,12 @@ def with_model_scores_fused(
     h_col: str = "h",
     caption_col: str = "caption",
 ) -> DataFrame:
-    """Adds flag_decode_failed, lang, lang_conf, ppl — one python crossing,
-    `bytes` inbound-only, map-side (no shuffle).
+    """Adds flag_decode_failed, lang, lang_conf, ppl, and `_scrubbed_all`
+    (the scrubbed caption of every row, which `run.finalize` keep-masks) —
+    one python crossing, `bytes` inbound-only, map-side (no shuffle).
 
-    Semantics identical to `with_decode_check` + `with_langid` +
-    `with_perplexity` (multimodal.py / langid.py).
+    Same kernels as `with_langid` + `with_perplexity` (langid.py) and the
+    python golden (`reference_impl.compute_golden`).
     """
     # asNondeterministic is an optimizer fence, not a semantics statement: the
     # UDF is pure, but without the fence Catalyst pushes the downstream keep/

@@ -11,7 +11,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 LANGID_SCHEMA = StructType(
@@ -54,77 +54,8 @@ def with_langid(df, caption_col: str = "caption"):
 
 def with_perplexity(df, caption_col: str = "caption", lang_col: str = "lang"):
     """Adds `ppl` (map-side; per-language model rows are all in the broadcast-free
-    in-process table — see perplexity_grouped for the salted shuffle variant)."""
+    in-process table)."""
     return df.withColumn(
         "ppl", perplexity_udf.asNondeterministic()(F.col(caption_col), F.col(lang_col))
     )
 
-
-def perplexity_grouped(df, caption_col: str = "caption",
-                       salt_buckets: int = 8, id_col: str = "rid"):
-    """Language-ID **and** perplexity via `applyInPandas` grouped on a salted
-    language key. Adds `lang`, `lang_conf`, `ppl`.
-
-    This is the scale path the north_rule names: when per-language models are too
-    large to hold all-at-once per worker, group rows by language so each task loads
-    ONE model. Language frequency is Zipfian (one language ≈70% of rows), so the
-    group key is salted — `concat(lang, '#', xxhash64(id) % S)` — splitting the hot
-    language into S balanced shuffle partitions. Results are bit-identical to
-    `with_perplexity` (same kernels), verified in tests.
-
-    Plan shape (ADVICE r1): the langid UDF runs INSIDE this branch, over a
-    narrow (id, caption) projection, and the join-back's left side is the
-    caller's df UNTOUCHED — its lineage carries no language-model UDF. The
-    previous contract (caller runs `with_langid` first, this function joins df
-    back to a projection OF ITSELF) put the langid UDF on both join sides, so
-    Catalyst planned and executed the whole scan→flags→langid lineage twice.
-    Now the two sides share nothing but the file scan (which column-prunes to
-    (id, caption) on the right), so no persist/pin is needed and every model
-    UDF runs exactly once.
-
-    Only the narrow (id, caption, lang) projection crosses the salted shuffle and
-    the Arrow boundary — never `bytes` (SURVEY.md §7.3: wide rows must not
-    shuffle; the original full-row applyInPandas moved every image's bytes
-    through Arrow twice and broke 8g executors at 8M rows). The result joins
-    back on `id_col`, which must be UNIQUE per physical row and IDENTICAL
-    across plan branches — the pipeline's `rid` is a pure function of storage
-    position (see pipeline.run.with_rid), so both branches agree by
-    construction, with no dependence on deterministic split planning. On the
-    bucketed production layout this join is storage-partitioned; here AQE picks
-    the strategy.
-    """
-    from data_quality_check_spark.functions.textmodel import default_model
-
-    clash = [c for c in ("lang", "lang_conf", "ppl") if c in df.columns]
-    if clash:
-        raise ValueError(
-            f"perplexity_grouped computes langid itself; drop pre-existing {clash}"
-        )
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("lang", StringType()),
-            StructField("lang_conf", DoubleType()),
-            StructField("ppl", DoubleType()),
-        ]
-    )
-    narrow = with_langid(df.select(id_col, caption_col), caption_col)
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    salted = narrow.withColumn("_salted_lang", F.concat_ws("#", F.col("lang"), salt))
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        model = default_model()
-        ppl = model.perplexity(
-            pdf[caption_col].fillna("").tolist(), pdf["lang"].fillna("und").tolist()
-        )
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                "lang": pdf["lang"],
-                "lang_conf": pdf["lang_conf"],
-                "ppl": ppl,
-            }
-        )
-
-    scored = salted.groupBy("_salted_lang").applyInPandas(score_group, out_schema)
-    return df.join(scored, id_col)

@@ -58,23 +58,6 @@ def decode_check_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         )
 
 
-def with_decode_check(df: DataFrame, bytes_col: str = "bytes",
-                      w_col: str = "w", h_col: str = "h") -> DataFrame:
-    """Adds `flag_decode_failed`: undecodable bytes or decoded dims ≠ metadata.
-
-    Map-side only — `bytes` is read, never shuffled.
-    """
-    # optimizer fence — pure UDF, but keeps Catalyst from cloning the decode
-    # pass through pushed-down filters (see fused.py)
-    dec = decode_check_udf.asNondeterministic()(F.col(bytes_col))
-    df = df.withColumn("_dec", dec)
-    mismatch = (F.col("_dec.dec_w") != F.col(w_col)) | (F.col("_dec.dec_h") != F.col(h_col))
-    return df.withColumn(
-        "flag_decode_failed",
-        ~F.col("_dec.decode_ok") | F.coalesce(mismatch, F.lit(True)),
-    ).drop("_dec")
-
-
 def grid_luma_features(arr: np.ndarray, grid: int = 4) -> list[float]:
     """Grid-block mean-luma feature kernel (length grid², values in [0,1]) —
     the SINGLE definition shared by the Spark UDF (`feature_vector_udf`) and
@@ -234,7 +217,7 @@ def decode_health(
     map-side and never shuffled; only the struct of per-row results survives)
     folded by ONE map-side-combined agg on the ≤|formats| key. The decode
     UDF is marked nondeterministic for the same optimizer-fence reason as
-    `with_decode_check`."""
+    the fused model stage (functions/fused.py)."""
     dec = decode_check_udf.asNondeterministic()(F.col(bytes_col))
     proj = df.select(F.col(fmt_col).alias("_grp"), dec.alias("_dec"))
     ok = F.col("_dec.decode_ok")

@@ -727,50 +727,55 @@ def ivf_maintenance(
     """
     if action not in ("rebuild", "report"):
         raise ValueError(f"action must be 'rebuild' or 'report', got {action!r}")
-    from data_quality_check_spark.operators.dedup import _pin
+    from data_quality_check_spark.operators.dedup import (
+        _pin,
+        _release_local_checkpoint,
+        pin_scope,
+    )
     from data_quality_check_spark.operators.drift import categorical_drift
 
     cents = ivf_load_centroids(io, name)
-    assigned = _pin(_ivf_assigned(new_df, cents, id_col, vec_col))
-    index_cells = io.read(f"{name}.vectors").select("cell")
-    cells = categorical_drift(index_cells, assigned.select("cell"), "cell").collect()
-    psi = round(sum(r["psi_term"] for r in cells), 6)
-    n_index = sum(r["n_a"] for r in cells)
-    n_new = sum(r["n_b"] for r in cells)
-    drifted = psi >= psi_threshold
+    # every pin taken below (`assigned`, and any the rebuild takes) is
+    # released on exit, whichever action ran
+    with pin_scope():
+        assigned = _pin(_ivf_assigned(new_df, cents, id_col, vec_col))
+        index_cells = io.read(f"{name}.vectors").select("cell")
+        cells = categorical_drift(index_cells, assigned.select("cell"), "cell").collect()
+        psi = round(sum(r["psi_term"] for r in cells), 6)
+        n_index = sum(r["n_a"] for r in cells)
+        n_new = sum(r["n_b"] for r in cells)
+        drifted = psi >= psi_threshold
 
-    if action == "report":
-        # dry run: measured, never folded — on EITHER side of the threshold
-        # (an append here would double-store the increment when the real
-        # rebuild/append call follows)
-        action_taken = "reported"
-    elif drifted:
-        k = n_centroids if n_centroids is not None else int(cents.shape[0])
-        # eager snapshot BEFORE the overwrite (the compact() rule): the
-        # rebuild's union reads the very vectors files ivf_build_index
-        # replaces, and a lazy plan would scan a half-deleted directory
-        from data_quality_check_spark.operators.dedup import _release_local_checkpoint
-
-        corpus = (
-            io.read(f"{name}.vectors")
-            .select(F.col("id").alias(id_col), F.col("v").alias(vec_col))
-            .unionByName(new_df.select(F.col(id_col), F.col(vec_col)))
-            .localCheckpoint(eager=True)
-        )
-        try:
-            ivf_build_index(
-                io, corpus, name, n_centroids=k, sample_size=sample_size,
-                iters=iters, seed=seed, id_col=id_col, vec_col=vec_col,
+        if action == "report":
+            # dry run: measured, never folded — on EITHER side of the threshold
+            # (an append here would double-store the increment when the real
+            # rebuild/append call follows)
+            action_taken = "reported"
+        elif drifted:
+            k = n_centroids if n_centroids is not None else int(cents.shape[0])
+            # eager snapshot BEFORE the overwrite (the compact() rule): the
+            # rebuild's union reads the very vectors files ivf_build_index
+            # replaces, and a lazy plan would scan a half-deleted directory
+            corpus = (
+                io.read(f"{name}.vectors")
+                .select(F.col("id").alias(id_col), F.col("v").alias(vec_col))
+                .unionByName(new_df.select(F.col(id_col), F.col(vec_col)))
+                .localCheckpoint(eager=True)
             )
-        finally:
-            _release_local_checkpoint(corpus)
-        action_taken = "rebuilt"
-    else:
-        # in-distribution: the plain O(increment) append path. The pinned
-        # `assigned` frame is exactly `_ivf_assigned(new_df, cents)`, so
-        # appending it directly keeps this bit-identical to ivf_append_index.
-        io.append(assigned, f"{name}.vectors", partition_by=["cell"])
-        action_taken = "appended"
+            try:
+                ivf_build_index(
+                    io, corpus, name, n_centroids=k, sample_size=sample_size,
+                    iters=iters, seed=seed, id_col=id_col, vec_col=vec_col,
+                )
+            finally:
+                _release_local_checkpoint(corpus)
+            action_taken = "rebuilt"
+        else:
+            # in-distribution: the plain O(increment) append path. The pinned
+            # `assigned` frame is exactly `_ivf_assigned(new_df, cents)`, so
+            # appending it directly keeps this bit-identical to ivf_append_index.
+            io.append(assigned, f"{name}.vectors", partition_by=["cell"])
+            action_taken = "appended"
     return {
         "psi": psi,
         "threshold": psi_threshold,

@@ -32,8 +32,9 @@ def _g(image_id: str, salt: str = "") -> int:
 
 
 def _lang_for(image_id: str) -> str:
-    """Zipf-skewed language mix: ~70% of rows in one language (the skew the salted
-    perplexity shuffle exists for)."""
+    """Zipf-skewed language mix: ~70% of rows in one language, as in real
+    caption crawls. The fused model stage is map-side, so the skew costs no
+    shuffle."""
     r = _g(image_id, "lang") % 100
     if r < 70:
         return "en"

@@ -101,7 +101,7 @@ def compute_golden(
     bytes_implausible = (blen < 16) | (blen > raw + slack)
 
     # decode failure = undecodable bytes OR decoded dims ≠ metadata
-    # (mirrors functions/multimodal.with_decode_check)
+    # (mirrors functions/fused._decode_flags)
     decode_failed = np.zeros(n, dtype=bool)
     for i, (b, wi, hi) in enumerate(zip(pdf["bytes"], w, h)):
         arr = codecs.decode(b)

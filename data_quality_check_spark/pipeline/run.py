@@ -39,9 +39,9 @@ Scale design notes (SURVEY.md §3.4, §4.2):
     pruning when the input is bucket-partitioned). Output uses dynamic partition
     overwrite so re-processing a bucket after a crash is idempotent. Every
     pending bucket gets a manifest row (even empty ones), so resume converges.
-  * per-language skew: `perplexity_grouped` salts the Zipf-heavy language key
-    before its shuffle (ppl_mode="grouped"); the default fused mode needs no
-    shuffle at all.
+  * per-language skew: the model stage is one map-side Arrow UDF
+    (functions/fused.py), so there is no language-keyed shuffle and no skewed
+    key to salt; the Zipf-heavy language mix costs nothing extra.
 
 Run via spark-submit (the application file is this module; the package ships
 as the --py-files zip so executors can import it):
@@ -64,14 +64,7 @@ if __package__ in (None, ""):  # spark-submit runs this file as a plain script;
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from data_quality_check_spark.functions.langid import (
-    perplexity_grouped,
-    with_langid,
-    with_perplexity,
-)
 from data_quality_check_spark.functions.fused import with_model_scores_fused
-from data_quality_check_spark.functions.multimodal import with_decode_check
-from data_quality_check_spark.functions.scrub import scrub_col
 from data_quality_check_spark.pipeline.heuristics import (
     FLAG_COLS,
     heuristic_ok,
@@ -143,8 +136,6 @@ class FilterConfig:
     min_lang_conf: float = 0.15
     max_ppl: float = 30_000.0
     num_buckets: int = 64  # checkpoint/commit granularity; also the write-task fan-out
-    salt_buckets: int = 8
-    ppl_mode: str = "map"  # "map" (fused, no shuffle) | "modular" | "grouped" (salted)
     # dedup decisions above this row count stop broadcasting and spill to a
     # bucket-partitioned intermediate, processed in bucket groups whose pruned
     # slice fits the budget (decision rows are 3 narrow columns, ~50 B each;
@@ -417,9 +408,9 @@ def with_rid(df: DataFrame) -> DataFrame:
     _metadata.row_index)` — a pure function of WHERE the row sits in storage
     (Spark ≥3.5 hidden file-source metadata; Iceberg's `_file`/`_pos` play the
     same role). Every plan branch that re-scans the input (the narrow dedup
-    scan, the heavy scoring scan, the salted perplexity branch) therefore
-    assigns identical rids to identical rows by construction — independent of
-    split planning, AQE, partition count, or upstream layout changes, which a
+    scan, the heavy scoring scan) therefore assigns identical rids to
+    identical rows by construction — independent of split planning, AQE,
+    partition count, or upstream layout changes, which a
     `monotonically_increasing_id` rid silently depended on (VERDICT r1 watch
     item b). rid is only ever compared WITHIN one image_id (keep_rid
     selection), so a 64-bit collision matters only between two copies of the
@@ -440,31 +431,10 @@ def with_rid(df: DataFrame) -> DataFrame:
 
 
 def score_rows(df: DataFrame, cfg: FilterConfig) -> DataFrame:
-    """The heavy per-row stages: heuristic flags + the model UDFs. No shuffle,
-    no dup information — one map-side pass."""
-    if cfg.ppl_mode not in ("map", "grouped", "modular"):
-        # a typo ('Grouped', 'groupped') must not silently run the fused path:
-        # at scale that co-loads every per-language model in each python
-        # worker — the exact OOM the grouped mode exists to avoid
-        raise ValueError(
-            f"ppl_mode must be 'map', 'grouped', or 'modular', got {cfg.ppl_mode!r}"
-        )
-    df = with_flags(df)
-    if cfg.ppl_mode == "grouped":
-        # scale path for oversized per-language models: salted applyInPandas
-        # shuffle (language keys are Zipfian). langid runs inside the grouped
-        # branch over a narrow projection, so this wide side carries no
-        # language-model UDF lineage (ADVICE r1: the old with_langid-then-join
-        # shape executed the langid UDF once per join side).
-        df = with_decode_check(df)
-        df = perplexity_grouped(df, salt_buckets=cfg.salt_buckets)
-    elif cfg.ppl_mode == "modular":
-        df = with_decode_check(df)
-        df = with_langid(df)
-        df = with_perplexity(df)
-    else:  # "map" — fused: ONE python crossing for decode+langid+ppl
-        df = with_model_scores_fused(df)
-    return df
+    """The heavy per-row stages: heuristic flags + the fused model UDF (ONE
+    python crossing for decode+langid+ppl+scrub). No shuffle, no dup
+    information — one map-side pass."""
+    return with_model_scores_fused(with_flags(df))
 
 
 def decide(df: DataFrame, cfg: FilterConfig, dups: DataFrame | None = None) -> DataFrame:
@@ -605,15 +575,11 @@ def finalize(
         F.col("keep_rid").isNull() | (F.col("rid") == F.col("keep_rid"))
     )
     df = df.withColumn("row_selected", row_selected).drop("keep_rid")
-    # fused path pre-computed scrub inside the model UDF (one compiled-re pass
-    # on rows already in Python); modular/grouped paths scrub JVM-side
-    if "_scrubbed_all" in df.columns:
-        scrubbed = F.col("_scrubbed_all")
-    else:
-        scrubbed = scrub_col(trim_col(F.col("caption")))
-    return df.withColumn("scrubbed_caption", F.when(F.col("keep"), scrubbed)).drop(
-        "_scrubbed_all"
-    )
+    # the fused model UDF pre-computed scrub (one compiled-re pass on rows
+    # already in Python); only kept rows carry it
+    return df.withColumn(
+        "scrubbed_caption", F.when(F.col("keep"), F.col("_scrubbed_all"))
+    ).drop("_scrubbed_all")
 
 
 def contamination_decisions(
@@ -1133,13 +1099,13 @@ def main() -> None:  # pragma: no cover - CLI wrapper
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--master", default=None)
     p.add_argument("--max-buckets", type=int, default=None)
-    p.add_argument("--ppl-mode", choices=["map", "grouped"], default="map")
     args = p.parse_args()
 
     spark = get_spark(app_name="quality-filter", master=args.master)
     _ship_package(spark)
-    cfg = FilterConfig(ppl_mode=args.ppl_mode)
-    summary = run_filter(spark, args.input, args.output, args.checkpoint, cfg, args.max_buckets)
+    summary = run_filter(
+        spark, args.input, args.output, args.checkpoint, max_buckets=args.max_buckets
+    )
     print(summary)
     spark.stop()
 

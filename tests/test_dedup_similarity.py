@@ -1107,7 +1107,8 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
     """VERDICT r4 task 5: the PSI monitor on cell assignments gates the fold —
     an in-distribution increment appends under frozen centroids (O(increment));
     a shifted one triggers a retrain-rebuild; indexed answers stay correct
-    (== exhaustive-probe truth) through both transitions."""
+    (== exhaustive-probe truth) through both transitions. Every action
+    releases its pins: the session's persisted-RDD count is unchanged."""
     from data_quality_check_spark.sources.tables import TableIO
 
     rng = np.random.RandomState(5)
@@ -1116,6 +1117,13 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
     base = df.select("vec_id", "embedding")
     io = TableIO(spark, warehouse=str(tmp_path / "wh"))
     SIM.ivf_build_index(io, base, "ann", n_centroids=4)
+
+    def maintain(inc, **kw):
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()  # a snapshot: re-read after
+        rep = SIM.ivf_maintenance(io, inc, "ann", psi_threshold=0.2, **kw)
+        assert jsc.getPersistentRDDs().size() == before, rep["action_taken"]
+        return rep
 
     def check_index_answers(corpus_df):
         # nprobe == n_centroids probes every cell: the indexed answer must
@@ -1140,10 +1148,10 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
     in_df = spark.createDataFrame(in_rows, "vec_id long, embedding array<double>")
     # report mode folds NOTHING even below the threshold (a dry run that
     # appended would double-store the increment when the real call follows)
-    dry0 = SIM.ivf_maintenance(io, in_df, "ann", psi_threshold=0.2, action="report")
+    dry0 = maintain(in_df, action="report")
     assert not dry0["drifted"] and dry0["action_taken"] == "reported"
     assert io.read("ann.vectors").count() == 120
-    rep = SIM.ivf_maintenance(io, in_df, "ann", psi_threshold=0.2)
+    rep = maintain(in_df)
     assert not rep["drifted"] and rep["action_taken"] == "appended"
     assert rep["psi"] < 0.2 and rep["n_new"] == 60 and rep["n_index"] == 120
     assert io.read("ann.vectors").count() == 180
@@ -1158,11 +1166,11 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
     ]
     out_df = spark.createDataFrame(out_rows, "vec_id long, embedding array<double>")
     # report-only first: measured, nothing folded, nothing rewritten
-    dry = SIM.ivf_maintenance(io, out_df, "ann", psi_threshold=0.2, action="report")
+    dry = maintain(out_df, action="report")
     assert dry["drifted"] and dry["action_taken"] == "reported"
     assert io.read("ann.vectors").count() == 180
     old_cents = SIM.ivf_load_centroids(io, "ann")
-    rep2 = SIM.ivf_maintenance(io, out_df, "ann", psi_threshold=0.2)
+    rep2 = maintain(out_df)
     assert rep2["drifted"] and rep2["action_taken"] == "rebuilt"
     assert rep2["psi"] >= 0.2
     assert io.read("ann.vectors").count() == 240

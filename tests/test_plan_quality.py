@@ -161,31 +161,26 @@ def test_rid_is_storage_derived_and_split_invariant(spark, tmp_path):
     assert with_rid(mem).select("rid").distinct().count() == 10
 
 
-def test_grouped_ppl_runs_langid_once(spark, tmp_path):
-    """The salted-perplexity plan must evaluate the langid UDF on exactly ONE
-    join side (ADVICE r1: the old shape planned the whole langid lineage once
-    per side). Expected python nodes: decode-check (left), langid (right),
-    and the grouped perplexity itself — never a second langid."""
-    from data_quality_check_spark.functions.langid import perplexity_grouped
-    from data_quality_check_spark.functions.multimodal import with_decode_check
+def test_filter_pass_runs_fused_udf_once(spark, tmp_path):
+    """The filter pass evaluates the fused model UDF exactly ONCE. Without the
+    asNondeterministic fence (functions/fused.py) Catalyst pushes the
+    row_selected filter through the scoring projection and plans a second
+    ArrowEvalPython node: the whole decode+langid+ppl stage runs twice."""
     from data_quality_check_spark.pipeline.fixtures import write_images_parquet
-    from data_quality_check_spark.pipeline.run import with_rid
+    from data_quality_check_spark.pipeline.run import (
+        FilterConfig,
+        dup_decisions,
+        finalize,
+        score_rows,
+        with_rid,
+    )
 
     fix = str(tmp_path / "images")
     write_images_parquet(fix, n=120, num_files=2)
-    df = with_decode_check(with_rid(spark.read.parquet(fix)))
-    out = perplexity_grouped(df, salt_buckets=4)
-    plan = _plan(out)
-    assert plan.count("ArrowEvalPython") == 2  # decode-check + ONE langid
-    assert plan.count("FlatMapGroupsInPandas") == 1
-    # wide columns never enter the salted shuffle: no Exchange subtree reads bytes
-    import re
-
-    for chunk in plan.split("ReadSchema")[1:]:
-        if "caption" in chunk[:400] and "bytes" not in chunk[:400]:
-            break  # the narrow right-side scan exists
-    else:
-        raise AssertionError("expected a narrow (caption, no bytes) scan branch")
+    df = with_rid(spark.read.parquet(fix))
+    cfg = FilterConfig()
+    out = finalize(score_rows(df, cfg), cfg, dup_decisions(df)).filter(F.col("row_selected"))
+    assert _plan(out).count("ArrowEvalPython") == 1
 
 
 def test_embedding_lsh_band_join_is_narrow_and_pinned(spark, sf_dir):
