@@ -26,7 +26,7 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # the dir queries actually READ: main() swaps in the derived multi-file
-# fixture (cached_multifile_sf) unless SPARK_GRAFT_BENCH_RAW_LAYOUT is set
+# fixture (cached_multifile_sf)
 DATA_DIR = SF_DIR
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PIPELINE_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "20000"))
@@ -65,7 +65,6 @@ def build_spark(cpus: int):
             # file-packing knobs scale down with them — openCost == bin size
             # means each file fills its own partition, exactly the one-task-
             # per-row-group ratio a production table gets under the DEFAULTS.
-            # parallelize_scan is then a measured no-op (details file).
             "spark.sql.files.maxPartitionBytes": "4194304",
             "spark.sql.files.openCostInBytes": "4194304",
         },
@@ -99,16 +98,15 @@ def cached_image_fixture(n: int, num_files: int = 32) -> str:
 
 # ── multi-file bench fixtures (VERDICT r4 task 4) ──
 # The driver's sf0.1 tables are single-file/single-row-group — a layout no
-# production corpus has, which forced session.parallelize_scan to repartition
-# in front of every heavy pass (BENCH.md finding 1). The bench therefore
-# derives (once, cached) an N-file hash-bucketed copy of each sizable table —
-# the same physical clustering TableIO.write_bucketed's parquet fallback
-# produces, WITHOUT its `_bucket` partition column, because that extra column
-# would change the profiled schema (profile_scores_* score every column) and
-# so the queries' semantics. Tiny broadcast-side tables stay single-file.
+# production corpus has, and one that runs every scan as ONE task (BENCH.md
+# finding 1). The bench therefore derives (once, cached) an N-file
+# hash-bucketed copy of each sizable table — the same physical clustering
+# TableIO.write_bucketed's parquet fallback produces, WITHOUT its `_bucket`
+# partition column, because that extra column would change the profiled
+# schema (profile_scores_* score every column) and so the queries' semantics. Tiny broadcast-side tables stay single-file.
 SF_FIXTURE_VERSION = 1
-# one file per scan slot: with fewer files than cores the no-op goal is
-# unreachable by construction (a 64-cpu run needs 64 splits)
+# one file per scan slot: with fewer files than cores some cores sit idle
+# (a 64-cpu run needs 64 splits)
 SF_FIXTURE_FILES = max(32, CPUS)
 SF_FIXTURE_MIN_ROWS = 2000  # multi-file iff the table has at least this many
 _TABLE_ID = {
@@ -119,17 +117,29 @@ _TABLE_ID = {
 }
 
 
+def multifile_cache_path(sf_dir: str) -> str:
+    """Cache dir of `sf_dir`'s multi-file copy. The key carries every source
+    table's size and mtime, so a regenerated sf dir never reuses a stale copy."""
+    import hashlib
+
+    sig = hashlib.sha1()
+    for t in _TABLE_ID:
+        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+        sig.update(f"{t}:{st.st_size}:{st.st_mtime_ns};".encode())
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"dqcs_bench_sf_v{SF_FIXTURE_VERSION}_{os.path.basename(sf_dir.rstrip('/'))}"
+        f"_f{SF_FIXTURE_FILES}_{sig.hexdigest()[:12]}",
+    )
+
+
 def cached_multifile_sf(spark, sf_dir: str) -> str:
     """Derive (once) the multi-file bucketed copy of `sf_dir`; returns its
     path. Published by atomic rename, same discipline as the image fixture."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    cache = os.path.join(
-        tempfile.gettempdir(),
-        f"dqcs_bench_sf_v{SF_FIXTURE_VERSION}_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_f{SF_FIXTURE_FILES}",
-    )
+    cache = multifile_cache_path(sf_dir)
     if os.path.exists(cache):
         return cache
     log(f"[bench] deriving multi-file sf fixture -> {cache}")
@@ -151,27 +161,20 @@ def cached_multifile_sf(spark, sf_dir: str) -> str:
 
 
 def audit_fixture_layout(spark, data_dir: str) -> dict:
-    """layout_audit over each derived table + the parallelize_scan no-op
-    check — recorded into the details file as bench evidence."""
-    from data_quality_check_spark.session import parallelize_scan
+    """layout_audit over each derived table + its scan partition count —
+    recorded into the details file as bench evidence."""
     from data_quality_check_spark.sources.layout import layout_audit
 
     out: dict[str, dict] = {}
     for t in _TABLE_ID:
         path = os.path.join(data_dir, f"{t}.parquet")
         row = layout_audit(spark, path).collect()[0].asDict()
-        df = spark.read.parquet(path)
-        n_parts = df.rdd.getNumPartitions()
-        row["scan_partitions"] = n_parts
-        # the whole point: the scan is already parallel, so the guard no-ops
-        row["parallelize_scan_noop"] = parallelize_scan(df) is df
+        row["scan_partitions"] = spark.read.parquet(path).rdd.getNumPartitions()
         out[t] = row
         # surfaced, never fatal: a layout surprise must cost the evidence
         # flag, not the whole bench record (the driver parses only stdout's
         # last line — a crash here would lose the round's BENCH entry)
-        if row["n_files"] >= SF_FIXTURE_FILES and (
-            not row["parallelize_scan_noop"] or row["skew_x_mean"] >= 3.0
-        ):
+        if row["n_files"] >= SF_FIXTURE_FILES and row["skew_x_mean"] >= 3.0:
             log(f"[bench] WARNING: fixture layout degraded for {t}: {row}")
     return out
 
@@ -184,7 +187,8 @@ def bench_queries(spark) -> "tuple[dict[str, float], float, dict[str, dict], flo
     spark.read.parquet(os.path.join(DATA_DIR, "lineitem.parquet")).count()
     # ... and the python-worker fleet (interpreter fork + pandas/pyarrow import per
     # worker — a one-time ~20-30s storm at 32 cores that would otherwise be charged
-    # to whichever UDF query runs first; same amortization policy as bench_scaling)
+    # to whichever UDF query runs first; same amortization policy as the
+    # pipeline's discarded warmup rep)
     def _warm(it):
         # prime the per-worker package import + trigram model build as well —
         # on a long-lived cluster both happen once per executor, not per query
@@ -308,14 +312,45 @@ def candidate_fractions(spark, candidates: dict[str, dict[str, int]]) -> dict:
     return out
 
 
+def _busy_cores(interval: float = 2.0) -> float:
+    """Host-wide busy cores over `interval` (from /proc/stat). Sampled between
+    reps — when our own session is idle (<~0.3 cores of JVM background) — this
+    is effectively the EXTERNAL tenant's CPU, which comes and goes on a
+    minutes scale on a shared host."""
+    def snap():
+        with open("/proc/stat") as f:
+            vals = list(map(int, f.readline().split()[1:]))
+        return sum(vals), vals[3] + vals[4]  # total, idle+iowait
+    t1, i1 = snap()
+    time.sleep(interval)
+    t2, i2 = snap()
+    dt, di = t2 - t1, i2 - i1
+    ncpu = os.cpu_count() or 32
+    return round(ncpu * (1 - di / dt), 2) if dt else 0.0
+
+
+def _wait_for_quiet(threshold: float = 1.5, max_wait: float = 300.0) -> float:
+    """Hold the next rep until the external tenant is quiet (or the wait budget
+    runs out — then run anyway and let the recorded value speak). A dedicated
+    cluster node has no co-tenant; gating reps on a quiet host measures the
+    configuration a real cluster always provides, and every rep records the
+    external-core figure it actually ran against."""
+    waited = 0.0
+    busy = _busy_cores()
+    while busy > threshold and waited < max_wait:
+        time.sleep(20)
+        waited += 22.0
+        busy = _busy_cores()
+    return busy
+
+
 def bench_pipeline(spark, fixture: str, reps: int = 5) -> dict:
-    """Pipeline headline with the scaling bench's measurement discipline
-    (VERDICT r2 item 3): one discarded warmup, then `reps` measured reps, each
-    GATED on the external co-tenant being quiet (<1.5 busy cores, up to 5 min
-    wait — a dedicated cluster node has no co-tenant), reporting the MEDIAN
-    with all rep times + the external-core figure each rep actually ran
-    against, plus the median rep's per-stage breakdown (run.STEP_TIMINGS)."""
-    from bench_scaling import _wait_for_quiet
+    """Pipeline headline (VERDICT r2 item 3): one discarded warmup, then
+    `reps` measured reps, each GATED on the external co-tenant being quiet
+    (<1.5 busy cores, up to 5 min wait — a dedicated cluster node has no
+    co-tenant), reporting the MEDIAN with all rep times + the external-core
+    figure each rep actually ran against, plus the median rep's per-stage
+    breakdown (run.STEP_TIMINGS)."""
     from data_quality_check_spark.pipeline import run as RUN
     from data_quality_check_spark.pipeline.run import FilterConfig, run_filter
 
@@ -398,17 +433,15 @@ def main() -> None:
     fixture = cached_image_fixture(PIPELINE_ROWS)
     spark = build_spark(CPUS)
     try:
-        layout = None
-        if not os.environ.get("SPARK_GRAFT_BENCH_RAW_LAYOUT"):
-            DATA_DIR = cached_multifile_sf(spark, SF_DIR)
-            layout = audit_fixture_layout(spark, DATA_DIR)
-            log(
-                "[bench] multi-file fixture layout: "
-                + ", ".join(
-                    f"{t}:{r['n_files']}f/{r['scan_partitions']}p"
-                    for t, r in layout.items()
-                )
+        DATA_DIR = cached_multifile_sf(spark, SF_DIR)
+        layout = audit_fixture_layout(spark, DATA_DIR)
+        log(
+            "[bench] multi-file fixture layout: "
+            + ", ".join(
+                f"{t}:{r['n_files']}f/{r['scan_partitions']}p"
+                for t, r in layout.items()
             )
+        )
         times, total, cand_fracs, bootstrap_sec = bench_queries(spark)
         pipe = bench_pipeline(spark, fixture)
     finally:
@@ -427,8 +460,7 @@ def main() -> None:
         # bootstrap (see the [bench] log line); a number = a real init pass
         "seen_corpus_bootstrap_sec": bootstrap_sec,
         # multi-file fixture evidence (VERDICT r4 task 4): per-table
-        # layout_audit + scan partitions + the parallelize_scan no-op flag;
-        # null = SPARK_GRAFT_BENCH_RAW_LAYOUT forced the raw single-file dir
+        # layout_audit + scan partitions
         "fixture_layout": layout,
         "data_dir": DATA_DIR,
         "pipeline": pipe,

@@ -26,7 +26,6 @@ from data_quality_check_spark.plans.quality_scores import (
     scores_df,
     scores_duck_sql,
 )
-from data_quality_check_spark.session import parallelize_scan
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 AS_OF = "2026-01-01 00:00:00"
@@ -47,16 +46,8 @@ def register(name: str, sql: OracleSpec):
     return deco
 
 
-# Broadcast-side dims: a repartition would only add a stage in front of the
-# broadcast exchange.
-_SMALL_DIMS = {"region", "nation", "supplier"}
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # The sandbox fixtures are single-row-group files — one task per scan no
-    # matter the split config. No-op on well-laid-out (production) inputs.
-    return df if name in _SMALL_DIMS else parallelize_scan(df)
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def queries() -> dict[str, QueryFn]:

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from data_quality_check_spark.functions.text import fingerprint_col
-from data_quality_check_spark.session import parallelize_scan
 
 
 _PINNED: list = []  # frames pinned by _pin/localCheckpoint awaiting release
@@ -245,20 +244,9 @@ def shingles_sql(text_col: str, ngram: int = 1) -> str:
     )
 
 
-def _spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Repartition narrow inputs so heavy per-row map work (tokenize / hash /
-    explode) parallelizes even when the source is one small file. No-op when the
-    scan already has ≥ the session's default parallelism (the 100 TB case, where
-    the Parquet scan yields thousands of splits)."""
-    return parallelize_scan(df, min_parts)
-
-
 def _narrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, _txt) projection, repartitioned BEFORE any tokenize work so the
-    shuffle moves raw strings and the expensive shingling runs on all cores."""
-    return _spread(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
-    )
+    """(id, _txt) projection of the text columns every tokenizer reads."""
+    return df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
 
 
 def _tokens(df: DataFrame, id_col: str, text_col: str, ngram: int = 1) -> DataFrame:
@@ -803,7 +791,9 @@ def duplicate_span_stats(
     finding 4), recomputing the regexp+md5 map stage is cheaper than caching
     a row-per-span table — and at corpus scale it wouldn't fit anyway.
     """
-    spans = _spread(df.select(F.col(id_col).alias("id"), _span_norm(F.col(text_col)).alias("_t"))).select(
+    spans = df.select(
+        F.col(id_col).alias("id"), _span_norm(F.col(text_col)).alias("_t")
+    ).select(
         "id",
         F.explode(
             F.regexp_extract_all("_t", F.lit(_span_pattern(span_words)), 0)
@@ -913,9 +903,7 @@ def duplicate_span_rewrite(
     corpus snapshot instead.
     """
     spans = (
-        _spread(
-            df.select(F.col(id_col).alias("id"), _span_norm(F.col(text_col)).alias("_t"))
-        )
+        df.select(F.col(id_col).alias("id"), _span_norm(F.col(text_col)).alias("_t"))
         .select(
             "id",
             F.posexplode(

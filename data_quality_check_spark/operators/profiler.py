@@ -35,7 +35,6 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from data_quality_check_spark.operators import scoring
-from data_quality_check_spark.session import parallelize_scan
 from data_quality_check_spark.operators.scoring import (
     ColumnScore,
     TableScore,
@@ -281,9 +280,6 @@ def profile(df: DataFrame, cfg: ProfileConfig | None = None, now: datetime | Non
     """Profile a table in ≤3 Spark jobs; returns TableScore + the raw metric row."""
     cfg = cfg or ProfileConfig()
     now = now or datetime.now(timezone.utc).replace(tzinfo=None)
-
-    # A single-row-group input would serialize the whole fused pass onto one core.
-    df = parallelize_scan(df)
 
     # Degrade-don't-fail for rules that ANALYZE but fail at RUNTIME (common
     # under Spark 4 ANSI: e.g. `cast(code as int) < 500` over one non-numeric
@@ -566,7 +562,7 @@ def profile_grouped(
     """
     cfg = cfg or ProfileConfig()
     data_cols = [c for c in df.columns if c not in group_cols]
-    sub = parallelize_scan(df.select(*group_cols, *data_cols))
+    sub = df.select(*group_cols, *data_cols)
     # Re-run agg builders against the projected frame so group keys are excluded.
     proj = sub.drop(*group_cols)
     aggs = pass1_aggs(proj, cfg)

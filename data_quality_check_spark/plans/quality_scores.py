@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from data_quality_check_spark.operators import profiler as P
 from data_quality_check_spark.operators.scoring import WEIGHTS
-from data_quality_check_spark.session import parallelize_scan
 
 
 @dataclass
@@ -315,9 +314,6 @@ def _score_exprs(spec: ScoreSpec) -> list[Column]:
 def scores_df(df: DataFrame, spec: ScoreSpec | None = None) -> DataFrame:
     """One-row DataFrame with the 9 dimension scores + global_score, all Spark-side."""
     spec = spec or ScoreSpec.from_df(df)
-    # This plan scans `df` up to 3x inside one action; an under-split input
-    # (single parquet row group) would run every scan on one core.
-    df = parallelize_scan(df)
     p1 = df.agg(*_metric_aggs(spec))
     if spec.numeric_cols:
         q = _unpack_quantiles(df.agg(*_quantile_aggs(spec)), spec)
@@ -346,7 +342,6 @@ def grouped_scores_df(
     engines, when numeric columns are present."""
     gcols = list(group_cols)
     spec = spec or ScoreSpec.from_df(df.drop(*gcols))
-    df = parallelize_scan(df)
     p1 = df.groupBy(*gcols).agg(*_metric_aggs(spec))
     if spec.numeric_cols:
         q = df.groupBy(*gcols).agg(*_quantile_aggs(spec)).select(

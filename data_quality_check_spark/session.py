@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 # Catalyst/AQE settings we always want, cluster or local.
 _BASE_CONF: dict[str, str] = {
@@ -38,27 +38,6 @@ _BASE_CONF: dict[str, str] = {
     "spark.driver.extraJavaOptions": "-XX:UseAVX=2 -XX:+UseParallelGC",
     "spark.executor.extraJavaOptions": "-XX:UseAVX=2 -XX:+UseParallelGC",
 }
-
-
-def parallelize_scan(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition an under-split scan before a heavy fused pass.
-
-    Parquet row groups are the atomic unit of a vectorized read: a table written
-    as one file with one row group yields ONE task no matter how
-    `spark.sql.files.maxPartitionBytes` is set, so a 30-aggregate fused pass runs
-    on a single core. At production scale (100 TB = tens of thousands of row
-    groups) the scan already has >> defaultParallelism splits and this returns
-    `df` unchanged — the repartition only fires on small/badly-laid-out inputs,
-    where the shuffle it adds moves a few MB (column pruning pushes the
-    downstream projection below the exchange).
-    """
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    return df.repartition(target) if n < target else df
 
 
 def iceberg_available() -> bool:

@@ -4,8 +4,8 @@ The 100 TB failure mode this catches is operational, not semantic: a corpus
 written by too many tasks (or appended in tiny increments) becomes millions
 of small files — every downstream scan pays open/footer costs per file, task
 scheduling dominates, and object-store listing throttles. The inverse — a few
-giant single-row-group files — serializes vectorized reads (the sandbox
-fixture problem session.parallelize_scan works around, BENCH.md finding 1).
+giant single-row-group files — serializes vectorized reads, because a row
+group is the smallest unit a scan can split (BENCH.md finding 1).
 Both show up in the rows-per-file distribution long before they show up in a
 query profile.
 

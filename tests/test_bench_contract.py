@@ -4,6 +4,7 @@ outgrew the window — VERDICT r3 task 2). Pin the invariant: for any realistic
 registry size the final line parses AND fits the window with margin."""
 
 import json
+import os
 
 import bench
 
@@ -32,3 +33,20 @@ def test_compact_line_fits_window_and_parses():
 def test_compact_line_single_line():
     line = bench.compact_line(_fake_times(65), 99.9, _fake_pipe())
     assert "\n" not in line
+
+
+def test_multifile_cache_key_tracks_source_tables(tmp_path):
+    """A regenerated sf dir (same name, same file count) must not reuse the
+    multi-file copy derived from the old tables."""
+    sf = tmp_path / "sf0.1"
+    sf.mkdir()
+    for t in bench._TABLE_ID:
+        (sf / f"{t}.parquet").write_bytes(b"x")
+    before = bench.multifile_cache_path(str(sf))
+    assert bench.multifile_cache_path(str(sf)) == before
+    st = os.stat(sf / "lineitem.parquet")
+    os.utime(sf / "lineitem.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    touched = bench.multifile_cache_path(str(sf))
+    assert touched != before
+    (sf / "orders.parquet").write_bytes(b"xy")
+    assert bench.multifile_cache_path(str(sf)) not in (before, touched)

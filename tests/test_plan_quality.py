@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -99,11 +100,35 @@ def test_quality_flags_is_one_codegen_projection(spark):
 
     plan = _plan(EQ.queries()["quality_flags_documents"](spark, SF_DIR))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the only allowed exchange is parallelize_scan's round-robin split of the
-    # single-row-group sandbox file — no key shuffle (hash/range) anywhere
+    assert "RoundRobinPartitioning" not in plan
     assert "hashpartitioning" not in plan and "rangepartitioning" not in plan
     read = plan.split("ReadSchema")[1][:300]
     assert "lang" not in read and "n_chars" not in read  # scan pruned to doc_id,text
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        # the five queries of perfbench's query_mix
+        "rule_violations_lineitem",
+        "model_scores_documents",
+        "neardup_clusters_minhash_documents",
+        "ann_ivf_topk_embeddings",
+        "quality_threshold_sweep_by_lang",
+        "profile_scores_lineitem",
+        "simhash_near_pairs_documents",
+    ],
+)
+def test_queries_read_with_layout_splits(spark, name):
+    """A query scans its input with the splits the table's layout gives it:
+    no round-robin repartition is planned in front of the work."""
+    from data_quality_check_spark import entry_queries as EQ
+    from data_quality_check_spark.operators.dedup import release_pins
+
+    df = EQ.queries()[name](spark, SF_DIR)
+    df.collect()
+    release_pins()
+    assert "RoundRobinPartitioning" not in _plan(df)
 
 
 def test_image_flags_is_one_codegen_projection(spark):
