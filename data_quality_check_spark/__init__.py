@@ -15,11 +15,7 @@ Design principles (SURVEY.md §4.2):
 """
 
 from data_quality_check_spark.session import get_spark
-from data_quality_check_spark.operators.profiler import (
-    ProfileConfig,
-    profile,
-    profile_grouped,
-)
+from data_quality_check_spark.operators.profiler import ProfileConfig, profile
 from data_quality_check_spark.operators.detector import detect_config
 from data_quality_check_spark.operators.report import write_report
 from data_quality_check_spark.operators.scoring import TableScore, ColumnScore, run_scoring
@@ -30,7 +26,6 @@ __all__ = [
     "get_spark",
     "ProfileConfig",
     "profile",
-    "profile_grouped",
     "detect_config",
     "TableScore",
     "ColumnScore",

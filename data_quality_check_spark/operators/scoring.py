@@ -1,11 +1,13 @@
-"""Score algebra + result records for the 9 quality dimensions.
+"""Result records, dimension weights and the `run_scoring` facade.
 
 Formula parity with the reference (semantics only, re-derived — see SURVEY.md §2.4
 A18/A19; reference: engine.py:353-357 weights, engine.py:387-389 global score,
 engine.py:405/415/426-431/452/473/499/518/543 per-dimension formulas,
-engine.py:555 per-column combiner). All score math here is plain float algebra over
-already-aggregated metrics; the heavy lifting happens in `operators.profiler` as a
-fused Spark plan.
+engine.py:555 per-column combiner). The 9 dimension scores and the global score
+are computed Spark-side, as Column expressions in `plans.quality_scores`; what
+stays here is the `WEIGHTS` table that plan reads, the per-column combiner
+`profile()` applies to the metric row, and plain-float twins of the global and
+freshness formulas that the tests check the plan against.
 """
 
 from __future__ import annotations
@@ -27,12 +29,6 @@ WEIGHTS: dict[str, float] = {
 }
 
 DIMENSIONS = tuple(WEIGHTS)
-
-# Neutral defaults when a dimension has nothing to measure.
-DEFAULT_RATIO_SCORE = 90.0  # consistency/validity/correlation/standardization/distribution
-DEFAULT_FRESHNESS = 75.0
-VOLUMETRY_CONSTANT = 80.0  # reference treats volumetry as a one-shot neutral constant
-
 
 @dataclass
 class ColumnScore:
@@ -65,26 +61,6 @@ class TableScore:
     custom_rules: list = field(default_factory=list)
 
 
-def ratio_score(violations: float, checked: float) -> float:
-    """(1 - v/c)*100 clamped to [0, 100]; neutral default when nothing checked."""
-    if checked == 0:
-        return DEFAULT_RATIO_SCORE
-    return round(max(0.0, min(100.0, (1.0 - violations / checked) * 100.0)), 1)
-
-
-def completeness_score(total_nulls: int, row_count: int, col_count: int) -> float:
-    if row_count == 0 or col_count == 0:
-        return 0.0
-    return round((1.0 - total_nulls / (row_count * col_count)) * 100.0, 1)
-
-
-def uniqueness_score(duplicate_rows: int, row_count: int) -> float:
-    if row_count < 2:
-        return 100.0
-    pct = duplicate_rows / row_count * 100.0
-    return round(max(0.0, 100.0 - pct * 2.0), 1)
-
-
 def freshness_score(lag_hours: list[float], threshold_hours: float) -> float:
     """Mean over date columns of max(0, 100 - lag/threshold*100), capped at 100.
 
@@ -97,16 +73,8 @@ def freshness_score(lag_hours: list[float], threshold_hours: float) -> float:
         for lag in lag_hours
     ]
     if not scores:
-        return DEFAULT_FRESHNESS
+        return 75.0  # neutral default: no date column to measure
     return round(sum(scores) / len(scores), 1)
-
-
-def distribution_score(outlier_ratios: list[float]) -> float:
-    """max(0, 100 - mean(outlier_ratio)*500); neutral 90 when no measurable column."""
-    if not outlier_ratios:
-        return DEFAULT_RATIO_SCORE
-    mean_ratio = sum(outlier_ratios) / len(outlier_ratios)
-    return round(max(0.0, 100.0 - mean_ratio * 500.0), 1)
 
 
 def global_score(dims: dict[str, float]) -> float:
@@ -121,10 +89,11 @@ def column_overall(completeness: float, uniqueness: float) -> float:
 def run_scoring(df, table_name="dataset", custom_rules=None,
                 freshness_threshold_hours=24, spark=None, now=None):
     """Facade with the reference `run_scoring` signature (engine.py:564-612):
-    auto-detect column roles from a bounded sample, then run the fused profiler.
+    auto-detect column roles from a bounded sample, then run `profile()`.
 
     Unlike the reference there is no pandas engine and no driver-side fallback —
-    everything is one Spark plan. `now` pins the freshness clock for determinism.
+    the metrics and the scores are one Spark plan. `now` pins the freshness
+    clock for determinism.
     """
     from data_quality_check_spark.operators.detector import detect_config
     from data_quality_check_spark.operators.profiler import ProfileConfig, profile

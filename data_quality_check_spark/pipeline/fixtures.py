@@ -273,17 +273,3 @@ def write_images_parquet_spark(
     writer.parquet(path)
     return path
 
-
-def repack_images_parquet(src_file: str, dest_dir: str, num_files: int) -> str:
-    """Split an existing single-file fixture into a multi-file directory."""
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(src_file)
-    os.makedirs(dest_dir, exist_ok=True)
-    chunk = (table.num_rows + num_files - 1) // num_files
-    for i in range(num_files):
-        part = table.slice(i * chunk, chunk)
-        if part.num_rows == 0:
-            break
-        pq.write_table(part, os.path.join(dest_dir, f"part-{i:05d}.parquet"))
-    return dest_dir

@@ -1,28 +1,65 @@
-"""All-Spark quality-score plans + DuckDB oracle SQL twins.
+"""The quality-score engine: one lazy Spark plan + its DuckDB oracle SQL twin.
 
-`profile()` (operators/profiler.py) collects fused metric rows and finishes the score
-algebra on the driver. This module instead expresses the *entire* computation —
-metrics **and** score algebra — as one lazy Spark plan returning a one-row (or
-one-row-per-group) DataFrame. That makes the scores:
+The paper's profiling scores — every metric **and** the score algebra — are one
+lazy Spark plan. `metrics_df` fuses the metrics into at most 3 scans of the input:
 
-  * checkable by the driver's DuckDB oracle (`scores_duck_sql` emits ANSI SQL with
-    identical semantics, generated from the same metric spec so names/semantics
-    can't drift), and
-  * usable as per-partition metric *tables* at scale (grouped variant) with zero
-    driver-side math — the north_rule's per-partition keep/drop/scrub metrics.
+  scan 1  one `df.agg(...)` with every conditional/distinct aggregate fused
+  scan 2  one array-percentile aggregate (p25, p75) over all numeric columns
+  scan 3  IQR-fence outlier counts against the broadcast scan-2 fences
+          (skipped when there are no numeric columns)
+
+`_score_exprs` turns that one metric row into the 9 dimension scores and
+`global_score`; `scores_df` chains the two. Every consumer runs this plan:
+
+  * `profile()` / `run_scoring` (operators/profiler.py) collect the metric row
+    and the scores together, and derive only the issues list and the
+    per-column scores on the driver;
+  * the driver's DuckDB oracle checks it through `scores_duck_sql`, which emits
+    ANSI SQL with identical semantics, generated from the same `ScoreSpec` so
+    names/semantics can't drift;
+  * `grouped_scores_df` runs it per group key — the north rule's per-partition
+    metric tables, with zero driver-side math.
 
 Score formula semantics follow the reference (see operators/scoring.py citations).
-Max 3 scans of the input, same as `profile()`.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from data_quality_check_spark.operators import profiler as P
 from data_quality_check_spark.operators.scoring import WEIGHTS
+
+# Canonical validation regexes (engine.py:477-478; the Spark engine's phone pattern
+# is taken as canonical over the pandas variant — SURVEY.md §1.2).
+EMAIL_RE = r"^[a-zA-Z0-9._%+\-]+@[a-zA-Z0-9.\-]+\.[a-zA-Z]{2,}$"
+# whitespace spelled as an explicit class, not \s: Java's \s includes \x0B
+# while RE2's (the DuckDB twin) does not — the same Java∩RE2 rule
+# pipeline/heuristics.py applies to caption whitespace
+PHONE_RE = r"^\+?[\d][\d \t\n\r\f\-\.\(\)]{6,20}$"
+
+# Values treated as "fake nulls" after lower(trim(...)) (engine.py:521).
+FAKE_NULLS = ["n/a", "na", "null", "none", "-", "--", "unknown", "inconnu", "?", "nan", "nd"]
+
+# Column-name keywords that mark a numeric column as must-be-non-negative
+# (engine.py:438).
+NEGATIVE_KEYWORDS = ["price", "prix", "amount", "montant", "age", "qty", "quantity", "stock"]
+
+_NUMERIC_TYPES = (T.DoubleType, T.FloatType, T.IntegerType, T.LongType)
+
+# Case-variance penalty applies when 2 <= distinct <= 50 (engine.py:539).
+CASE_VARIANT_MIN, CASE_VARIANT_MAX = 2, 50
+
+IQR_FENCE_K = 3.0  # fences at Q1 - 3·IQR / Q3 + 3·IQR (engine.py:466)
+
+
+def numeric_columns(df: DataFrame) -> list[str]:
+    return [f.name for f in df.schema.fields if isinstance(f.dataType, _NUMERIC_TYPES)]
+
+
+def string_columns(df: DataFrame) -> list[str]:
+    return [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
 
 
 @dataclass
@@ -40,6 +77,22 @@ class ScoreSpec:
     as_of: str = "2026-01-01 00:00:00"  # pinned clock for freshness (determinism)
     freshness_threshold_hours: float = 24.0
     neg_check_cols: list[str] = field(default_factory=list)
+    # exact distinct count `nd__{c}` per listed column: the per-column
+    # uniqueness of non-string columns (string columns reuse `nu__`). No score
+    # reads it, so `from_df`/`from_parquet` leave it empty.
+    distinct_cols: list[str] = field(default_factory=list)
+
+    @classmethod
+    def _from_schema(
+        cls, columns: list[str], numeric: list[str], strings: list[str], overrides: dict
+    ) -> "ScoreSpec":
+        spec = cls(columns=columns, numeric_cols=numeric, string_cols=strings)
+        spec.neg_check_cols = [
+            c for c in numeric if any(k in c.lower() for k in NEGATIVE_KEYWORDS)
+        ]
+        for k, v in overrides.items():
+            setattr(spec, k, v)
+        return spec
 
     @classmethod
     def from_parquet(cls, path: str, **overrides) -> "ScoreSpec":
@@ -65,34 +118,18 @@ class ScoreSpec:
         numeric, strings = [], []
         for f in schema:
             # restricted to >=32-bit so this constructor classifies EXACTLY
-            # like from_df/profiler._NUMERIC_TYPES (Int/Long/Float/Double) —
-            # an int16 column marked numeric here but skipped by the Spark
-            # plan would give the generated oracle extra metrics to disagree on
+            # like from_df/_NUMERIC_TYPES (Int/Long/Float/Double) — an int16
+            # column marked numeric here but skipped by the Spark plan would
+            # give the generated oracle extra metrics to disagree on
             if (pat.is_integer(f.type) or pat.is_floating(f.type)) and f.type.bit_width >= 32:
                 numeric.append(f.name)
             elif pat.is_string(f.type) or pat.is_large_string(f.type):
                 strings.append(f.name)
-        spec = cls(columns=list(schema.names), numeric_cols=numeric, string_cols=strings)
-        spec.neg_check_cols = [
-            c for c in numeric if any(k in c.lower() for k in P.NEGATIVE_KEYWORDS)
-        ]
-        for k, v in overrides.items():
-            setattr(spec, k, v)
-        return spec
+        return cls._from_schema(list(schema.names), numeric, strings, overrides)
 
     @classmethod
     def from_df(cls, df: DataFrame, **overrides) -> "ScoreSpec":
-        spec = cls(
-            columns=list(df.columns),
-            numeric_cols=P.numeric_columns(df),
-            string_cols=P.string_columns(df),
-        )
-        spec.neg_check_cols = [
-            c for c in spec.numeric_cols if any(k in c.lower() for k in P.NEGATIVE_KEYWORDS)
-        ]
-        for k, v in overrides.items():
-            setattr(spec, k, v)
-        return spec
+        return cls._from_schema(list(df.columns), numeric_columns(df), string_columns(df), overrides)
 
 
 # ─────────────────────────── Spark side ───────────────────────────
@@ -117,22 +154,29 @@ def _metric_aggs(spec: ScoreSpec) -> list[Column]:
     for c in spec.email_cols:
         col = F.col(c).cast("string")
         a.append(F.count(col).alias(f"emailc__{c}"))
-        a.append(F.count_if(col.isNotNull() & ~col.rlike(P.EMAIL_RE)).alias(f"emailv__{c}"))
+        a.append(F.count_if(col.isNotNull() & ~col.rlike(EMAIL_RE)).alias(f"emailv__{c}"))
     for c in spec.phone_cols:
         col = F.col(c).cast("string")
         a.append(F.count(col).alias(f"phonec__{c}"))
-        a.append(F.count_if(col.isNotNull() & ~col.rlike(P.PHONE_RE)).alias(f"phonev__{c}"))
+        a.append(F.count_if(col.isNotNull() & ~col.rlike(PHONE_RE)).alias(f"phonev__{c}"))
     for c in spec.string_cols:
         col, folded = F.col(c), F.lower(F.trim(F.col(c)))
         a.append(F.count(col).alias(f"strc__{c}"))
         a.append(F.count_if(col.isNotNull() & (col != F.trim(col))).alias(f"ws__{c}"))
-        a.append(F.count_if(folded.isin(P.FAKE_NULLS)).alias(f"fn__{c}"))
+        a.append(F.count_if(folded.isin(FAKE_NULLS)).alias(f"fn__{c}"))
         a.append(F.count_distinct(col).alias(f"nu__{c}"))
         a.append(F.count_distinct(folded).alias(f"nl__{c}"))
     for c in spec.date_cols:
         # try_to_timestamp: ANSI-safe null-on-malformed (the DuckDB twin already
-        # uses try_cast); the score expr consumes it JVM-side, no collect() tz risk
-        a.append(F.max(F.try_to_timestamp(F.col(c))).alias(f"maxd__{c}"))
+        # uses try_cast). Emitted as epoch MICROSECONDS (a long), because
+        # collect() renders a TimestampType through the driver OS time zone
+        # (datetime.fromtimestamp); epoch math is time-zone-free AFTER the
+        # parse. The parse itself reads wall-clock strings in
+        # spark.sql.session.timeZone, as `as_of` is read — session.get_spark
+        # pins UTC, and `profile()`'s `now` is naive UTC.
+        a.append(F.unix_micros(F.max(F.try_to_timestamp(F.col(c)))).alias(f"maxd__{c}"))
+    for c in spec.distinct_cols:
+        a.append(F.count_distinct(F.col(c)).alias(f"nd__{c}"))
     return a
 
 
@@ -145,8 +189,9 @@ def _quantile_aggs(spec: ScoreSpec) -> list[Column]:
     ]
 
 
-def _unpack_quantiles(qdf: DataFrame, spec: ScoreSpec) -> DataFrame:
+def _unpack_quantiles(qdf: DataFrame, spec: ScoreSpec, *keys: str) -> DataFrame:
     return qdf.select(
+        *keys,
         *[F.col(f"q__{c}")[0].alias(f"q1__{c}") for c in spec.numeric_cols],
         *[F.col(f"q__{c}")[1].alias(f"q3__{c}") for c in spec.numeric_cols],
     )
@@ -160,7 +205,7 @@ def _outlier_aggs_from_fences(spec: ScoreSpec) -> list[Column]:
         iqr = q3 - q1
         a.append(
             F.count_if(
-                (F.col(c) < q1 - P.IQR_FENCE_K * iqr) | (F.col(c) > q3 + P.IQR_FENCE_K * iqr)
+                (F.col(c) < q1 - IQR_FENCE_K * iqr) | (F.col(c) > q3 + IQR_FENCE_K * iqr)
             ).alias(f"out__{c}")
         )
     return a
@@ -192,9 +237,7 @@ def _score_exprs(spec: ScoreSpec) -> list[Column]:
         as_of = F.unix_micros(F.to_timestamp(F.lit(spec.as_of)))
         per_col = []
         for c in spec.date_cols:
-            lag_h = (as_of - F.unix_micros(F.col(f"maxd__{c}").cast("timestamp"))).cast(
-                "double"
-            ) / 3.6e9
+            lag_h = (as_of - F.col(f"maxd__{c}")).cast("double") / 3.6e9
             per_col.append(
                 F.when(
                     F.col(f"maxd__{c}").isNotNull(),
@@ -284,7 +327,7 @@ def _score_exprs(spec: ScoreSpec) -> list[Column]:
         for c in spec.string_cols:
             nu, nl = F.col(f"nu__{c}"), F.col(f"nl__{c}")
             penalty = F.when(
-                (nu >= P.CASE_VARIANT_MIN) & (nu <= P.CASE_VARIANT_MAX) & (nl < nu),
+                (nu >= CASE_VARIANT_MIN) & (nu <= CASE_VARIANT_MAX) & (nl < nu),
                 (nu - nl) * 10,
             ).otherwise(0)
             sv = sv + F.col(f"ws__{c}") + F.col(f"fn__{c}") + penalty
@@ -311,28 +354,31 @@ def _score_exprs(spec: ScoreSpec) -> list[Column]:
     return out
 
 
+def metrics_df(df: DataFrame, spec: ScoreSpec) -> DataFrame:
+    """One-row DataFrame of every raw metric the spec names (≤3 scans): the
+    scan-1 aggregates, plus `q1__`/`q3__`/`out__` per numeric column."""
+    p1 = df.agg(*_metric_aggs(spec))
+    if not spec.numeric_cols:
+        return p1
+    q = _unpack_quantiles(df.agg(*_quantile_aggs(spec)), spec)
+    o = df.crossJoin(F.broadcast(q)).agg(
+        *_outlier_aggs_from_fences(spec),
+        *[F.first(f"q1__{c}").alias(f"q1__{c}") for c in spec.numeric_cols],
+        *[F.first(f"q3__{c}").alias(f"q3__{c}") for c in spec.numeric_cols],
+    )
+    return p1.crossJoin(F.broadcast(o))
+
+
 def scores_df(df: DataFrame, spec: ScoreSpec | None = None) -> DataFrame:
     """One-row DataFrame with the 9 dimension scores + global_score, all Spark-side."""
     spec = spec or ScoreSpec.from_df(df)
-    p1 = df.agg(*_metric_aggs(spec))
-    if spec.numeric_cols:
-        q = _unpack_quantiles(df.agg(*_quantile_aggs(spec)), spec)
-        o = df.crossJoin(F.broadcast(q)).agg(
-            *_outlier_aggs_from_fences(spec),
-            *[F.first(f"q1__{c}").alias(f"q1__{c}") for c in spec.numeric_cols],
-            *[F.first(f"q3__{c}").alias(f"q3__{c}") for c in spec.numeric_cols],
-        )
-        joined = p1.crossJoin(F.broadcast(o))
-    else:
-        joined = p1
-    return joined.select(*_score_exprs(spec))
+    return metrics_df(df, spec).select(*_score_exprs(spec))
 
 
 def grouped_scores_df(
     df: DataFrame, group_cols: list[str], spec: ScoreSpec | None = None
 ) -> DataFrame:
-    """Per-group 9-dimension score table: one row per group key — the full
-    (quantile-inclusive) variant of `profiler.profile_grouped`, and the shape
+    """Per-group 9-dimension score table: one row per group key — the shape
     the north rule's per-partition metric tables take.
 
     Same ≤3-scan structure as `scores_df`, each pass a `groupBy(group_cols)`:
@@ -344,11 +390,7 @@ def grouped_scores_df(
     spec = spec or ScoreSpec.from_df(df.drop(*gcols))
     p1 = df.groupBy(*gcols).agg(*_metric_aggs(spec))
     if spec.numeric_cols:
-        q = df.groupBy(*gcols).agg(*_quantile_aggs(spec)).select(
-            *gcols,
-            *[F.col(f"q__{c}")[0].alias(f"q1__{c}") for c in spec.numeric_cols],
-            *[F.col(f"q__{c}")[1].alias(f"q3__{c}") for c in spec.numeric_cols],
-        )
+        q = _unpack_quantiles(df.groupBy(*gcols).agg(*_quantile_aggs(spec)), spec, *gcols)
         o = (
             df.join(F.broadcast(q), gcols)
             .groupBy(*gcols)
@@ -397,7 +439,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
             f'count(*) FILTER (WHERE "{ca}" IS NOT NULL AND "{cb}" IS NOT NULL '
             f'AND "{ca}" {op} "{cb}") AS "corrv__{i}"'
         )
-    for kind, rx, lst in (("email", P.EMAIL_RE, spec.email_cols), ("phone", P.PHONE_RE, spec.phone_cols)):
+    for kind, rx, lst in (("email", EMAIL_RE, spec.email_cols), ("phone", PHONE_RE, spec.phone_cols)):
         for c in lst:
             s = f'CAST("{c}" AS VARCHAR)'
             m.append(f'count({s}) AS "{kind}c__{c}"')
@@ -408,7 +450,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
     for c in spec.string_cols:
         col = f'"{c}"'
         folded = f"lower(trim({col}))"
-        fakes = ", ".join(f"'{x}'" for x in P.FAKE_NULLS)
+        fakes = ", ".join(f"'{x}'" for x in FAKE_NULLS)
         m.append(f'count({col}) AS "strc__{c}"')
         m.append(f'count(*) FILTER (WHERE {col} IS NOT NULL AND {col} <> trim({col})) AS "ws__{c}"')
         m.append(f'count(*) FILTER (WHERE {folded} IN ({fakes})) AS "fn__{c}"')
@@ -424,7 +466,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
 
     o = []
     for c in spec.numeric_cols:
-        k = _d(P.IQR_FENCE_K)
+        k = _d(IQR_FENCE_K)
         o.append(
             f'count(*) FILTER (WHERE t."{c}" < q."q1__{c}" - {k}*(q."q3__{c}"-q."q1__{c}") '
             f'OR t."{c}" > q."q3__{c}" + {k}*(q."q3__{c}"-q."q1__{c}")) AS "out__{c}"'
@@ -538,7 +580,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
         terms = []
         for c in spec.string_cols:
             pen = (
-                f'CASE WHEN "nu__{c}" >= {P.CASE_VARIANT_MIN} AND "nu__{c}" <= {P.CASE_VARIANT_MAX} '
+                f'CASE WHEN "nu__{c}" >= {CASE_VARIANT_MIN} AND "nu__{c}" <= {CASE_VARIANT_MAX} '
                 f'AND "nl__{c}" < "nu__{c}" THEN ("nu__{c}" - "nl__{c}") * 10 ELSE 0 END'
             )
             terms.append(f'"ws__{c}" + "fn__{c}" + {pen}')

@@ -226,6 +226,14 @@ def test_runtime_failing_rule_degrades_not_crashes(spark):
     assert "rule__0" not in res.metrics  # bad rule excluded, not fatal
     assert any("not evaluable" in i["message"] for i in ts.issues)
 
+    # both skip kinds at once: an analysis-invalid rule first shifts every
+    # index, and each metric still carries its rule's ORIGINAL index
+    bad_col = {"name": "no_col", "condition": "no_such_col > 0", "severity": "low"}
+    res = profile(df, ProfileConfig(custom_rules=[bad_col, *rules]))
+    assert "rule__2" in res.metrics and res.metrics["rule__2"] == 0
+    assert "rule__0" not in res.metrics and "rule__1" not in res.metrics
+    assert sum("not evaluable" in i["message"] for i in res.table_score.issues) == 2
+
 
 def test_freshness_capped_at_100_for_future_dates(spark):
     """Future-dated rows (negative lag) must not push freshness above 100."""
@@ -267,22 +275,37 @@ def test_lang_guess_null_text_agrees_across_engines(spark):
     assert got == want and got[0] == "und" and got[2] == "en"
 
 
-def test_min_numeric_rows_excludes_sparse_columns(spark):
-    import pandas as pd
+def test_profile_matches_duckdb_oracle(spark, tmp_path):
+    """The public API against DuckDB: profile()'s 9 dims + global score equal
+    the generated oracle SQL run on the spec profile() measured."""
+    from datetime import datetime
 
-    from data_quality_check_spark.operators.profiler import ProfileConfig, profile
+    import duckdb
 
-    pdf = pd.DataFrame(
-        {
-            "dense": [float(i) for i in range(20)],
-            "sparse": [1.0, 2.0] + [None] * 18,  # 2 non-null
-        }
+    from data_quality_check_spark.plans.quality_scores import scores_duck_sql
+
+    path = str(tmp_path / "demo.parquet")
+    demo_ecommerce_pdf().to_parquet(path, index=False)
+    # test_profile_custom_rules' two rules, with bare identifiers: backticks
+    # are Spark-only, and the oracle runs each condition as written
+    rules = [
+        {"name": "age >= 0", "condition": "age >= 0", "severity": "high", "column": "age"},
+        {"name": "price < 1e6", "condition": "price < 1000000", "severity": "low", "column": "price"},
+    ]
+    cfg = ProfileConfig(
+        email_columns=["email"],
+        phone_columns=["phone"],
+        date_columns=["created_at"],
+        custom_rules=rules,
     )
-    df = spark.createDataFrame(pdf)
-    r = profile(df, ProfileConfig(min_numeric_rows=10))
-    assert "q1__dense" in r.metrics and "q1__sparse" not in r.metrics
-    everything = profile(df, ProfileConfig())  # default keeps all numeric cols
-    assert "q1__sparse" in everything.metrics
+    # a clock 12.5 h after the fixture's last row, so freshness is neither 0 nor 100
+    res = profile(spark.read.parquet(path), cfg, now=datetime(2024, 1, 26, 11, 30))
+    assert 0.0 < res.table_score.freshness < 100.0
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW demo AS SELECT * FROM '{path}'")
+    got = con.execute(scores_duck_sql("demo", res.spec)).df().iloc[0].to_dict()
+    for dim in (*scoring.DIMENSIONS, "global_score"):
+        assert getattr(res.table_score, dim) == got[dim], dim
 
 
 def test_unnamed_custom_rule_with_violations_does_not_crash(spark):
