@@ -3,7 +3,8 @@
 
 Runs every registered headline query from `data_quality_check_spark.entry_queries`
 at `$SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1) on
-`local[$SPARK_GRAFT_CPUS]` (default 32), plus the image+caption quality-filter
+`local[$SPARK_GRAFT_CPUS]` (default: the cores this process may run on,
+`nproc`), plus the image+caption quality-filter
 pipeline on a cached deterministic fixture, and prints ONE JSON line:
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -28,7 +29,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # the dir queries actually READ: main() swaps in the derived multi-file
 # fixture (cached_multifile_sf)
 DATA_DIR = SF_DIR
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 PIPELINE_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "20000"))
 
 
@@ -60,8 +61,8 @@ def build_spark(cpus: int):
             "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
             "spark.ui.enabled": "false",
             # one scan task per fixture file (VERDICT r4 task 4): the bench
-            # fixtures are written as 32-file bucketed layouts whose files are
-            # small-scale stand-ins for production's 128 MB row groups, so the
+            # fixtures are written as one-file-per-core bucketed layouts whose
+            # files are small-scale stand-ins for production's 128 MB row groups, so the
             # file-packing knobs scale down with them — openCost == bin size
             # means each file fills its own partition, exactly the one-task-
             # per-row-group ratio a production table gets under the DEFAULTS.
@@ -105,9 +106,9 @@ def cached_image_fixture(n: int, num_files: int = 32) -> str:
 # partition column, because that extra column would change the profiled
 # schema (profile_scores_* score every column) and so the queries' semantics. Tiny broadcast-side tables stay single-file.
 SF_FIXTURE_VERSION = 1
-# one file per scan slot: with fewer files than cores some cores sit idle
-# (a 64-cpu run needs 64 splits)
-SF_FIXTURE_FILES = max(32, CPUS)
+# one file per scan slot: with fewer files than cores some cores sit idle,
+# with more every core pays extra per-file task overhead
+SF_FIXTURE_FILES = CPUS
 SF_FIXTURE_MIN_ROWS = 2000  # multi-file iff the table has at least this many
 _TABLE_ID = {
     "region": "r_regionkey", "nation": "n_nationkey", "customer": "c_custkey",

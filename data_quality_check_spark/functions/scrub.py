@@ -1,11 +1,11 @@
 r"""PII / toxicity scrub: rewrite captions in place, leaving every other byte intact.
 
-Two equivalent implementations, tested for exact string equality:
+Equivalent implementations, tested for exact string equality:
   * `scrub_col` — a chain of JVM-side `regexp_replace` column expressions
-    (whole-stage-codegen'd; the default path);
-  * `scrub_udf` — one Arrow-batched pandas UDF applying the compiled-`re` pattern
-    set per batch (the path the north_star names; preferable when the pattern set
-    grows beyond what a regexp_replace chain should inline).
+    (whole-stage-codegen'd);
+  * `scrub_series` — the vectorized pandas twin the fused model UDF applies to
+    rows already in Python (functions/fused.py), one compiled-`re` pass;
+  * `scrub_text` — the pure-python twin (golden labels, property tests).
 
 Patterns are written so the Spark (Java regex) and python `re` (golden labels)
 engines agree on EVERY input: character classes are explicit ASCII, and word
@@ -20,7 +20,6 @@ app_v3.py:507-512.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -99,23 +98,6 @@ def scrub_text(s: str | None) -> str | None:
     for rx, repl in _COMPILED:
         s = rx.sub(repl, s)
     return s
-
-
-def make_scrub_udf():
-    """Arrow-batched pandas UDF twin of `scrub_col`."""
-
-    @F.pandas_udf("string")
-    def scrub_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            out = s.copy()
-            mask = out.notna()
-            vals = out[mask]
-            for rx, repl in _COMPILED:
-                vals = vals.str.replace(rx, repl, regex=True)
-            out[mask] = vals
-            yield out
-
-    return scrub_udf
 
 
 # ─────────────────── PII density audit (count, don't rewrite) ───────────────────

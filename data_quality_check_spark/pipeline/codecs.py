@@ -1,4 +1,4 @@
-"""Image codecs + PSNR for the image+caption pipeline.
+"""Image codecs for the image+caption pipeline.
 
 The sandbox has no image libraries (PIL/cv2 absent), so the pipeline ships a
 deterministic self-contained codec family and uses PIL only when importable
@@ -65,76 +65,6 @@ def decode(data: bytes) -> np.ndarray | None:
         return np.frombuffer(payload, dtype=np.uint8).reshape(h, w, 3)
     except Exception:
         return None
-
-
-VIDEO_MAGIC = b"FVID"
-
-
-def encode_video(frames: list[np.ndarray], fmt: str = "png") -> bytes:
-    """Deterministic fake video container (no pyav/ffmpeg in this sandbox —
-    this is the clearly-marked stand-in for real video decode; the Spark-side
-    plumbing over it is real): magic | n_frames uint32 LE | per frame
-    (len uint32 LE | image-codec blob)."""
-    parts = [VIDEO_MAGIC, struct.pack("<I", len(frames))]
-    for f in frames:
-        blob = encode(f, fmt)
-        parts.append(struct.pack("<I", len(blob)))
-        parts.append(blob)
-    return b"".join(parts)
-
-
-def video_frame_count(data: bytes) -> int | None:
-    """Frame count from the container header (no payload decode)."""
-    try:
-        if data is None or len(data) < 8 or bytes(data[:4]) != VIDEO_MAGIC:
-            return None
-        return struct.unpack("<I", bytes(data[4:8]))[0]
-    except Exception:
-        return None
-
-
-def video_frames_at(data: bytes, idxs: list[int]) -> dict[int, bytes]:
-    """Still-encoded image blobs for the requested frame indices, in ONE
-    O(frames) header walk over the length prefixes — no pixel decode, and no
-    per-index re-walk (sampling shouldn't pay for frames it skips, nor walk the
-    container once per sampled frame). Missing/corrupt indices are absent from
-    the result."""
-    n = video_frame_count(data)
-    want = {i for i in idxs if n is not None and 0 <= i < n}
-    if not want:
-        return {}
-    out: dict[int, bytes] = {}
-    try:
-        pos = 8
-        buf = bytes(data)
-        for i in range(n):
-            (ln,) = struct.unpack("<I", buf[pos : pos + 4])
-            pos += 4
-            if i in want:
-                blob = buf[pos : pos + ln]
-                if len(blob) == ln:
-                    out[i] = blob
-                if len(out) == len(want):
-                    break
-            pos += ln
-    except Exception:
-        pass
-    return out
-
-
-def video_frame(data: bytes, idx: int) -> bytes | None:
-    """Single-frame convenience wrapper over `video_frames_at`."""
-    return video_frames_at(data, [idx]).get(idx)
-
-
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB between two uint8 images."""
-    if a.shape != b.shape:
-        return 0.0
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    if mse == 0:
-        return float("inf")
-    return float(10.0 * np.log10(255.0**2 / mse))
 
 
 def average_hash(arr: np.ndarray, grid: int = 8) -> int:

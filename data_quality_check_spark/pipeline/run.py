@@ -36,9 +36,14 @@ Scale design notes (SURVEY.md §3.4, §4.2):
     reference semantics where duplicates are id-level) is untouched; selection
     is a separate `row_selected` column.
   * resume = anti-filter on the manifest's completed-bucket list (partition
-    pruning when the input is bucket-partitioned). Output uses dynamic partition
-    overwrite so re-processing a bucket after a crash is idempotent. Every
-    pending bucket gets a manifest row (even empty ones), so resume converges.
+    pruning when the input is bucket-partitioned). The output writer (never
+    the session) uses dynamic partition overwrite, so re-processing a bucket
+    after a crash is idempotent. Every pending bucket gets a manifest row (even
+    empty ones), so resume converges.
+  * ONE filter core for both jobs: the streaming twin
+    (streaming/stream_filter.py) runs `decide` and `_write_selected` on each
+    micro-batch — the same decision tables, size gate (`_gated`) and
+    bucketed write as `run_filter`, so one FilterConfig means one verdict.
   * per-language skew: the model stage is one map-side Arrow UDF
     (functions/fused.py), so there is no language-keyed shuffle and no skewed
     key to salt; the Zipf-heavy language mix costs nothing extra.
@@ -74,8 +79,7 @@ from data_quality_check_spark.pipeline.heuristics import (
 
 DATA_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
 
-# the filtered-output schema, shared by the batch job (_process_group) and the
-# streaming twin (streaming/stream_filter.py) so the two cannot drift
+# the filtered-output schema of both jobs (they write through _write_selected)
 OUT_COLS = DATA_COLS + ["lang", "lang_conf", "ppl", "scrubbed_caption", "_bucket"]
 
 # priority-ordered drop reasons; the first 12 mirror reference_impl.DROP_PRIORITY
@@ -106,6 +110,12 @@ DROP_REASONS = [
     "corpus_duplicate",
 ]
 
+# fixed facets of the curation stages (FilterConfig.mixture_weights,
+# contamination_eval_path, ppl_bucket_cuts)
+MIXTURE_GROUP_COL = "lang"
+CONTAMINATION_NGRAM = 3
+PPL_BUCKET_LABELS = ("head", "middle", "tail")
+
 
 # (step, sec) per _step, newest last. Holds ONE job's stages: run_filter
 # truncates it at entry, so a long-lived session never accumulates unboundedly
@@ -120,8 +130,6 @@ def _step(name: str):
     """Wall-time a job step: always recorded into STEP_TIMINGS (bench.py reads
     the per-stage breakdown from there), echoed to stderr when
     SPARK_GRAFT_TIMING is set."""
-    import sys
-
     t0 = time.perf_counter()
     yield
     dt = time.perf_counter() - t0
@@ -160,7 +168,6 @@ class FilterConfig:
     mixture_weights: "dict[str, float] | None" = None
     mixture_output_rows: int | None = None
     mixture_counts: "dict[str, int] | None" = None
-    mixture_group_col: str = "lang"
     mixture_salt: str = ""
     # contamination_overlap: drop kept rows whose caption shingles overlap an
     # eval benchmark set ≥ threshold_pct% (GPT-3 §C). The eval parquet needs a
@@ -169,7 +176,6 @@ class FilterConfig:
     # joins back exactly like dup decisions (size-gated broadcast).
     contamination_eval_path: str | None = None
     contamination_text_col: str = "caption"
-    contamination_ngram: int = 3
     contamination_threshold_pct: int = 50
     # Gopher §A1.1 caption rules (heuristics.gopher_flags keys) applied as
     # EXTRA drop conditions — default None keeps the reference keep/scrub
@@ -190,7 +196,6 @@ class FilterConfig:
     # Languages absent from the cuts get ppl_bucket NULL (surfaced, not
     # guessed). Default None keeps the output schema and parity bit-identical.
     ppl_bucket_cuts: "dict[str, list[float]] | None" = None
-    ppl_bucket_labels: "tuple[str, ...]" = ("head", "middle", "tail")
     run_id: str = field(default_factory=lambda: f"run-{int(time.time())}")
 
     def split_labels(self) -> list[str]:
@@ -270,6 +275,19 @@ def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> list[int]:
         return []
 
 
+def _gated(df: DataFrame, budget: int) -> tuple[DataFrame, int]:
+    """The size gate of every dup-rate-sized table (dup phashes, near-dup
+    acting phashes, dup and contamination decisions): pin it (registry-
+    released, or scoped by `pin_scope()`), count it once, and broadcast-hint
+    it only when its n rows fit `budget` — past it the join shuffles instead
+    of shipping the table to every executor. Returns (table, n)."""
+    from data_quality_check_spark.operators.dedup import _pin
+
+    df = _pin(df)
+    n = df.count()
+    return (F.broadcast(df) if n <= budget else df), n
+
+
 def _decisions_from_candidates(cand: DataFrame, gkey: str) -> DataFrame:
     """Shared id-level decision tail for dup_decisions / near_dup_decisions:
     candidate rows (image_id, <gkey>, rid) → (image_id, is_loser, keep_rid).
@@ -318,22 +336,18 @@ def dup_decisions(df: DataFrame, max_broadcast: int = 2_000_000) -> DataFrame:
     at 32 cores / 8M rows).
 
     The dup-phash table is dup-rate-proportional, same magnitude as the final
-    decisions table the callers size-gate, so its broadcast is gated the same
-    way: pinned (registry-released, or scope it with `pin_scope()`), counted
-    once, broadcast-hinted only within `max_broadcast` — a high-dup corpus
-    falls back to a shuffled semi-join instead of OOMing every executor.
+    decisions table the callers size-gate, so its broadcast goes through the
+    same `_gated` — a high-dup corpus falls back to a shuffled semi-join
+    instead of OOMing every executor.
     """
-    from data_quality_check_spark.operators.dedup import _pin
-
     narrow = df.select("image_id", "phash", "rid")
-    dup_ph = _pin(
+    dup_ph, _ = _gated(
         narrow.groupBy("phash")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
-        .select("phash")
+        .select("phash"),
+        max_broadcast,
     )
-    if dup_ph.count() <= max_broadcast:
-        dup_ph = F.broadcast(dup_ph)
     cand = narrow.join(dup_ph, "phash")
     return _decisions_from_candidates(cand, "phash")
 
@@ -367,8 +381,6 @@ def near_dup_decisions(
         hamming_near_pairs,
     )
 
-    from data_quality_check_spark.operators.dedup import _pin
-
     narrow = df.select("image_id", "phash", "rid")
     ph_counts = narrow.groupBy("phash").agg(F.count(F.lit(1)).alias("n"))
     edges = hamming_near_pairs(
@@ -380,15 +392,14 @@ def near_dup_decisions(
     # The semi-join broadcast is SIZE-GATED like the final decisions table
     # (ADVICE r2): acting is dup-rate-proportional, and at the ~10^9-distinct-
     # phash scale this module targets, a high perceptual-dup rate could exceed
-    # executor broadcast memory. Pinning acting makes the gating count cheap
-    # (its Hamming-pair + CC lineage runs once, not once per consumer).
-    acting = _pin(
+    # executor broadcast memory. The gate's pin makes its count cheap (the
+    # Hamming-pair + CC lineage runs once, not once per consumer).
+    acting, _ = _gated(
         ph_counts.join(labels, "phash", "left")
         .filter((F.col("n") > 1) | F.col("comp").isNotNull())
-        .select("phash", F.coalesce("comp", "phash").alias("gkey"))
+        .select("phash", F.coalesce("comp", "phash").alias("gkey")),
+        max_broadcast,
     )
-    if acting.count() <= max_broadcast:
-        acting = F.broadcast(acting)
     cand = narrow.join(acting, "phash")
     return _decisions_from_candidates(cand, "gkey")
 
@@ -416,18 +427,18 @@ def with_rid(df: DataFrame) -> DataFrame:
     selection), so a 64-bit collision matters only between two copies of the
     same id: ~k²/2⁶⁴ per id — negligible at any scale.
 
-    Falls back to `monotonically_increasing_id` for non-file DataFrames
-    (in-memory test fixtures), where single-scan determinism suffices because
-    such frames never take the production multi-branch path. Same-id duplicate
-    rows are verbatim copies, so WHICH copy wins is immaterial to the output;
-    the rid only guarantees exactly one survives."""
-    try:
-        return df.withColumn(
-            "rid",
-            F.xxhash64(F.col("_metadata.file_path"), F.col("_metadata.row_index")),
-        )
-    except Exception:
-        return df.withColumn("rid", F.monotonically_increasing_id())
+    A streaming file source resolves `_metadata` too (read_image_stream
+    projects rid there, because a foreachBatch frame no longer can). A frame
+    with no input files (in-memory test fixtures) gets
+    `monotonically_increasing_id` instead: single-scan determinism suffices
+    there because such frames never take the production multi-branch path.
+    Same-id duplicate rows are verbatim copies, so WHICH copy wins is
+    immaterial to the output; the rid only guarantees exactly one survives."""
+    if df.isStreaming or df.inputFiles():
+        rid = F.xxhash64(F.col("_metadata.file_path"), F.col("_metadata.row_index"))
+    else:
+        rid = F.monotonically_increasing_id()
+    return df.withColumn("rid", rid)
 
 
 def score_rows(df: DataFrame, cfg: FilterConfig) -> DataFrame:
@@ -439,29 +450,23 @@ def score_rows(df: DataFrame, cfg: FilterConfig) -> DataFrame:
 
 def decide(df: DataFrame, cfg: FilterConfig, dups: DataFrame | None = None) -> DataFrame:
     """All per-row scoring stages; adds flags, lang, ppl, dup flag, keep, reason.
-    Honors the FULL FilterConfig — including contamination_eval_path and
-    `max_broadcast_decisions` — so its verdicts AND its join strategy always
-    agree with run_filter's for the same config: the decisions table is
-    pinned (registry-released; wrap in `pin_scope()` for scoped release),
-    counted, and broadcast-hinted only within the budget, exactly like
-    run_filter's gate. A caller-supplied `dups` is joined as given (hint it
-    yourself if you know it is small)."""
+    Honors the FULL FilterConfig — near_dup_hamming, contamination_eval_path
+    and `max_broadcast_decisions` — with run_filter's own decision tables and
+    `_gated` size gate, so its verdicts AND its join strategy agree with
+    run_filter's for the same config. The streaming twin runs it on every
+    micro-batch. Pins go to the registry (wrap in `pin_scope()` for scoped
+    release). A caller-supplied `dups` is joined as given (hint it yourself
+    if you know it is small)."""
     if "rid" not in df.columns:
         df = with_rid(df)
-    from data_quality_check_spark.operators.dedup import _pin
-
+    budget = cfg.max_broadcast_decisions
     if dups is None:
-        dups = _pin(decisions_for(df, cfg))
-        if dups.count() <= cfg.max_broadcast_decisions:
-            dups = F.broadcast(dups)
-    # same pin + size-gate as the dup table (and as run_filter's
-    # contamination gate): un-pinned, the eval-overlap lineage re-executes
-    # per action, and a handful of contaminated ids would shuffle-join
+        dups, _ = _gated(decisions_for(df, cfg), budget)
+    # un-gated, the eval-overlap lineage would re-execute per action, and a
+    # handful of contaminated ids would shuffle-join
     contaminated = contamination_decisions(df.sparkSession, df, cfg)
     if contaminated is not None:
-        contaminated = _pin(contaminated)
-        if contaminated.count() <= cfg.max_broadcast_decisions:
-            contaminated = F.broadcast(contaminated)
+        contaminated, _ = _gated(contaminated, budget)
     return finalize(score_rows(df, cfg), cfg, dups, contaminated=contaminated)
 
 
@@ -487,7 +492,7 @@ def _mixture_ok_col(cfg: FilterConfig) -> F.Column:
     if not th:
         return F.lit(False)
     return F.coalesce(
-        mixture_keep_col(cfg.mixture_group_col, "image_id", th, cfg.mixture_salt),
+        mixture_keep_col(MIXTURE_GROUP_COL, "image_id", th, cfg.mixture_salt),
         F.lit(False),
     )
 
@@ -606,7 +611,7 @@ def contamination_decisions(
         eval_df,
         "image_id",
         "caption",
-        ngram=cfg.contamination_ngram,
+        ngram=CONTAMINATION_NGRAM,
         threshold_pct=cfg.contamination_threshold_pct,
     )
     return (
@@ -617,10 +622,8 @@ def contamination_decisions(
 
 
 def optional_out_cols(scored: DataFrame, cfg: FilterConfig, out_cols: "list[int]"):
-    """Config-driven OPTIONAL output projections, shared by the batch job
-    (_process_group) and the streaming twin (stream_filter) so their output
-    schemas cannot drift — the same share-the-code-object contract as
-    _bucket_metric_aggs. Mutates out_cols in place, returns the projected
+    """Config-driven OPTIONAL output projections of both jobs' write step
+    (`_write_selected`). Mutates out_cols in place, returns the projected
     frame.
 
       * cfg.splits → `split` (curation.hash_split: pure function of
@@ -646,7 +649,7 @@ def optional_out_cols(scored: DataFrame, cfg: FilterConfig, out_cols: "list[int]
     if cfg.ppl_bucket_cuts is not None:
         from data_quality_check_spark.operators.curation import bucket_label_col
 
-        n = len(cfg.ppl_bucket_labels)
+        n = len(PPL_BUCKET_LABELS)
         for lang, cuts in cfg.ppl_bucket_cuts.items():
             if len(cuts) != n - 1:
                 raise ValueError(
@@ -664,7 +667,7 @@ def optional_out_cols(scored: DataFrame, cfg: FilterConfig, out_cols: "list[int]
             cuts_col = F.when(F.col("lang") == F.lit(lang), arr).otherwise(cuts_col)
         scored = scored.withColumn(
             "ppl_bucket",
-            bucket_label_col(F.col("ppl"), cuts_col, tuple(cfg.ppl_bucket_labels)),
+            bucket_label_col(F.col("ppl"), cuts_col, PPL_BUCKET_LABELS),
         )
         out_cols.append("ppl_bucket")
     return scored
@@ -685,7 +688,7 @@ def output_schema_fingerprint(cfg: FilterConfig) -> dict:
         # rule as filter thresholds: a resume must not be blocked by a
         # verdict-identical rewrite of the config object)
         "ppl_bucket_labels": (
-            list(cfg.ppl_bucket_labels) if cfg.ppl_bucket_cuts is not None else []
+            list(PPL_BUCKET_LABELS) if cfg.ppl_bucket_cuts is not None else []
         ),
     }
 
@@ -845,16 +848,13 @@ def run_filter(
 
     Returns a summary dict {processed_buckets, rows_in, rows_kept}.
     """
+    from data_quality_check_spark.operators.dedup import pin_scope
+
     cfg = cfg or FilterConfig()
     if cfg.mixture_weights is not None:
         _mixture_ok_col(cfg)  # validate counts/output_rows BEFORE any Spark work
     _check_output_schema_fingerprint(checkpoint_dir, cfg)
     STEP_TIMINGS.clear()  # one job's stages only — see the declaration
-    # dynamic partition overwrite is a JOB-scoped need (per-group bucket
-    # patches); restore the caller's setting on exit or their own later
-    # overwrite-partitionBy writes silently keep stale partitions
-    _prev_pom = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     raw = spark.read.parquet(input_path)
     # A `_bucket` column discovered from the layout means the input already IS
@@ -880,44 +880,33 @@ def run_filter(
 
     # dedup decisions come from the FULL input (phash groups span buckets) via a
     # narrow columnar scan. The decisions table is ~duplicate-rate · n rows, so
-    # its broadcast is size-gated (VERDICT r1 item 4): pin it, count it (one
-    # cheap action over the 3-column lineage — the price of knowing the size
-    # before choosing a join strategy), then either broadcast the whole table
-    # into ONE write action, or — when the dup rate makes it too large to ship
-    # to every executor — spill it bucket-partitioned next to the checkpoint
-    # and process pending buckets in groups whose partition-pruned decision
-    # slice fits the budget. Decision rows land in the same _bucket as their
-    # data rows (both derive from image_id), so each group's join is a
-    # broadcast of only that group's slice and `bytes` still never shuffles;
-    # on Iceberg the same fallback is a storage-partitioned join against a
-    # bucket(B, image_id) decisions table. Per-group commits also tighten
-    # resume granularity: a kill mid-run loses at most one group.
-    from pyspark.storagelevel import StorageLevel
-
-    dups = decisions_for(df, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    # contamination verdicts follow the dup-decisions pattern: computed ONCE
-    # over the full input (narrow caption scan), pinned, size-gated broadcast
-    contam_pinned = contamination_decisions(spark, df, cfg)
-    contaminated = None
-    if contam_pinned is not None:
-        contam_pinned = contam_pinned.persist(StorageLevel.MEMORY_AND_DISK)
-        with _step("contamination_count"):
-            n_contam = contam_pinned.count()
-        contaminated = (
-            F.broadcast(contam_pinned)
-            if n_contam <= cfg.max_broadcast_decisions
-            else contam_pinned
-        )
+    # its broadcast is size-gated (VERDICT r1 item 4, `_gated`): pinned and
+    # counted (one cheap action over the 3-column lineage — the price of
+    # knowing the size before choosing a join strategy), then either broadcast
+    # whole into ONE write action, or — when the dup rate makes it too large to
+    # ship to every executor — spilled bucket-partitioned next to the
+    # checkpoint, and pending buckets are processed in groups whose
+    # partition-pruned decision slice fits the budget. Decision rows land in
+    # the same _bucket as their data rows (both derive from image_id), so each
+    # group's join is a broadcast of only that group's slice and `bytes` still
+    # never shuffles; on Iceberg the same fallback is a storage-partitioned
+    # join against a bucket(B, image_id) decisions table. Per-group commits
+    # also tighten resume granularity: a kill mid-run loses at most one group.
+    # Contamination verdicts take the same gate; the pin scope releases both.
+    budget = cfg.max_broadcast_decisions
     spill_dir = os.path.join(checkpoint_dir, "dup_decisions", cfg.run_id)
-    totals = {"rows_in": 0, "rows_kept": 0}
-    try:
+    summary = {"processed_buckets": pending, "rows_in": 0, "rows_kept": 0}
+    with pin_scope():
+        dups = decisions_for(df, cfg)
+        contaminated = contamination_decisions(spark, df, cfg)
+        if contaminated is not None:
+            with _step("contamination_count"):
+                contaminated, _ = _gated(contaminated, budget)
         with _step("dup_decisions_count"):
-            n_act = dups.count()
-        if n_act <= cfg.max_broadcast_decisions:
+            dups, n_act = _gated(dups, budget)
+        if n_act <= budget:
             groups = [pending]
-            # finalize joins decision tables AS GIVEN — the gate decided
-            # broadcast is safe, so the hint is attached here
-            slice_for = lambda grp: F.broadcast(dups)  # noqa: E731
+            slice_for = lambda grp: dups  # noqa: E731 — hinted by the gate
         else:
             with _step("dup_decisions_spill"):
                 (
@@ -945,7 +934,7 @@ def run_filter(
             groups, cur, cur_n = [], [], 0
             for bkt in pending:
                 c = by_bucket.get(bkt, 0)
-                if cur and cur_n + c > cfg.max_broadcast_decisions:
+                if cur and cur_n + c > budget:
                     groups.append(cur)
                     cur, cur_n = [], 0
                 cur.append(bkt)
@@ -963,34 +952,73 @@ def run_filter(
                     .drop("_bucket")
                 )
                 n_grp = sum(by_bucket.get(b, 0) for b in grp)
-                return F.broadcast(sl) if n_grp <= cfg.max_broadcast_decisions else sl
+                return F.broadcast(sl) if n_grp <= budget else sl
 
         for gi, grp in enumerate(groups):
             m = _process_group(df, cfg, grp, gi, slice_for(grp), output_dir,
                                checkpoint_dir, prebucketed, contaminated)
-            totals["rows_in"] += int(m["rows_in"])
-            totals["rows_kept"] += int(m["rows_kept"])
-    finally:
-        if _prev_pom is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", _prev_pom)
-        dups.unpersist()
-        if contam_pinned is not None:
-            contam_pinned.unpersist()
-        # near_dup_hamming mode pins the phash signature + acting tables into
-        # the module registry; release them with the job (recompute-safe per
-        # release_pins' contract) so library callers don't hold driver refs +
-        # storage blocks for the session lifetime (ADVICE r2).
-        from data_quality_check_spark.operators.dedup import release_pins
+            summary["rows_in"] += int(m["rows_in"])
+            summary["rows_kept"] += int(m["rows_kept"])
+    return summary
 
-        release_pins()
 
-    return {
-        "processed_buckets": pending,
-        "rows_in": totals["rows_in"],
-        "rows_kept": totals["rows_kept"],
-    }
+def _write_selected(
+    scored: DataFrame,
+    cfg: FilterConfig,
+    buckets: list[int],
+    path: str,
+    obs_name: str,
+    prebucketed: bool = False,
+    batch_id: int | None = None,
+) -> dict:
+    """The write step of both filter jobs (`_process_group`, the stream's
+    micro-batch): ONE Spark action writing the selected rows of a finalized
+    frame, partitioned by `_bucket` (under `_batch_id` when given), that
+    returns the observe() row of `_bucket_metric_aggs` over `buckets`.
+    Dynamic partition overwrite is an option of THIS writer, not the
+    session: a re-processed bucket or replayed micro-batch replaces exactly
+    its own partitions, and the caller's own overwrite writes keep theirs."""
+    scored = scored.withColumn(
+        "_scrub_changed",
+        F.col("row_selected") & ~F.col("scrubbed_caption").eqNullSafe(trim_col(F.col("caption"))),
+    )
+    out_cols = list(OUT_COLS)
+    scored = optional_out_cols(scored, cfg, out_cols)
+    obs = Observation(obs_name)
+    scored = scored.observe(
+        obs,
+        *_bucket_metric_aggs(
+            buckets,
+            cfg.split_labels(),
+            check_hash_buckets=cfg.num_buckets if prebucketed else None,
+        ),
+    )
+    kept = scored.filter(F.col("row_selected")).select(*out_cols)
+    if not prebucketed:
+        # Flat input: tasks hold a mix of buckets, so without this partitionBy
+        # fans every task out across all buckets (tasks × buckets files) and the
+        # driver-side dynamic commit renames them serially. image_id determines
+        # _bucket, so this kept-rows-only shuffle loses nothing. Pre-bucketed
+        # input skips it — the storage-partitioned-join property the Iceberg
+        # bucket layout exists for, and the bytes column never shuffles at all.
+        kept = kept.repartition(cfg.num_buckets, F.col("_bucket"))
+    parts = ["_bucket"]
+    if batch_id is not None:
+        kept = kept.withColumn("_batch_id", F.lit(int(batch_id)))
+        parts = ["_batch_id", "_bucket"]
+    (
+        kept.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*parts)
+        # rows are bytes-dominated and image bytes are already codec-compressed;
+        # container-level snappy would burn write+read CPU for ~0% size win,
+        # and dictionary encoding would hash every multi-KB blob into a
+        # dictionary that always overflows — pure wasted CPU on this schema
+        .option("compression", "uncompressed")
+        .option("parquet.enable.dictionary", "false")
+        .parquet(path)
+    )
+    return obs.get
 
 
 def _process_group(
@@ -1012,47 +1040,18 @@ def _process_group(
     flat file it is a pushed-down row filter (every group re-reads the file,
     which is why flat layouts are the test path, never the 10^12 one)."""
     work = df.filter(F.col("_bucket").isin(grp))
-    scored = finalize(score_rows(work, cfg), cfg, dups, contaminated).withColumn(
-        "_scrub_changed",
-        F.col("row_selected") & ~F.col("scrubbed_caption").eqNullSafe(trim_col(F.col("caption"))),
-    )
-    out_cols = list(OUT_COLS)
-    scored = optional_out_cols(scored, cfg, out_cols)
-
-    obs = Observation(f"metrics-{cfg.run_id}-g{group_idx}")
-    scored = scored.observe(
-        obs,
-        *_bucket_metric_aggs(
-            grp,
-            cfg.split_labels(),
-            check_hash_buckets=cfg.num_buckets if prebucketed else None,
-        ),
-    )
-
-    kept = scored.filter(F.col("row_selected")).select(*out_cols)
-    if not prebucketed:
-        # Flat input: tasks hold a mix of buckets, so without this partitionBy
-        # fans every task out across all buckets (tasks × buckets files) and the
-        # driver-side dynamic commit renames them serially. image_id determines
-        # _bucket, so this kept-rows-only shuffle loses nothing. Pre-bucketed
-        # input skips it — the storage-partitioned-join property the Iceberg
-        # bucket layout exists for, and the bytes column never shuffles at all.
-        kept = kept.repartition(cfg.num_buckets, F.col("_bucket"))
+    scored = finalize(score_rows(work, cfg), cfg, dups, contaminated)
     with _step(f"score+write g{group_idx}"):
-        (
-            kept.write.mode("overwrite")
-            .partitionBy("_bucket")
-            # rows are bytes-dominated and image bytes are already codec-compressed;
-            # container-level snappy would burn write+read CPU for ~0% size win,
-            # and dictionary encoding would hash every multi-KB blob into a
-            # dictionary that always overflows — pure wasted CPU on this schema
-            .option("compression", "uncompressed")
-            .option("parquet.enable.dictionary", "false")
-            .parquet(os.path.join(output_dir, "filtered"))
+        m = _write_selected(
+            scored,
+            cfg,
+            grp,
+            os.path.join(output_dir, "filtered"),
+            f"metrics-{cfg.run_id}-g{group_idx}",
+            prebucketed,
         )
 
     with _step(f"metrics_write g{group_idx}"):
-        m = obs.get
         if int(m.get("n_bucket_mismatch", 0)) > 0:
             # staged data exists but the manifest is NOT committed — the
             # group stays pending, and a rerun with a corrected num_buckets

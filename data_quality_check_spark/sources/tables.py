@@ -82,9 +82,9 @@ class TableIO:
         )
         w = out.repartition(F.col("_bucket")).write.mode(mode).partitionBy("_bucket")
         if mode == "overwrite":
-            # whole-TABLE replace, not a partition patch: under the session's
-            # partitionOverwriteMode=dynamic (the filter jobs set it), a plain
-            # overwrite would keep buckets absent from `df` — e.g. a compaction
+            # whole-TABLE replace, not a partition patch: under a session
+            # whose partitionOverwriteMode is dynamic, a plain overwrite
+            # would keep buckets absent from `df` — e.g. a compaction
             # that absorbed a bucket's every row would leave its stale files
             w = w.option("partitionOverwriteMode", "static")
         w.parquet(self._path(name))

@@ -9,21 +9,26 @@ Design:
   * file source `readStream.parquet` over the landing dir; the Structured
     Streaming checkpoint tracks processed files, so a restarted query is
     exactly-once over inputs without any manifest logic of our own;
-  * `foreachBatch` reuses the batch pipeline verbatim — `score_rows` →
-    `dup_decisions` → `finalize` — so keep/drop/scrub semantics are identical
-    by construction (same code objects, covered by the batch golden tests);
-  * per-batch metrics ride on `DataFrame.observe` with the batch job's own
-    agg list (`run._bucket_metric_aggs`), written to a `stream_run_metrics`
-    table keyed by batch_id (a separate table, not the batch `run_metrics` —
-    mixing the two schemas in one directory would read back depending on
-    which file Spark samples for the footer);
+  * the source projects the stable row id (`run.with_rid`: a hash of the
+    row's file path and row index) — a foreachBatch frame can no longer
+    resolve `_metadata`;
+  * `foreachBatch` runs the batch job's own filter core on each micro-batch:
+    `run.decide` (the same decision tables, near_dup_hamming and
+    contamination options and `_gated` size gate as `run_filter`) and
+    `run._write_selected` (the same optional columns, observe() metrics and
+    bucketed write) — so one FilterConfig means the same keep/drop/scrub
+    verdicts in both jobs, by construction;
+  * per-batch metrics go to a `stream_run_metrics` table keyed by batch_id (a
+    separate table, not the batch `run_metrics` — mixing the two schemas in
+    one directory would read back depending on which file Spark samples for
+    the footer);
   * foreachBatch is at-least-once, so both side effects are IDEMPOTENT per
-    batch_id: kept rows overwrite their own `_batch_id` partition (dynamic
-    partition overwrite) and the metrics row lands at a deterministic
-    per-batch filename — a replayed micro-batch replaces its own output
-    instead of duplicating it.
+    batch_id: kept rows overwrite their own `_batch_id` partition (the
+    writer's dynamic partition overwrite) and the metrics row lands at a
+    deterministic per-batch filename — a replayed micro-batch replaces its
+    own output instead of duplicating it.
 
-Dedup layering: `dup_decisions` inside a micro-batch collapses duplicates
+Dedup layering: the decision tables inside a micro-batch collapse duplicates
 within that batch; `dedup_within` additionally drops CROSS-batch re-deliveries
 with keyed state (`dropDuplicatesWithinWatermark` on an ingest timestamp):
 first arrival wins, state retained only for the watermark delay, so state size
@@ -37,22 +42,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_quality_check_spark.pipeline.fixtures import IMAGES_DDL
 from data_quality_check_spark.pipeline.run import (
-    OUT_COLS,
     FilterConfig,
     _append_parquet,
-    _bucket_metric_aggs,
+    _write_selected,
     bucket_col,
-    contamination_decisions,
-    dup_decisions,
-    finalize,
-    score_rows,
+    decide,
     with_rid,
 )
-from data_quality_check_spark.pipeline.heuristics import trim_col
 
 
 def read_image_stream(
@@ -78,7 +78,7 @@ def read_image_stream(
     reader = spark.readStream.schema(IMAGES_DDL)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_path)
+    stream = with_rid(reader.parquet(input_path))
     if dedup_within is not None:
         stream = (
             stream.withColumn("_ingest_ts", F.current_timestamp())
@@ -217,20 +217,9 @@ def run_stream_filter(
         df = batch_df
         if "_bucket" not in df.columns:
             df = df.withColumn("_bucket", bucket_col(num_buckets=cfg.num_buckets))
-        df = with_rid(df)
-        # batch-scope (see module docstring); finalize joins decision tables
-        # AS GIVEN, so gate the broadcast hint here like the batch job does —
-        # the pin releases with this batch's pin_scope
-        from data_quality_check_spark.operators.dedup import _pin
-
-        dups = _pin(dup_decisions(df, max_broadcast=cfg.max_broadcast_decisions))
-        if dups.count() <= cfg.max_broadcast_decisions:
-            dups = F.broadcast(dups)
-        # the batch job computes contamination once over the full input; the
-        # stream's unit of input IS the micro-batch, so per-batch here — same
-        # FilterConfig options must mean the same verdicts in both jobs
-        contaminated = contamination_decisions(spark, df, cfg)
-        scored = finalize(score_rows(df, cfg), cfg, dups, contaminated)
+        # the batch job's decisions, scoped to the micro-batch (see the module
+        # docstring); the gate's pins release with this batch's pin_scope
+        scored = decide(df, cfg)
         if seen_artifacts is not None:
             from data_quality_check_spark.operators.dedup import dedup_incremental
 
@@ -286,72 +275,39 @@ def run_stream_filter(
                 .drop("_corpus_keep")
             )
         # AFTER the corpus overlay: n_scrubbed must count kept-and-scrubbed
-        # rows, not rows later dropped as corpus duplicates
-        scored = scored.withColumn(
-            "_scrub_changed",
-            F.col("row_selected")
-            & ~F.col("scrubbed_caption").eqNullSafe(trim_col(F.col("caption"))),
-        )
-        out_cols = list(OUT_COLS)
-        # SAME code object as the batch job's optional projections
-        # (run.optional_out_cols) — the two jobs' output schemas cannot drift
-        from data_quality_check_spark.pipeline.run import optional_out_cols
-
-        scored = optional_out_cols(scored, cfg, out_cols)
-        obs = Observation(f"stream-metrics-{cfg.run_id}-{batch_id}")
-        # the batch job's metric aggs with no per-bucket terms — SAME code
-        # object (run._bucket_metric_aggs), so the two jobs' metric schemas
-        # cannot drift
-        scored = scored.observe(obs, *_bucket_metric_aggs([], cfg.split_labels()))
-        kept = scored.filter(F.col("row_selected")).select(*out_cols)
-        kept = kept.repartition(cfg.num_buckets, F.col("_bucket"))
-        # IDEMPOTENT write: foreachBatch is at-least-once (a batch whose write
-        # committed but whose offsets didn't is re-run on restart), so kept
-        # rows land under a _batch_id partition with dynamic-partition
-        # OVERWRITE — a replay rewrites exactly its own partitions instead of
-        # appending duplicates. Readers still prune on the nested _bucket dirs.
-        # NOT `spark = ...`: an assignment would shadow the closure's session
-        # for the WHOLE function body (the replay guard above reads it first)
-        sess_conf = kept.sparkSession.conf
-        # scoped like excludedRules below: restored after the write so the
-        # dynamic mode never leaks into the caller's own overwrite writes
-        prev_pom = sess_conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        sess_conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # an ALL-DROPPED batch makes the observed plan's kept side empty at
+        # rows, not rows later dropped as corpus duplicates.
+        # An ALL-DROPPED batch makes the observed plan's kept side empty at
         # runtime; AQE's AQEPropagateEmptyRelation then replaces the subtree
         # and the CollectMetrics row is never delivered — obs.get fails on an
         # empty observation (the snapshot's known partition stats make the
         # emptiness visible to AQE; bench_hamming.py hits the same behavior).
-        # Exclude that single rule around this write; AQE itself stays on.
+        # Exclude that single rule around this write; AQE itself stays on. Set
+        # on the micro-batch's own session (NOT the closure's `spark`: the
+        # query runs in a clone of it).
+        sess_conf = scored.sparkSession.conf
+        _EXCLUDED = "spark.sql.adaptive.optimizer.excludedRules"
         _EMPTY_RULE = (
             "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
         )
-        prev_excluded = sess_conf.get("spark.sql.adaptive.optimizer.excludedRules", None)
+        prev_excluded = sess_conf.get(_EXCLUDED, None)
         sess_conf.set(
-            "spark.sql.adaptive.optimizer.excludedRules",
+            _EXCLUDED,
             _EMPTY_RULE if not prev_excluded else f"{prev_excluded},{_EMPTY_RULE}",
         )
         try:
-            (
-                kept.withColumn("_batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("_batch_id", "_bucket")
-                .option("compression", "uncompressed")
-                .option("parquet.enable.dictionary", "false")
-                .parquet(os.path.join(output_dir, "filtered"))
+            m = _write_selected(
+                scored,
+                cfg,
+                [],
+                os.path.join(output_dir, "filtered"),
+                f"stream-metrics-{cfg.run_id}-{batch_id}",
+                batch_id=batch_id,
             )
         finally:
             if prev_excluded is None:
-                sess_conf.unset("spark.sql.adaptive.optimizer.excludedRules")
+                sess_conf.unset(_EXCLUDED)
             else:
-                sess_conf.set(
-                    "spark.sql.adaptive.optimizer.excludedRules", prev_excluded
-                )
-            if prev_pom is None:
-                sess_conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                sess_conf.set("spark.sql.sources.partitionOverwriteMode", prev_pom)
-        m = obs.get
+                sess_conf.set(_EXCLUDED, prev_excluded)
         import pandas as pd
 
         row = {

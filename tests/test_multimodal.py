@@ -1,14 +1,12 @@
-"""Multimodal plumbing: video frame sampling and image feature extraction.
+"""Multimodal plumbing: image feature extraction, alignment and caption audits.
 
-The video "decode" is the repo's deterministic container (codecs.encode_video —
-the clearly-marked stand-in for pyav/ffmpeg); what these tests pin down is the
-REAL Spark-side plumbing: mapInPandas fan-out schema and batch shape, Arrow
-boundary projection, determinism under repartitioning, and the feature-vector →
-similarity-operator integration.
+The image "decode" is the repo's deterministic codec family (pipeline/codecs.py);
+what these tests pin down is the REAL Spark-side plumbing: Arrow UDF shapes, the
+feature-vector → similarity-operator integration, and the single-pass plans of
+the caption/image audits.
 """
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from data_quality_check_spark.functions import multimodal as MM
@@ -18,54 +16,6 @@ from data_quality_check_spark.pipeline import codecs
 
 def _img(seed: int, h: int = 24, w: int = 32) -> np.ndarray:
     return np.random.RandomState(seed).randint(0, 256, (h, w, 3), dtype=np.uint8)
-
-
-@pytest.fixture(scope="module")
-def videos(spark):
-    rows = []
-    for vid, n in [("v0", 7), ("v1", 2), ("v2", 1)]:
-        frames = [_img(hash(vid) % 1000 + i) for i in range(n)]
-        rows.append((vid, bytearray(codecs.encode_video(frames))))
-    rows.append(("v_bad", bytearray(b"not a video")))
-    rows.append(("v_null", None))
-    return spark.createDataFrame(rows, "video_id string, video_bytes binary")
-
-
-def test_sample_frames_schema_and_fanout(videos):
-    out = MM.sample_frames(videos, n_frames=3).collect()
-    assert {f.name for f in MM.sample_frames(videos).schema.fields} == {
-        "video_id",
-        "frame_idx",
-        "frame_bytes",
-    }
-    by_vid = {}
-    for r in out:
-        by_vid.setdefault(r.video_id, []).append(r.frame_idx)
-    # 7 frames → linspace picks {0, 3, 6}; short videos keep every frame;
-    # corrupt/null containers contribute zero rows (try-cast analogue)
-    assert by_vid == {"v0": [0, 3, 6], "v1": [0, 1], "v2": [0]}
-
-
-def test_sampled_frame_decodes_to_original(videos):
-    out = {
-        (r.video_id, r.frame_idx): bytes(r.frame_bytes)
-        for r in MM.sample_frames(videos, n_frames=3).collect()
-    }
-    # png frames are lossless: the sampled blob decodes bit-equal to the source
-    want = _img(hash("v0") % 1000 + 3)
-    got = codecs.decode(out[("v0", 3)])
-    assert got is not None and np.array_equal(got, want)
-
-
-def test_sample_frames_partition_invariant(videos):
-    a = sorted(
-        (r.video_id, r.frame_idx) for r in MM.sample_frames(videos, 3).collect()
-    )
-    b = sorted(
-        (r.video_id, r.frame_idx)
-        for r in MM.sample_frames(videos.repartition(5), 3).collect()
-    )
-    assert a == b
 
 
 def test_feature_vectors_drive_similarity(spark):
@@ -94,40 +44,6 @@ def test_feature_vector_null_on_corrupt(spark):
     )
     row = df.select(MM.feature_vector_udf()(F.col("bytes")).alias("f")).first()
     assert row.f is None
-
-
-def test_bilinear_resize_properties(spark):
-    """The numpy bilinear resampler: identity at same size, constant images
-    stay constant at any size, downsample shape is exact, and the Spark UDF
-    round-trips decode → resize → re-encode."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from data_quality_check_spark.functions.multimodal import bilinear_resize, resize_udf
-    from data_quality_check_spark.pipeline import codecs
-
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, size=(24, 16, 3)).astype(np.uint8)
-    # pixel-center convention → same-size resize is the exact identity
-    np.testing.assert_array_equal(bilinear_resize(img, 24, 16), img)
-    # constant image stays constant under any resample
-    const = np.full((20, 20, 3), 137, dtype=np.uint8)
-    for th, tw in [(8, 8), (33, 7), (1, 1)]:
-        out = bilinear_resize(const, th, tw)
-        assert out.shape == (th, tw, 3) and (out == 137).all()
-    # interpolation stays within local value bounds
-    small = bilinear_resize(img, 8, 8)
-    assert small.min() >= img.min() and small.max() <= img.max()
-
-    # Spark UDF round trip: every decodable row yields a target×target image
-    pdf = pd.DataFrame({"bytes": [codecs.encode(img, "png"), b"notanimage", None]})
-    df = spark.createDataFrame(pdf)
-    rows = df.select(resize_udf(8)(F.col("bytes")).alias("out")).collect()
-    thumb = codecs.decode(bytes(rows[0]["out"]))
-    assert thumb.shape == (8, 8, 3)
-    np.testing.assert_array_equal(thumb, bilinear_resize(img, 8, 8))
-    assert rows[1]["out"] is None and rows[2]["out"] is None
 
 
 def test_phash_hamming_neardup_finds_injected_image_dups(spark):

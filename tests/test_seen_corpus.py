@@ -306,9 +306,9 @@ def test_pretoken_layout_refused_then_migrated_by_compact(spark, corpus):
 
 
 def test_compact_absorbs_orphan_only_buckets_under_dynamic_overwrite(spark, corpus):
-    """The filter jobs set partitionOverwriteMode=dynamic session-wide; a
-    compact() in the same driver must still fully rewrite the bucketed toks
-    table — under dynamic mode a bucket whose EVERY row was absorbed is not
+    """A session may run with partitionOverwriteMode=dynamic (the caller's
+    own setting); a compact() in that driver must still fully rewrite the
+    bucketed toks table — under dynamic mode a bucket whose EVERY row was absorbed is not
     present in the compacted output, so a plain overwrite would leave its
     stale files (and the stale shingle sets could later confirm wrong
     near_seen verdicts)."""

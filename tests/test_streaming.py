@@ -2,7 +2,8 @@
 
 Covers:
   * stream ≡ batch: draining a landing dir through `run_stream_filter` in one
-    micro-batch produces exactly the batch job's kept ids + scrubbed captions;
+    micro-batch produces exactly the batch job's kept ids + scrubbed captions,
+    under the default config, near-dup dedup and contamination filtering;
   * exactly-once incremental resume: new files landing after a drain are the
     only thing the next drain processes (streaming checkpoint, no manifest);
   * windowed metrics: the same watermarked plan over a stream (availableNow,
@@ -43,14 +44,68 @@ def _kept(spark, out_dir):
     }
 
 
-def test_stream_filter_matches_batch(spark, fixture_files, tmp_path):
+def _selected_ids(spark, path, cfg) -> set:
+    """Ids the batch decision path selects for `cfg` over the parquet at `path`."""
+    from data_quality_check_spark.operators.dedup import pin_scope
+    from data_quality_check_spark.pipeline.run import decide
+
+    with pin_scope():
+        df = decide(spark.read.parquet(str(path)), cfg)
+        return {r["image_id"] for r in df.filter("row_selected").select("image_id").collect()}
+
+
+def _plant_near_dups(staging, n_pairs: int = 40) -> set:
+    """Give every odd id img(2k+1), k in [100, 100 + n_pairs), a phash 2 bits
+    from img(2k)'s: the pair is one group under near_dup_hamming=3 (the odd id
+    loses) and two under exact-phash dedup. Returns the planted losers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = sorted(staging.iterdir())
+    tables = {p: pq.read_table(p) for p in paths}
+    phash = {}
+    for t in tables.values():
+        phash.update(zip(t.column("image_id").to_pylist(), t.column("phash").to_pylist()))
+    new = {
+        f"img{2 * k + 1:08d}": phash[f"img{2 * k:08d}"] ^ 0b101
+        for k in range(100, 100 + n_pairs)
+    }
+    for p, t in tables.items():
+        ids = t.column("image_id").to_pylist()
+        col = [new.get(i, h) for i, h in zip(ids, t.column("phash").to_pylist())]
+        i = t.schema.get_field_index("phash")
+        pq.write_table(t.set_column(i, "phash", pa.array(col, pa.int64())), p)
+    return set(new)
+
+
+@pytest.mark.parametrize("variant", ["default", "near_dup_hamming", "contamination"])
+def test_stream_filter_matches_batch(spark, fixture_files, tmp_path, variant):
+    """One FilterConfig, one verdict: the stream's micro-batch must keep the
+    batch job's ids and scrubbed captions under each decision option. The
+    non-default options must move the verdicts against the default, so
+    neither case can pass vacuously."""
     files, staging = fixture_files
+    cfg = FilterConfig(num_buckets=8)
+    targets: set = set()
+    if variant == "near_dup_hamming":
+        targets = _plant_near_dups(staging)
+        cfg = FilterConfig(num_buckets=8, near_dup_hamming=3)
+    default_kept = _selected_ids(spark, staging, FilterConfig(num_buckets=8))
+    if variant == "contamination":
+        # eval set = the verbatim captions of 10 rows the default keeps
+        import pandas as pd
+
+        targets = set(sorted(default_kept)[:10])
+        rows = spark.read.parquet(str(staging)).filter(F.col("image_id").isin(targets))
+        caps = sorted({r["caption"] for r in rows.select("caption").collect()})
+        eval_path = str(tmp_path / "eval.parquet")
+        pd.DataFrame({"caption": caps}).to_parquet(eval_path)
+        cfg = FilterConfig(num_buckets=8, contamination_eval_path=eval_path)
+
     landing = tmp_path / "landing"
     landing.mkdir()
     for f in files:
         shutil.copy(staging / f, landing / f)
-
-    cfg = FilterConfig(num_buckets=8)
     summary = run_stream_filter(
         spark, str(landing), str(tmp_path / "s_out"), str(tmp_path / "s_ckpt"), cfg
     )
@@ -61,12 +116,39 @@ def test_stream_filter_matches_batch(spark, fixture_files, tmp_path):
     stream_kept = _kept(spark, tmp_path / "s_out")
     batch_kept = _kept(spark, tmp_path / "b_out")
     assert stream_kept == batch_kept  # ids AND scrubbed captions identical
+    if variant != "default":
+        assert targets & default_kept - set(batch_kept)
 
     # per-batch metrics landed in the stream's own table (separate from the
     # batch run_metrics schema), keyed by batch_id
     m = spark.read.parquet(str(tmp_path / "s_ckpt" / "stream_run_metrics")).collect()
     assert len(m) == 1 and m[0]["rows_kept"] == summary["rows_kept"]
     assert m[0]["batch_id"] == 0
+
+
+def test_stream_rid_is_the_storage_position(spark, fixture_files, tmp_path):
+    """The stream projects rid at its source as xxhash64(file path, row
+    index) of each landed row — the batch job's rid, not a per-plan id."""
+    from data_quality_check_spark.streaming.stream_filter import read_image_stream
+
+    files, staging = fixture_files
+    landing = tmp_path / "landing"
+    shutil.copytree(staging, landing)
+    got = []
+    q = (
+        read_image_stream(spark, str(landing))
+        .writeStream.foreachBatch(
+            lambda df, _: got.extend(df.select("image_id", "rid").collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rid = F.xxhash64(F.col("_metadata.file_path"), F.col("_metadata.row_index"))
+    want = spark.read.parquet(str(landing)).select("image_id", rid.alias("rid")).collect()
+    assert len(got) == 612
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_stream_filter_incremental_resume(spark, fixture_files, tmp_path):
