@@ -81,20 +81,18 @@ def cached_image_fixture(n: int, num_files: int = 32) -> str:
         FIXTURE_GEN_VERSION,
         write_images_parquet,
     )
+    from data_quality_check_spark.sources.commit import publish_dir, published
 
     # key versioned by the generator (stale caches from an older generator are
-    # never reused) and published by atomic rename (a killed generation run
+    # never reused) and published by `publish_dir` (a killed generation run
     # cannot leave a truncated fixture that later runs silently benchmark)
     cache = os.path.join(
         tempfile.gettempdir(),
         f"dqcs_bench_images_{FIXTURE_GEN_VERSION}_{n}_f{num_files}",
     )
-    if not os.path.exists(cache):
+    if not published(cache):
         log(f"[bench] generating image fixture n={n} -> {cache}")
-        tmp = f"{cache}.tmp-{os.getpid()}"
-        write_images_parquet(tmp, n=n, num_files=num_files)
-        os.rename(tmp, cache)
-    return cache
+    return publish_dir(cache, lambda tmp: write_images_parquet(tmp, n=n, num_files=num_files))
 
 
 # ── multi-file bench fixtures (VERDICT r4 task 4) ──
@@ -121,44 +119,41 @@ _TABLE_ID = {
 def multifile_cache_path(sf_dir: str) -> str:
     """Cache dir of `sf_dir`'s multi-file copy. The key carries every source
     table's size and mtime, so a regenerated sf dir never reuses a stale copy."""
-    import hashlib
+    from data_quality_check_spark.sources.commit import content_key
 
-    sig = hashlib.sha1()
-    for t in _TABLE_ID:
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        sig.update(f"{t}:{st.st_size}:{st.st_mtime_ns};".encode())
     return os.path.join(
         tempfile.gettempdir(),
         f"dqcs_bench_sf_v{SF_FIXTURE_VERSION}_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_f{SF_FIXTURE_FILES}_{sig.hexdigest()[:12]}",
+        f"_f{SF_FIXTURE_FILES}_{content_key(sf_dir)}",
     )
 
 
 def cached_multifile_sf(spark, sf_dir: str) -> str:
     """Derive (once) the multi-file bucketed copy of `sf_dir`; returns its
-    path. Published by atomic rename, same discipline as the image fixture."""
+    path. Published by `publish_dir`, same discipline as the image fixture."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from data_quality_check_spark.sources.commit import publish_dir, published
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        for t, id_col in _TABLE_ID.items():
+            src = os.path.join(sf_dir, f"{t}.parquet")
+            if pq.read_metadata(src).num_rows < SF_FIXTURE_MIN_ROWS:
+                shutil.copy(src, os.path.join(tmp, f"{t}.parquet"))
+                continue
+            (
+                spark.read.parquet(src)
+                .repartition(SF_FIXTURE_FILES, F.col(id_col))
+                .write.mode("overwrite")
+                .parquet(os.path.join(tmp, f"{t}.parquet"))
+            )
+
     cache = multifile_cache_path(sf_dir)
-    if os.path.exists(cache):
-        return cache
-    log(f"[bench] deriving multi-file sf fixture -> {cache}")
-    tmp = f"{cache}.tmp-{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    for t, id_col in _TABLE_ID.items():
-        src = os.path.join(sf_dir, f"{t}.parquet")
-        if pq.read_metadata(src).num_rows < SF_FIXTURE_MIN_ROWS:
-            shutil.copy(src, os.path.join(tmp, f"{t}.parquet"))
-            continue
-        (
-            spark.read.parquet(src)
-            .repartition(SF_FIXTURE_FILES, F.col(id_col))
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, f"{t}.parquet"))
-        )
-    os.rename(tmp, cache)
-    return cache
+    if not published(cache):
+        log(f"[bench] deriving multi-file sf fixture -> {cache}")
+    return publish_dir(cache, build)
 
 
 def audit_fixture_layout(spark, data_dir: str) -> dict:
@@ -182,6 +177,7 @@ def audit_fixture_layout(spark, data_dir: str) -> dict:
 
 def bench_queries(spark) -> "tuple[dict[str, float], float, dict[str, dict], float]":
     from data_quality_check_spark import entry_queries
+    from data_quality_check_spark.sources.commit import published
 
     qs = entry_queries.queries()
     # warm up the JVM + parquet footer caches so q1 isn't charged for session start
@@ -229,9 +225,7 @@ def bench_queries(spark) -> "tuple[dict[str, float], float, dict[str, dict], flo
     # a pre-existing scratch warehouse means this call is a CACHE HIT, not the
     # bootstrap — reporting its ~0s as "the O(corpus) pass" would claim the
     # bootstrap is free; report null instead and say which case this run was
-    bootstrap_cached = os.path.exists(
-        os.path.join(entry_queries._scratch_path(DATA_DIR, "seen_corpus", ".wh"), "_SUCCESS")
-    )
+    bootstrap_cached = published(entry_queries._scratch_path(DATA_DIR, "seen_corpus", ".wh"))
     t0 = time.perf_counter()
     entry_queries._seen_corpus_artifacts(spark, DATA_DIR)
     dt0 = round(time.perf_counter() - t0, 3)

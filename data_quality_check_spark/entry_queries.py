@@ -26,6 +26,7 @@ from data_quality_check_spark.plans.quality_scores import (
     scores_df,
     scores_duck_sql,
 )
+from data_quality_check_spark.sources.commit import content_key, publish_dir
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 AS_OF = "2026-01-01 00:00:00"
@@ -1021,74 +1022,24 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QUERY_SCRATCH_TAG = "r4"
 
 
-def _sf_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the input tables (name, size, mtime per parquet):
-    regenerated fixtures at the same path get a fresh cache entry instead of
-    stale results."""
-    import hashlib
-
-    parts = []
-    for f in sorted(os.listdir(sf_dir)):
-        if f.endswith(".parquet"):
-            st = os.stat(os.path.join(sf_dir, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1(";".join(parts).encode()).hexdigest()[:12]
-
-
 def _scratch_path(sf_dir: str, name: str, ext: str = ".parquet") -> str:
-    """Scratch location keyed by (sf_dir path, query tag, input fingerprint)."""
-    import hashlib
+    """Scratch location keyed by (sf_dir content, query tag). Scratch
+    directories are built once there by `commit.publish_dir`: concurrent
+    processes race safely and a changed input never serves stale artifacts."""
     import tempfile
 
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     return os.path.join(
-        tempfile.gettempdir(), "dqx_query_scratch", key,
-        f"{name}_{_QUERY_SCRATCH_TAG}_{_sf_fingerprint(sf_dir)}{ext}",
+        tempfile.gettempdir(), "dqx_query_scratch", content_key(sf_dir),
+        f"{name}_{_QUERY_SCRATCH_TAG}{ext}",
     )
-
-
-def _scratch_build_dir(sf_dir: str, name: str, build_into, ext: str = ".parquet") -> str:
-    """Build a scratch DIRECTORY once per (input-content, query-tag) with
-    write-to-temp + atomic rename, so concurrent processes race safely (loser
-    discards its copy — both built identical data) and a changed input never
-    serves stale artifacts. `build_into(tmp)` must leave a `_SUCCESS` marker
-    at the directory root (parquet writes do; other builders touch one)."""
-    import shutil
-    import uuid
-
-    path = _scratch_path(sf_dir, name, ext)
-    success = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(success):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-        build_into(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if os.path.exists(success):
-                # lost the race to a healthy winner — keep theirs
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                # a directory without _SUCCESS is a crashed build: self-heal by
-                # replacing it (otherwise every future call rebuilds, fails the
-                # rename, and leaks another tmp dir forever). Two processes can
-                # both reach here — both rmtree, one renames first — so the
-                # loser's rename needs the same lost-the-race handling.
-                shutil.rmtree(path, ignore_errors=True)
-                try:
-                    os.rename(tmp, path)
-                except OSError:
-                    if not os.path.exists(success):
-                        raise
-                    shutil.rmtree(tmp, ignore_errors=True)
-    return path
 
 
 def _scratch_materialize(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     """Compute `build()` once per (input-content, query-tag) and serve later
-    consumers from scratch parquet (atomic publication: `_scratch_build_dir`)."""
-    path = _scratch_build_dir(
-        sf_dir, name, lambda tmp: build().write.mode("overwrite").parquet(tmp)
+    consumers from scratch parquet."""
+    path = publish_dir(
+        _scratch_path(sf_dir, name),
+        lambda tmp: build().write.mode("overwrite").parquet(tmp),
     )
     return spark.read.parquet(path)
 
@@ -1252,9 +1203,8 @@ def _shared_ivf_index(spark: SparkSession, sf_dir: str):
             "ann",
             n_centroids=10,
         )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    path = _scratch_build_dir(sf_dir, "ivf_index_c10", build_into, ext=".wh")
+    path = publish_dir(_scratch_path(sf_dir, "ivf_index_c10", ".wh"), build_into)
     return TableIO(spark, warehouse=path, backend="parquet")
 
 
@@ -1439,10 +1389,8 @@ def _seen_corpus_artifacts(spark: SparkSession, sf_dir: str) -> "DD.SeenCorpusAr
     once per (input-content, tag) like _scratch_materialize, so every later
     run pays only the O(increment) path (VERDICT r3 task 1: the bench cost of
     dedup_incremental_documents drops to the increment-only floor). Same
-    atomic-rename publication via `_scratch_build_dir` (shared lost-the-race
-    and crashed-build self-heal handling), with a `_SUCCESS` marker touched
-    after init() so a half-built warehouse is never mistaken for a healthy
-    one."""
+    publication through `publish_dir`, so a half-built warehouse is never
+    mistaken for a healthy one."""
     from data_quality_check_spark.sources.tables import TableIO
 
     def art_for(warehouse: str) -> DD.SeenCorpusArtifacts:
@@ -1455,9 +1403,8 @@ def _seen_corpus_artifacts(spark: SparkSession, sf_dir: str) -> "DD.SeenCorpusAr
     def build_into(tmp: str) -> None:
         docs = t(spark, sf_dir, "documents")
         art_for(tmp).init(docs.filter(F.col("doc_id") % 4 != 0), "doc_id", "text")
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
-    path = _scratch_build_dir(sf_dir, "seen_corpus", build_into, ext=".wh")
+    path = publish_dir(_scratch_path(sf_dir, "seen_corpus", ".wh"), build_into)
     return art_for(path)
 
 

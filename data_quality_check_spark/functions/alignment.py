@@ -50,8 +50,8 @@ def caption_embedding(texts) -> np.ndarray:
     """(n, ALIGN_DIM) float64 hashed-trigram counts, one row per caption.
 
     Trigrams spanning a string boundary in the concatenated batch buffer are
-    masked out exactly as `textmodel._segment_sums` does, so the counts are a
-    pure function of each caption alone.
+    left out exactly as `textmodel._segment_sums` leaves them out, so the
+    counts are a pure function of each caption alone.
     """
     buf, offsets = _encode_batch(texts)
     ids = _trigram_ids(buf)

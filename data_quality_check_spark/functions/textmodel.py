@@ -50,9 +50,10 @@ def _trigram_ids(buf: np.ndarray) -> np.ndarray:
 def boundary_valid_mask(n_values: int, offsets: np.ndarray) -> np.ndarray:
     """Validity mask over per-position trigram values: False where a trigram
     would span the boundary between two concatenated strings. THE single
-    definition of the batch-invariance-critical rule — shared by `_segment_sums`,
-    `CharTrigramLM.train`, and `alignment.caption_embedding`, so a fix to the
-    masking can never desynchronize the three kernels."""
+    definition of the batch-invariance-critical rule — shared by
+    `CharTrigramLM.train` and `alignment.caption_embedding`, so a fix to the
+    masking can never desynchronize the two kernels (`_segment_sums` excludes
+    the same positions by summing each string's own trigram slice)."""
     valid = np.ones(n_values, dtype=bool)
     boundary = offsets[1:-1]
     for d in (1, 2):
@@ -68,32 +69,20 @@ def _segment_sums(values: np.ndarray, offsets: np.ndarray):
     n = len(offsets) - 1
     # valid trigram start positions per string: offsets[s] .. offsets[s+1]-3
     counts = np.maximum(offsets[1:] - offsets[:-1] - 2, 0)
-    sums = np.zeros(n, dtype=np.float64)
     if len(values) == 0:
-        return sums, counts
-    # zero out trigrams that span a string boundary, then reduceat per string
-    masked = np.where(boundary_valid_mask(len(values), offsets), values, 0.0)
-    # Per-segment reduceat, with starts clipped to len(values) and segments
-    # starting at-or-past the end DROPPED (they hold no trigram positions;
-    # their counts are 0). A dropped tail segment means the last surviving
-    # segment runs to the end of the array, which is exactly its true extent —
-    # any extra positions it absorbs are boundary-spanning trigrams already
-    # masked to +0.0, which cannot change a float sum. The previous code
-    # instead clamped out-of-range starts to len(values)-1, which planted a
-    # FALSE boundary that truncated the second-to-last segment whenever the
-    # batch ended in a <3-byte string — so a caption's score depended on what
-    # happened to follow it in the Arrow batch. reduceat sums each segment
-    # from its own slice only, so results are bit-identical under any batch
-    # composition (asserted by a hypothesis property test).
-    starts = np.clip(offsets[:-1], 0, len(values))
-    in_range = starts < len(values)
-    seg = np.zeros(n, dtype=np.float64)
-    if in_range.any():
-        seg[in_range] = np.add.reduceat(masked, starts[in_range])
-    # reduceat quirk: when starts[i] == starts[i+1] (empty string mid-batch)
-    # the slot holds values[starts[i]] instead of 0 — those have counts == 0.
-    seg = np.where(counts > 0, seg, 0.0)
-    return seg, counts
+        return np.zeros(n, dtype=np.float64), counts
+    # Each string is summed over exactly its own [start, start+count) slice:
+    # interleaved start/end indices make reduceat's even slots those sums. A
+    # slice that also held boundary-spanning positions, even masked to +0.0,
+    # would change its length and with it numpy's pairwise-summation grouping,
+    # so a caption's score would depend on what followed it in the Arrow
+    # batch (asserted exactly by a hypothesis property test). The one
+    # trailing 0.0 makes an end index of len(values) valid.
+    starts = offsets[:-1]
+    bounds = np.minimum(np.column_stack([starts, starts + counts]).ravel(), len(values))
+    seg = np.add.reduceat(np.append(values, 0.0), bounds)[::2]
+    # an empty slice (count 0) yields the value at its start, not 0
+    return np.where(counts > 0, seg, 0.0), counts
 
 
 class CharTrigramLM:

@@ -573,8 +573,16 @@ IVF_INDEX_FORMAT_VERSION = 1
 
 
 def _ivf_check_version(io, name: str) -> None:
-    """Refuse to read an index stamped by an unknown (later) code revision —
-    a layout misread would return silently wrong neighbors, not an error."""
+    """Refuse to read an index whose last build did not finish (its centroids
+    may not match its cell assignments) or one stamped by an unknown (later)
+    code revision — either misread would return silently wrong neighbors,
+    not an error."""
+    if io.group_torn(name):
+        raise ValueError(
+            f"IVF index '{name}' is torn: a build over it did not finish, so "
+            "its centroids and cell assignments may come from different "
+            "builds. Rebuild it with ivf_build_index."
+        )
     meta_name = f"{name}.meta"
     if not io.exists(meta_name):
         return  # pre-stamp index: the version-1 layout by definition
@@ -632,24 +640,27 @@ def ivf_build_index(
     )
     spark = df.sparkSession
     cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
-    io.overwrite(
-        spark.createDataFrame(cent_rows, "cell int, weights array<double>"),
-        f"{name}.centroids",
-    )
-    io.overwrite(
-        _ivf_assigned(df, cents, id_col, vec_col),
-        f"{name}.vectors",
-        partition_by=["cell"],
-    )
-    # meta LAST: its presence marks a fully-written index, and its
-    # format_version lets a later code revision refuse rather than misread
-    io.overwrite(
-        spark.createDataFrame(
-            [(IVF_INDEX_FORMAT_VERSION, int(cents.shape[0]), int(cents.shape[1]))],
-            "format_version int, n_centroids int, dim int",
-        ),
-        f"{name}.meta",
-    )
+    # the three tables are replaced one at a time, over a live index on a
+    # rebuild: the group mark makes a crash between them a refusal for
+    # readers, not new centroids over old cell assignments
+    with io.writing_group(name):
+        io.overwrite(
+            spark.createDataFrame(cent_rows, "cell int, weights array<double>"),
+            f"{name}.centroids",
+        )
+        io.overwrite(
+            _ivf_assigned(df, cents, id_col, vec_col),
+            f"{name}.vectors",
+            partition_by=["cell"],
+        )
+        # format_version lets a later code revision refuse rather than misread
+        io.overwrite(
+            spark.createDataFrame(
+                [(IVF_INDEX_FORMAT_VERSION, int(cents.shape[0]), int(cents.shape[1]))],
+                "format_version int, n_centroids int, dim int",
+            ),
+            f"{name}.meta",
+        )
     return cents
 
 

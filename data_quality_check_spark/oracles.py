@@ -28,7 +28,6 @@ Float-determinism notes:
 
 from __future__ import annotations
 
-import hashlib
 import os
 import tempfile
 import zlib
@@ -37,38 +36,27 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 import pandas as pd
 
+from data_quality_check_spark.sources.commit import content_key, replace_file
+
 SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "dqx_oracle_scratch")
 
 
 def _scratch(sf_dir: str, name: str) -> str:
-    # key = path + content fingerprint of the input parquets, so a regenerated
-    # fixture at the same path gets a fresh scratch file, never a stale twin
-    parts = []
-    for f in sorted(os.listdir(sf_dir)):
-        if f.endswith(".parquet"):
-            st = os.stat(os.path.join(sf_dir, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        (os.path.abspath(sf_dir) + "|" + ";".join(parts)).encode()
-    ).hexdigest()[:12]
-    d = os.path.join(SCRATCH_ROOT, key)
+    # keyed on the input parquets' content, so a regenerated fixture at the
+    # same path gets a fresh scratch file, never a stale twin
+    d = os.path.join(SCRATCH_ROOT, content_key(sf_dir))
     os.makedirs(d, exist_ok=True)
     return os.path.join(d, name)
 
 
 def _write_parquet(pdf: pd.DataFrame, path: str) -> str:
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # temp + atomic replace: a concurrent process reading the path never sees
-    # a half-written file, and racing writers (same deterministic content)
-    # harmlessly replace each other
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-    os.replace(tmp, path)
-    return path
+    # a concurrent reader never sees a half-written file, and racing writers
+    # (same deterministic content) harmlessly replace each other
+    table = pa.Table.from_pandas(pdf, preserve_index=False)
+    return replace_file(path, lambda tmp: pq.write_table(table, tmp))
 
 
 def _read_cols(sf_dir: str, table: str, cols: list[str]) -> pd.DataFrame:

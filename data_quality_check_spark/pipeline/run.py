@@ -76,6 +76,7 @@ from data_quality_check_spark.pipeline.heuristics import (
     trim_col,
     with_flags,
 )
+from data_quality_check_spark.sources.commit import replace_file
 
 DATA_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
 
@@ -693,10 +694,22 @@ def output_schema_fingerprint(cfg: FilterConfig) -> dict:
     }
 
 
+# The value each output-schema facet had before it was added to the
+# fingerprint: a checkpoint written by an earlier code revision lacks the
+# facet, and reads as this value. Every key `output_schema_fingerprint`
+# returns must be here (pinned by test).
+FINGERPRINT_COMPAT_DEFAULTS = {
+    "split_labels": [],
+    "assign_aspect_buckets": False,
+    "ppl_bucket_labels": [],
+}
+
+
 def _check_output_schema_fingerprint(checkpoint_dir: str, cfg: FilterConfig) -> None:
     """Write the fingerprint on first run; refuse a resume whose config would
-    change the output schema mid-corpus. Atomic single-file JSON (tmp +
-    replace) — same idempotency shape as _append_parquet's slot writes."""
+    change the output schema mid-corpus. A facet missing from a stored
+    fingerprint reads as its `FINGERPRINT_COMPAT_DEFAULTS` value; a facet this
+    code does not know (written by a later revision) is refused."""
     import json
 
     path = os.path.join(checkpoint_dir, "output_schema.json")
@@ -704,13 +717,14 @@ def _check_output_schema_fingerprint(checkpoint_dir: str, cfg: FilterConfig) -> 
     if os.path.exists(path):
         with open(path) as f:
             prev = json.load(f)
-        # fingerprints written by earlier code revisions lack later-added
-        # facets; a missing key means that facet was OFF (its pre-upgrade
-        # value) — the same missing-reads-as-default rule as the artifact
-        # format_version stamps, so upgrading the code never refuses a
-        # resume whose config and schema are in fact unchanged
-        prev = {**{k: ([] if isinstance(v, list) else False) for k, v in fp.items()},
-                **prev}
+        unknown = sorted(set(prev) - set(FINGERPRINT_COMPAT_DEFAULTS))
+        if unknown:
+            raise ValueError(
+                f"checkpoint {checkpoint_dir} has output-schema facets {unknown} "
+                "this code does not know: it was written by a later code "
+                "revision. Resume it with that revision."
+            )
+        prev = {**FINGERPRINT_COMPAT_DEFAULTS, **prev}
         if prev != fp:
             raise ValueError(
                 "output-schema config changed mid-checkpoint: committed "
@@ -720,10 +734,12 @@ def _check_output_schema_fingerprint(checkpoint_dir: str, cfg: FilterConfig) -> 
             )
         return
     os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(fp, f)
-    os.replace(tmp, path)
+
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            json.dump(fp, f)
+
+    replace_file(path, write)
 
 
 def _bucket_metric_aggs(
@@ -774,8 +790,8 @@ def _bucket_metric_aggs(
 def _append_parquet(pdf, dir_path: str, run_id: str, fname: str | None = None) -> None:
     """Append one small pandas frame as a parquet file. Default filename is
     uuid-randomized (append-only); pass `fname` for an IDEMPOTENT slot — a
-    retry overwrites the same file via atomic os.replace instead of appending
-    a duplicate (the streaming metrics path keys on batch_id this way)."""
+    retry replaces the same file instead of appending a duplicate (the
+    streaming metrics path keys on batch_id this way)."""
     import uuid
 
     import pyarrow as pa
@@ -783,10 +799,8 @@ def _append_parquet(pdf, dir_path: str, run_id: str, fname: str | None = None) -
 
     os.makedirs(dir_path, exist_ok=True)
     fname = fname or f"part-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
-    final = os.path.join(dir_path, fname)
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:6]}"
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-    os.replace(tmp, final)
+    table = pa.Table.from_pandas(pdf, preserve_index=False)
+    replace_file(os.path.join(dir_path, fname), lambda tmp: pq.write_table(table, tmp))
 
 
 def _write_checkpoint(checkpoint_dir: str, cfg: FilterConfig, pending: list[int], m: dict) -> None:

@@ -19,6 +19,7 @@ scan work, which is what checkpoint-resume needs.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -179,6 +180,28 @@ class TableIO:
             ).isin(buckets)
             return df.filter(pred)
         return df.filter(F.col("_bucket").isin(buckets))
+
+    # ---------- table-group commit marker (see sources/commit.py) ----------
+
+    def _group_marker(self, group: str) -> str:
+        # under `warehouse` on both backends; the leading `_` keeps dataset
+        # readers of the warehouse from listing it
+        return os.path.join(self.warehouse, f"_{group}.writing")
+
+    @contextmanager
+    def writing_group(self, group: str):
+        """Mark the table group `group` in progress for the duration of the
+        block. The mark is cleared only when the block completes, so a writer
+        that dies between two of the group's table writes leaves it behind."""
+        os.makedirs(self.warehouse, exist_ok=True)
+        open(self._group_marker(group), "w").close()
+        yield
+        os.remove(self._group_marker(group))
+
+    def group_torn(self, group: str) -> bool:
+        """True iff a `writing_group(group)` block began and never finished:
+        the group's tables may mix old and new state, and readers refuse it."""
+        return os.path.exists(self._group_marker(group))
 
     def exists(self, name: str) -> bool:
         if self.use_iceberg:

@@ -280,7 +280,8 @@ def run_stream_filter(
         # runtime; AQE's AQEPropagateEmptyRelation then replaces the subtree
         # and the CollectMetrics row is never delivered — obs.get fails on an
         # empty observation (the snapshot's known partition stats make the
-        # emptiness visible to AQE; bench_hamming.py hits the same behavior).
+        # emptiness visible to AQE; `dedup.candidate_counts` hits the same
+        # behavior).
         # Exclude that single rule around this write; AQE itself stays on. Set
         # on the micro-batch's own session (NOT the closure's `spark`: the
         # query runs in a clone of it).

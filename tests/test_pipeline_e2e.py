@@ -1212,6 +1212,47 @@ def test_fingerprint_missing_key_reads_as_default(tmp_path):
         )
 
 
+def test_fingerprint_missing_known_keys_filled_from_compat_table(tmp_path):
+    """Every facet the fingerprint holds has a compat default, and a forged
+    fingerprint that lacks facets is read with those defaults filled in: it
+    resumes under the default config and is refused under a config whose
+    missing facet differs from its default."""
+    import json
+
+    from data_quality_check_spark.pipeline.run import (
+        FINGERPRINT_COMPAT_DEFAULTS,
+        _check_output_schema_fingerprint,
+        output_schema_fingerprint,
+    )
+
+    assert set(FINGERPRINT_COMPAT_DEFAULTS) == set(output_schema_fingerprint(FilterConfig()))
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(ckpt)
+    with open(os.path.join(ckpt, "output_schema.json"), "w") as f:
+        json.dump({"ppl_bucket_labels": []}, f)
+    _check_output_schema_fingerprint(ckpt, FilterConfig())  # no raise
+    with pytest.raises(ValueError, match="output-schema config changed"):
+        _check_output_schema_fingerprint(ckpt, FilterConfig(assign_aspect_buckets=True))
+
+
+def test_fingerprint_unknown_key_refused_by_name(tmp_path):
+    """A facet this code does not know (a checkpoint written by a later code
+    revision) is refused with a message that names it, not reported as a
+    config change."""
+    import json
+
+    from data_quality_check_spark.pipeline.run import _check_output_schema_fingerprint
+
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(ckpt)
+    fp = {"split_labels": [], "assign_aspect_buckets": False,
+          "ppl_bucket_labels": [], "future_facet": True}
+    with open(os.path.join(ckpt, "output_schema.json"), "w") as f:
+        json.dump(fp, f)
+    with pytest.raises(ValueError, match="'future_facet'.*later code revision"):
+        _check_output_schema_fingerprint(ckpt, FilterConfig())
+
+
 def test_f1_gate_label_duplicates_and_contradictions(spark, tmp_path):
     """Duplicate label rows must not double-count confusion cells: exact
     repeats collapse to one vote; contradictory repeats (keep AND drop for one
