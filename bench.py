@@ -235,34 +235,41 @@ def bench_queries(spark) -> "tuple[dict[str, float], float, dict[str, dict], flo
         + (f"cache hit in {dt0}s — bootstrap not measured this run"
            if bootstrap_cached else f"{bootstrap_sec}s")
     )
-    from data_quality_check_spark.operators.dedup import candidate_counts, release_pins
+    from data_quality_check_spark.record import run_record
 
-    candidates: dict[str, dict[str, int]] = {}
+    candidates: dict[str, dict[str, int | None]] = {}
+    reasons: dict[str, dict[str, str]] = {}
     for name, fn in ((n, qs[n]) for n in ordered):
-        t0 = time.perf_counter()
-        rows = fn(spark, DATA_DIR).collect()
-        dt = time.perf_counter() - t0
+        # one run record per query: it holds the query's candidate-count
+        # observations (VERDICT r2 item 7 — banding-config regressions
+        # surface in BENCH, not in silently burned cluster time) and releases
+        # its signature/label pins on exit, so 100+ queries in one session
+        # don't accumulate storage blocks until eviction
+        with run_record() as rec:
+            t0 = time.perf_counter()
+            rows = fn(spark, DATA_DIR).collect()
+            dt = time.perf_counter() - t0
+            cc = rec.candidates()
+            if cc:
+                candidates[name] = cc
+                reasons[name] = rec.candidate_reasons()
         times[name] = round(dt, 3)
         total += dt
-        # candidate-volume observability (VERDICT r2 item 7): banded candidate
-        # generators observe() their pre-verify pair counts; record them per
-        # query so banding-config regressions surface in BENCH, not in silently
-        # burned cluster time
-        cc = candidate_counts()
-        if cc:
-            candidates[name] = cc
-        # free signature/label caches pinned by dedup queries so 36+ queries in
-        # one session don't accumulate storage blocks until eviction
-        release_pins()
         log(f"[bench] {name}: {dt:.3f}s ({len(rows)} rows)"
             + (f" candidates={cc}" if cc else ""))
-    return times, total, candidate_fractions(spark, candidates), bootstrap_sec
+    fractions = candidate_fractions(spark, candidates, reasons)
+    return times, total, fractions, bootstrap_sec
 
 
-def candidate_fractions(spark, candidates: dict[str, dict[str, int]]) -> dict:
+def candidate_fractions(
+    spark,
+    candidates: dict[str, dict[str, int | None]],
+    reasons: dict[str, dict[str, str]],
+) -> dict:
     """candidate pairs / n(n-1)/2 per observed query — n is the candidate
     universe of that query's banded op (documents for text dedup, the planted
-    gate table for embedding LSH)."""
+    gate table for embedding LSH). A count that could not be read stays
+    in the table as null, with the reason the run record gave."""
     from data_quality_check_spark import gate_fixtures as GF
     from data_quality_check_spark.entry_queries import (
         ASYM_PLANT_MOD as GF_ASYM_MOD,
@@ -299,11 +306,14 @@ def candidate_fractions(spark, candidates: dict[str, dict[str, int]]) -> dict:
     out: dict[str, dict] = {}
     for qname, cc in candidates.items():
         for op, cnt in cc.items():
-            if op in denom_of and denom_of[op] > 0:
-                out.setdefault(qname, {})[op] = {
-                    "candidates": cnt,
-                    "fraction": round(cnt / denom_of[op], 5),
-                }
+            if op not in denom_of or denom_of[op] <= 0:
+                continue
+            if cnt is None:
+                entry = {"candidates": None, "fraction": None,
+                         "reason": reasons[qname][op]}
+            else:
+                entry = {"candidates": cnt, "fraction": round(cnt / denom_of[op], 5)}
+            out.setdefault(qname, {})[op] = entry
     return out
 
 
@@ -345,15 +355,13 @@ def bench_pipeline(spark, fixture: str, reps: int = 5) -> dict:
     (<1.5 busy cores, up to 5 min wait — a dedicated cluster node has no
     co-tenant), reporting the MEDIAN with all rep times + the external-core
     figure each rep actually ran against, plus the median rep's per-stage
-    breakdown (run.STEP_TIMINGS)."""
-    from data_quality_check_spark.pipeline import run as RUN
+    breakdown (the steps of its run record, from the run summary)."""
     from data_quality_check_spark.pipeline.run import FilterConfig, run_filter
 
     results = []  # (dt, summary, ext_cores, stage_timings)
     for rep in range(reps + 1):
         ext = 0.0 if rep == 0 else _wait_for_quiet()
         out = tempfile.mkdtemp(prefix="dqcs_bench_out_")
-        RUN.STEP_TIMINGS.clear()
         try:
             t0 = time.perf_counter()
             summary = run_filter(
@@ -369,7 +377,7 @@ def bench_pipeline(spark, fixture: str, reps: int = 5) -> dict:
         log(f"[bench] pipeline rep {rep}{' (warmup)' if rep == 0 else ''}: "
             f"{dt:.3f}s ext_cores={ext}")
         if rep > 0:
-            results.append((dt, summary, ext, list(RUN.STEP_TIMINGS)))
+            results.append((dt, summary, ext, summary["steps"]))
     by_time = sorted(results, key=lambda r: r[0])
     dt, summary, _, stages = by_time[len(by_time) // 2]  # median rep
     rows = summary["rows_in"] or 0

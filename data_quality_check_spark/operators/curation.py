@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from data_quality_check_spark.operators.dedup import shingles_col, shingles_sql
+from data_quality_check_spark.record import current
 
 # Deterministic LCG scramble (Knuth/glibc constants) used as the "random"
 # sampling key so Spark and the DuckDB oracle order rows identically.
@@ -474,11 +475,9 @@ def dedup_survivors(
     partitioning take over. Output is identical on both paths
     (tests/test_curation.py pins it).
     """
-    from data_quality_check_spark.operators.dedup import _pin
-
     # the election feeds BOTH the loser anti-join and the winner flag join —
     # pin it so the corpus-clusters join + window run once, not per branch
-    elected = _pin(keep_best(df, clusters, id_col, quality_col))
+    elected = current().pin(keep_best(df, clusters, id_col, quality_col))
     small = elected.count() <= max_broadcast_ids
     hint = F.broadcast if small else (lambda d: d)
     losers = elected.filter(~F.col("keep")).select(id_col)

@@ -22,174 +22,19 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from data_quality_check_spark.functions.text import fingerprint_col
-
-
-_PINNED: list = []  # frames pinned by _pin/localCheckpoint awaiting release
-
-# thread-local stack of active pin_scope() registries (VERDICT r3 item 8):
-# inside a scope, _pin registers to the scope instead of the process-global
-# list, so concurrent drivers each release exactly their own pins
-import threading as _threading
-
-_PIN_SCOPES = _threading.local()
-
-# Candidate-volume observability (VERDICT r2 item 7): every banded candidate
-# generator routes its pre-verify pair frame through observe_candidates(), so
-# the candidate count rides along with the consuming action (an `observe` node
-# costs one long per task — no extra job). bench.py reads the counts after each
-# query and reports candidate/total-pair fractions in BENCH.md, so a banding
-# config regression surfaces in the bench record instead of silently burning
-# cluster time.
-CANDIDATE_OBS: dict[str, object] = {}
-
-
-def observe_candidates(cand: DataFrame, op: str) -> DataFrame:
-    """Attach a named candidate-count observation to a candidate-pair frame."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    CANDIDATE_OBS[op] = obs
-    return cand.observe(obs, F.count(F.lit(1)).alias("candidates"))
-
-
-def candidate_counts(reset: bool = True) -> dict[str, int]:
-    """Candidate counts from observations whose action has completed; entries
-    whose plan never executed are skipped (never blocks).
-
-    Uses the JVM observation's non-blocking `getOrEmpty` (scala Map → `apply`
-    for the value — `get` would hand back an Option object), falling back to
-    the equally non-blocking `getRowOrEmpty` + positional get: under AQE at
-    large scale the listener can deliver the metrics row WITHOUT a schema, and
-    `getOrEmpty` then NPEs mapping names (observed at 10⁷-row hamming runs) —
-    the row itself still carries the value, and observe_candidates attaches
-    exactly ONE metric, so position 0 is it. There is deliberately NO fallback
-    to the blocking `Observation.get`: on a runtime without `_jo` (e.g. Spark
-    Connect) an un-executed observation would hang forever, so absent the
-    non-blocking accessors the count is simply skipped.
-
-    Known gap (best-effort by design): when the consuming query's RESULT is
-    empty, AQE's `AQEPropagateEmptyRelation` re-plans the downstream stages to
-    an empty LocalRelation after the candidate stage already ran, and the
-    metrics row is delivered EMPTY (size 0, schema null) — both accessors
-    throw and the count is skipped. Real dedup corpora return pairs, so this
-    only bites all-unique inputs; a measurement harness that needs the count
-    on empty results excludes that one rule via
-    `spark.sql.adaptive.optimizer.excludedRules` (as the streaming filter's
-    metrics write does) — verified to restore exact counts without disabling
-    AQE itself."""
-    out: dict[str, int] = {}
-    for op, obs in list(CANDIDATE_OBS.items()):
-        jo = getattr(obs, "_jo", None)
-        if jo is not None:
-            try:
-                jmap = jo.getOrEmpty()
-                if jmap.size() > 0:
-                    out[op] = int(jmap.apply("candidates"))
-            except Exception:
-                try:
-                    jrow = jo.getRowOrEmpty()
-                    if jrow.isDefined():
-                        out[op] = int(jrow.get().get(0))
-                except Exception:
-                    pass
-        if reset:
-            CANDIDATE_OBS.pop(op, None)
-    return out
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Persist a signature/token DataFrame that feeds both sides of a self-join.
-
-    Without this, Catalyst plans the tokenize/signature lineage once per join
-    side (ReusedExchange can't fire across a broadcast + shuffle pair), so the
-    expensive shingle/hash work runs 2-4x. MEMORY_AND_DISK spills cleanly; at
-    10^12-row scale the same role is played by materializing signatures to an
-    intermediate bucketed table instead of executor memory.
-
-    Every pinned frame is registered; call `release_pins()` after the consuming
-    action so long-lived sessions (bench.py runs 36+ queries in one session)
-    free storage memory deterministically instead of waiting for eviction
-    (ADVICE r1). Inside a `pin_scope()` block the frame registers to that
-    scope instead, so concurrent threads don't release each other's pins."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    stack = getattr(_PIN_SCOPES, "stack", None)
-    (stack[-1] if stack else _PINNED).append(df)
-    return df
+from data_quality_check_spark.record import ambient, current, release_snapshot, run_record
 
 
 def release_pins() -> int:
-    """Unpersist every frame pinned since the last call; returns how many.
-    Safe any time: pinned frames are plain persists, so blocks are recomputed
-    on demand if a lazy plan still references a released pin (correctness
-    never depends on the cache). localCheckpoint'd frames are deliberately
-    NOT registered here — their truncated lineage cannot recompute.
+    """Release the calling thread's ambient run record: unpersist every frame
+    pinned outside any `run_record()` block since the last call; returns how
+    many. Safe any time: pins are plain persists, so a lazy plan that still
+    references a released pin recomputes its blocks. Code that runs queries
+    from several threads opens a `run_record()` per query instead."""
+    return ambient().release()
 
-    Concurrency contract (ADVICE r2): _PINNED is process-global, so this
-    assumes the session runs queries single-threaded (the driver/bench/test
-    model). Releasing from one thread while another's query is mid-flight is
-    still CORRECT (recompute-safe) but forfeits that query's self-join dedup
-    benefit; concurrent drivers wrap each query in `pin_scope()` instead."""
-    return _release_list(_PINNED)
-
-
-def _release_list(frames: list) -> int:
-    n = 0
-    while frames:
-        df = frames.pop()
-        try:
-            df.unpersist()  # no-op for localCheckpoint'd frames …
-            n += 1
-        except Exception:
-            pass
-        _release_local_checkpoint(df)  # … which this handles (and vice versa)
-    return n
-
-
-from contextlib import contextmanager as _contextmanager
-
-
-@_contextmanager
-def pin_scope():
-    """Scope pin registration to this block AND this thread (VERDICT r3
-    item 8): frames pinned inside register to the scope, not the process-global
-    list, and are released on exit — so concurrent library threads can each run
-    queries without forfeiting (or clobbering) each other's self-join pins.
-
-        with pin_scope():
-            pairs = minhash_lsh_pairs(df, ...).collect()
-        # this thread's signature pins are released here; other threads'
-        # pins (scoped or global) are untouched
-
-    Scopes nest (innermost wins); the global `release_pins()` contract is
-    unchanged for single-threaded drivers."""
-    stack = getattr(_PIN_SCOPES, "stack", None)
-    if stack is None:
-        stack = []
-        _PIN_SCOPES.stack = stack
-    scope: list = []
-    stack.append(scope)
-    try:
-        yield
-    finally:
-        stack.remove(scope)
-        _release_list(scope)
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint'd frame's storage blocks immediately.
-
-    `unpersist()` is a no-op for checkpoint RDDs; without this the per-round
-    label tables of connected_components accumulate until JVM GC +
-    ContextCleaner get around to them (ADVICE r1). Reaches the checkpointed
-    RDD through the LogicalRDD plan node; if the backend/plan shape differs
-    (Spark Connect), silently fall back to GC-driven cleanup."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 # Mersenne prime 2^31-1: (a·x + b) with a, b, x < 2^31 stays under 2^63 — no
 # int64 overflow under Spark's ANSI arithmetic.
@@ -569,8 +414,8 @@ def containment_pairs_banded(
     and the recall envelope land in the bench evidence, same as the other
     banded stages. Every emitted pair carries exact full-set values — the
     confirm can only drop candidates, never distort."""
-    base = _pin(_shingle_base(df, id_col, text_col, ngram))
-    banded = _pin(_minhash_band_table(base, num_hashes, bands))
+    base = current().pin(_shingle_base(df, id_col, text_col, ngram))
+    banded = current().pin(_minhash_band_table(base, num_hashes, bands))
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(b, ["band", "bkey"])
@@ -578,7 +423,7 @@ def containment_pairs_banded(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    cands = observe_candidates(cands, "containment_banded")
+    cands = current().observe_candidates(cands, "containment_banded")
     return _confirm_containment(cands, base, threshold)
 
 
@@ -671,7 +516,7 @@ def containment_pairs_asym(
     bench_details.json like every banded stage."""
     from pyspark.sql import Window
 
-    base = _pin(_shingle_base(df, id_col, text_col, ngram))
+    base = current().pin(_shingle_base(df, id_col, text_col, ngram))
     toks = base.select(
         "id", F.size("toks").alias("sz"), F.explode("toks").alias("tok")
     ).withColumn("fp", F.xxhash64("tok"))
@@ -702,7 +547,7 @@ def containment_pairs_asym(
         .select("id_a", "id_b")
         .distinct()
     )
-    cands = observe_candidates(cands, "containment_asym")
+    cands = current().observe_candidates(cands, "containment_asym")
     confirmed = _confirm_containment(cands, base, threshold)
     # canonical id_a < id_b orientation (the probe side was the smaller doc)
     return confirmed.select(
@@ -810,7 +655,7 @@ def duplicate_span_stats(
         # truncation, so engines agree exactly).
         F.expr("CAST(conv(substr(md5(_s), 1, 15), 16, 10) AS BIGINT)").alias("sp"),
     )
-    dup_sp = _pin(
+    dup_sp = current().pin(
         spans.groupBy("sp")
         .agg(F.count_distinct("id").alias("nd"))
         .filter(F.col("nd") >= min_docs)
@@ -1049,9 +894,9 @@ def minhash_lsh_pairs(
     """
     # base feeds THREE consumers (the band table + both confirm sides) — pin
     # it, same as dedup_incremental pins base_new for exactly this role
-    base = _pin(_shingle_base(df, id_col, text_col, ngram))
+    base = current().pin(_shingle_base(df, id_col, text_col, ngram))
     banded = _minhash_band_table(base, num_hashes, bands)
-    banded = _pin(banded)  # the 126-min signature agg must not run once per join side
+    banded = current().pin(banded)  # the 126-min signature agg must not run once per join side
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(b, ["band", "bkey"])
@@ -1059,7 +904,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    cands = observe_candidates(cands, "minhash_lsh_pairs")
+    cands = current().observe_candidates(cands, "minhash_lsh_pairs")
     # confirm with exact Jaccard on the candidate set only
     return _confirm_jaccard(cands, base, base, threshold)
 
@@ -1172,8 +1017,8 @@ def dedup_incremental(
         "_min_id", F.min("id").over(Window.partitionBy("fp"))
     )
 
-    base_new = _pin(_shingle_base(new_df, id_col, text_col, ngram))
-    banded_new = _pin(_minhash_band_table(base_new, num_hashes, bands))
+    base_new = current().pin(_shingle_base(new_df, id_col, text_col, ngram))
+    banded_new = current().pin(_minhash_band_table(base_new, num_hashes, bands))
 
     cand_seen = (
         banded_new.alias("a")
@@ -1181,13 +1026,13 @@ def dedup_incremental(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    cand_seen = observe_candidates(cand_seen, "dedup_incremental_cross")
+    cand_seen = current().observe_candidates(cand_seen, "dedup_incremental_cross")
     if seen_artifacts is not None:
         # the confirm needs seen shingle sets ONLY for candidate ids — pin the
         # (tiny) candidate table so its band-join lineage runs once, and
         # restrict the stored toks table map-side with a broadcast semi-join
         # (scan-only: no corpus shuffle, no tokenization)
-        cand_seen = _pin(cand_seen)
+        cand_seen = current().pin(cand_seen)
         toks_seen = toks_seen.join(
             F.broadcast(cand_seen.select(F.col("id_b").alias("id")).distinct()),
             "id",
@@ -1207,7 +1052,7 @@ def dedup_incremental(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    cand_new = observe_candidates(cand_new, "dedup_incremental_self")
+    cand_new = current().observe_candidates(cand_new, "dedup_incremental_self")
     near_new = (
         _confirm_jaccard(cand_new, base_new, base_new, threshold)
         .select(F.col("id_b").alias("id"))
@@ -1441,10 +1286,10 @@ class SeenCorpusArtifacts:
         # verdicts instead of seeing its own crashed attempt as "the corpus"
         tok = F.lit(token).cast("string")
         fps = fps.withColumn("_token", tok)
-        # base feeds two writes (toks + bands): persist locally rather than via
-        # _pin so a library caller's pinned frames aren't swept mid-query
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        # base feeds two writes (toks + bands): pinned in its own record, so
+        # it is released here and a caller's pins are not swept mid-query
+        with run_record() as rec:
+            base = rec.pin(base)
             bands = _minhash_band_table(base, self.num_hashes, self.bands).withColumn(
                 "_token", tok
             )
@@ -1480,8 +1325,6 @@ class SeenCorpusArtifacts:
                     toks, self._t("toks"), bucket_col="id", num_buckets=self.toks_buckets
                 )
                 self.io.append(bands, self._t("bands"))
-        finally:
-            base.unpersist()
 
     def init(self, seen_df: DataFrame, id_col: str, text_col: str) -> None:
         """Build all artifacts from a bootstrap corpus — the one O(corpus) pass."""
@@ -1519,11 +1362,9 @@ class SeenCorpusArtifacts:
         about (re-collect `committed_df` after append and it will see itself
         in the corpus — by design)."""
         self.check_config(self.num_hashes, self.bands, self.ngram)
-        snap = committed_df.select(id_col, text_col).localCheckpoint(eager=True)
-        try:
+        with run_record() as rec:
+            snap = rec.snapshot(committed_df.select(id_col, text_col))
             self._write(snap, id_col, text_col, "append", token=token)
-        finally:
-            _release_local_checkpoint(snap)
 
     def append_once(
         self,
@@ -1688,15 +1529,13 @@ class SeenCorpusArtifacts:
             before = src.count()
             # eager snapshot BEFORE the overwrite: the rewrite reads the very
             # files it replaces, and a lazy plan would scan a half-deleted dir
-            snap = _absorb(src, key_cols).localCheckpoint(eager=True)
-            try:
+            with run_record() as rec:
+                snap = rec.snapshot(_absorb(src, key_cols))
                 after = snap.count()
                 if suffix == "toks":
                     self.io.write_bucketed(snap, name, "id", self.toks_buckets)
                 else:
                     self.io.overwrite(snap, name)
-            finally:
-                _release_local_checkpoint(snap)
             stats[suffix] = {"before": before, "after": after}
         # compact doubles as the meta-stamp migration — but ONLY for metas
         # that lack the stamp (check_config above already proved the layout IS
@@ -1806,7 +1645,7 @@ def hamming_near_pairs(
     for hot buckets grows from 2^16 to ~2^28. Per-bucket candidate volume
     drops from |bucket|²/2 to Σ|sub-bucket|²/2 (~|bucket|²·4/2^12 on random
     complements). Candidates (both routes) are observe()d as
-    `hamming_near_pairs` (see candidate_counts); `bucket_cap=None` disables
+    `hamming_near_pairs` (see `RunRecord.candidates`); `bucket_cap=None` disables
     escalation for oracle-shaped one-level runs.
 
     Only (chunk, ckey, id, sig) rows shuffle; the signature table is pinned so
@@ -1816,7 +1655,7 @@ def hamming_near_pairs(
     width = 64 // n_chunks
     sig = sig.select(F.col(id_col).alias("id"), F.col(sig_col).alias("_sig"))
     if pin:
-        sig = _pin(sig)
+        sig = current().pin(sig)
 
     def _w(i: int) -> int:
         # last chunk absorbs the remainder bits
@@ -1856,7 +1695,7 @@ def hamming_near_pairs(
         a, b = chunks.alias("a"), chunks.alias("b")
         cand = _pair_cols(a.join(b, ["chunk", "ckey"]))
     else:
-        chunks = _pin(chunks)  # feeds the size agg + both routes' join sides
+        chunks = current().pin(chunks)  # feeds the size agg + both routes' join sides
         big = (
             chunks.groupBy("chunk", "ckey")
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -1920,7 +1759,7 @@ def hamming_near_pairs(
         cand_big = _pair_cols(ba.join(bb, ["chunk", "ckey", "sub", "skey"]))
         cand = cand_small.unionByName(cand_big)
 
-    cand = observe_candidates(cand, "hamming_near_pairs")
+    cand = current().observe_candidates(cand, "hamming_near_pairs")
     return cand.filter(F.col("hamming") <= max_hamming).distinct()
 
 
@@ -2017,17 +1856,17 @@ def connected_components(
                 .localCheckpoint(eager=True)
             )
             changed = int(obs.get["changed"])
-            _release_local_checkpoint(labels)
+            release_snapshot(labels)
             labels = new_labels
             if changed == 0:
-                # NOT registered in _PINNED: a released localCheckpoint cannot
+                # NOT a run-record snapshot: a released localCheckpoint cannot
                 # be recomputed (lineage truncated), and the caller still has
                 # actions to run on this frame. Its single small block is
                 # GC-reclaimed once the caller drops the reference.
                 return labels
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     finally:
-        _release_local_checkpoint(sym)
+        release_snapshot(sym)
 
 
 def neardup_clusters(

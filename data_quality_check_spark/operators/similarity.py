@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from data_quality_check_spark.record import current, run_record
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(
@@ -123,9 +125,7 @@ def neardup_pairs_blocked(
     the rounded cosine is bit-identical to cosine_col's. The normed projection
     is pinned: it feeds BOTH self-join sides, and without the pin Catalyst
     plans the scan + norm fold once per side."""
-    from data_quality_check_spark.operators.dedup import _pin
-
-    normed = _pin(df.select(
+    normed = current().pin(df.select(
         F.col(block_col).alias("blk"),
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -458,15 +458,13 @@ def neardup_pairs_lsh(
     only (band, chunk, id) rows shuffle for candidate generation — vectors
     join back by id for the confirm, so the wide embedding column never rides
     the banded exchange (the MinHash-LSH shape, dedup.py). The candidate
-    count is observe()d as `neardup_pairs_lsh` (dedup.candidate_counts) and
+    count is observe()d as `neardup_pairs_lsh` (`RunRecord.candidates`) and
     a fraction test pins it ≤ 5% of n(n−1)/2 on the gate data.
 
     Thresholds below MIN_LSH_THRESHOLD raise: SRP banding cannot prune there
     (at τ=0.35, p=0.61 vs 0.50 random — every config is all-pairs in
     disguise). Low-τ requests route to `neardup_pairs_blocked` (explicit
     blocking column) or `neardup_pairs_ivf` (IVF-cell blocking)."""
-    from data_quality_check_spark.operators.dedup import _pin, observe_candidates
-
     if threshold < MIN_LSH_THRESHOLD:
         raise ValueError(
             f"neardup_pairs_lsh cannot prune at threshold={threshold} "
@@ -477,7 +475,7 @@ def neardup_pairs_lsh(
         )
     planes = srp_planes(bands * bits_per_band, dim, seed)
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    chunks = _pin(_srp_chunk_table(vecs, planes, bands, dim))
+    chunks = current().pin(_srp_chunk_table(vecs, planes, bands, dim))
     a = chunks.select(F.col("band"), F.col("chunk"), F.col("id").alias("id_a"))
     b = chunks.select(F.col("band"), F.col("chunk"), F.col("id").alias("id_b"))
     cand = (
@@ -489,7 +487,7 @@ def neardup_pairs_lsh(
         .select("id_a", "id_b")
         .distinct()
     )
-    cand = observe_candidates(cand, "neardup_pairs_lsh")
+    cand = current().observe_candidates(cand, "neardup_pairs_lsh")
     # Precompute each vector's norm ONCE before the pair join: the confirm then
     # costs one dot-product fold per candidate pair instead of three (dot +
     # both norms) — same float64 operations as cosine_col, just hoisted, so the
@@ -497,7 +495,7 @@ def neardup_pairs_lsh(
     # nrm > 0 also excludes NULL/zero vectors (undefined cosine — and a zero
     # norm would abort the job under ANSI division); wrong-width vectors never
     # reach here, srp_chunks_udf masks them out of the candidate stage
-    normed = _pin(
+    normed = current().pin(
         vecs.select("id", "v", _norm(F.col("v")).alias("nrm")).filter(F.col("nrm") > 0)
     )
     va = normed.select(
@@ -738,18 +736,13 @@ def ivf_maintenance(
     """
     if action not in ("rebuild", "report"):
         raise ValueError(f"action must be 'rebuild' or 'report', got {action!r}")
-    from data_quality_check_spark.operators.dedup import (
-        _pin,
-        _release_local_checkpoint,
-        pin_scope,
-    )
     from data_quality_check_spark.operators.drift import categorical_drift
 
     cents = ivf_load_centroids(io, name)
-    # every pin taken below (`assigned`, and any the rebuild takes) is
-    # released on exit, whichever action ran
-    with pin_scope():
-        assigned = _pin(_ivf_assigned(new_df, cents, id_col, vec_col))
+    # every pin and snapshot taken below (`assigned`, the rebuild's corpus,
+    # and any pin the rebuild takes) is released on exit, whichever action ran
+    with run_record() as rec:
+        assigned = rec.pin(_ivf_assigned(new_df, cents, id_col, vec_col))
         index_cells = io.read(f"{name}.vectors").select("cell")
         cells = categorical_drift(index_cells, assigned.select("cell"), "cell").collect()
         psi = round(sum(r["psi_term"] for r in cells), 6)
@@ -767,19 +760,15 @@ def ivf_maintenance(
             # eager snapshot BEFORE the overwrite (the compact() rule): the
             # rebuild's union reads the very vectors files ivf_build_index
             # replaces, and a lazy plan would scan a half-deleted directory
-            corpus = (
+            corpus = rec.snapshot(
                 io.read(f"{name}.vectors")
                 .select(F.col("id").alias(id_col), F.col("v").alias(vec_col))
                 .unionByName(new_df.select(F.col(id_col), F.col(vec_col)))
-                .localCheckpoint(eager=True)
             )
-            try:
-                ivf_build_index(
-                    io, corpus, name, n_centroids=k, sample_size=sample_size,
-                    iters=iters, seed=seed, id_col=id_col, vec_col=vec_col,
-                )
-            finally:
-                _release_local_checkpoint(corpus)
+            ivf_build_index(
+                io, corpus, name, n_centroids=k, sample_size=sample_size,
+                iters=iters, seed=seed, id_col=id_col, vec_col=vec_col,
+            )
             action_taken = "rebuilt"
         else:
             # in-distribution: the plain O(increment) append path. The pinned
@@ -839,9 +828,7 @@ def ann_ivf_topk_indexed(
     q = queries.withColumn(
         "cell", F.explode(ivf_probe_udf(cents, nprobe)(F.col(qvec_col)))
     )
-    from data_quality_check_spark.operators.dedup import _pin
-
-    q = _pin(q)  # feeds the probe-cell collect AND the candidate join
+    q = current().pin(q)  # feeds the probe-cell collect AND the candidate join
     cells = sorted(r["cell"] for r in q.select("cell").distinct().collect())
     cand = (
         io.read(f"{name}.vectors")
@@ -942,14 +929,14 @@ def semdedup(
     that carries no broadcast hint — AQE picks broadcast vs shuffle from the
     actual group count. Like neardup_pairs_ivf, a pair split across two cells
     is missed BY DESIGN (that is SemDeDup's own approximation)."""
-    from data_quality_check_spark.operators.dedup import _clusters_from_pairs, _pin
+    from data_quality_check_spark.operators.dedup import _clusters_from_pairs
 
     cents = ivf_train_centroids(
         df, n_centroids, sample_size, seed=seed, id_col=id_col, vec_col=vec_col
     )
     # pinned: feeds BOTH the pair stage and the member join below — without
     # the pin the assignment UDF lineage is re-executed per consumer
-    assigned = _pin(
+    assigned = current().pin(
         df.select(id_col, vec_col)
         .withColumn("_asg", ivf_assign_sim_udf(cents)(F.col(vec_col)))
         .select(

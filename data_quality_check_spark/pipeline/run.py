@@ -59,7 +59,6 @@ from __future__ import annotations
 import os
 import sys
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 if __package__ in (None, ""):  # spark-submit runs this file as a plain script;
@@ -76,6 +75,7 @@ from data_quality_check_spark.pipeline.heuristics import (
     trim_col,
     with_flags,
 )
+from data_quality_check_spark.record import current, run_record
 from data_quality_check_spark.sources.commit import replace_file
 
 DATA_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
@@ -116,27 +116,6 @@ DROP_REASONS = [
 MIXTURE_GROUP_COL = "lang"
 CONTAMINATION_NGRAM = 3
 PPL_BUCKET_LABELS = ("head", "middle", "tail")
-
-
-# (step, sec) per _step, newest last. Holds ONE job's stages: run_filter
-# truncates it at entry, so a long-lived session never accumulates unboundedly
-# and a reader always sees the latest run only (bench.py snapshots it per rep;
-# concurrent run_filter calls in one process would interleave — the documented
-# single-threaded-session model, same as release_pins()).
-STEP_TIMINGS: list[tuple[str, float]] = []
-
-
-@contextmanager
-def _step(name: str):
-    """Wall-time a job step: always recorded into STEP_TIMINGS (bench.py reads
-    the per-stage breakdown from there), echoed to stderr when
-    SPARK_GRAFT_TIMING is set."""
-    t0 = time.perf_counter()
-    yield
-    dt = time.perf_counter() - t0
-    STEP_TIMINGS.append((name, dt))
-    if os.environ.get("SPARK_GRAFT_TIMING"):
-        print(f"[timing] {name}: {dt:.2f}s", file=sys.stderr, flush=True)
 
 
 @dataclass
@@ -278,13 +257,11 @@ def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> list[int]:
 
 def _gated(df: DataFrame, budget: int) -> tuple[DataFrame, int]:
     """The size gate of every dup-rate-sized table (dup phashes, near-dup
-    acting phashes, dup and contamination decisions): pin it (registry-
-    released, or scoped by `pin_scope()`), count it once, and broadcast-hint
-    it only when its n rows fit `budget` — past it the join shuffles instead
-    of shipping the table to every executor. Returns (table, n)."""
-    from data_quality_check_spark.operators.dedup import _pin
-
-    df = _pin(df)
+    acting phashes, dup and contamination decisions): pin it to the current
+    run record, count it once, and broadcast-hint it only when its n rows fit
+    `budget` — past it the join shuffles instead of shipping the table to
+    every executor. Returns (table, n)."""
+    df = current().pin(df)
     n = df.count()
     return (F.broadcast(df) if n <= budget else df), n
 
@@ -455,9 +432,9 @@ def decide(df: DataFrame, cfg: FilterConfig, dups: DataFrame | None = None) -> D
     and `max_broadcast_decisions` — with run_filter's own decision tables and
     `_gated` size gate, so its verdicts AND its join strategy agree with
     run_filter's for the same config. The streaming twin runs it on every
-    micro-batch. Pins go to the registry (wrap in `pin_scope()` for scoped
-    release). A caller-supplied `dups` is joined as given (hint it yourself
-    if you know it is small)."""
+    micro-batch. Pins go to the current run record (open a `run_record()`
+    to release them with it). A caller-supplied `dups` is joined as given
+    (hint it yourself if you know it is small)."""
     if "rid" not in df.columns:
         df = with_rid(df)
     budget = cfg.max_broadcast_decisions
@@ -860,91 +837,98 @@ def run_filter(
     """Execute (or resume) the filter job. `max_buckets` limits how many pending
     buckets are processed this invocation (used by the kill/resume tests).
 
-    Returns a summary dict {processed_buckets, rows_in, rows_kept}.
+    Returns a summary dict {processed_buckets, rows_in, rows_kept, steps}:
+    `steps` is the run record's [(step, seconds)], in run order. The record
+    also holds every pin of the run and releases them on return.
     """
-    from data_quality_check_spark.operators.dedup import pin_scope
-
     cfg = cfg or FilterConfig()
     if cfg.mixture_weights is not None:
         _mixture_ok_col(cfg)  # validate counts/output_rows BEFORE any Spark work
     _check_output_schema_fingerprint(checkpoint_dir, cfg)
-    STEP_TIMINGS.clear()  # one job's stages only — see the declaration
+    with run_record() as rec:
+        summary = {"processed_buckets": [], "rows_in": 0, "rows_kept": 0,
+                   "steps": rec.steps}
+        with rec.step("read_input"):
+            raw = spark.read.parquet(input_path)
+            # A `_bucket` column discovered from the layout means the input
+            # already IS the production table — partitioned by
+            # bucket(num_buckets, image_id), the parquet stand-in for the
+            # Iceberg bucket transform (cfg.num_buckets must match the layout).
+            # Then the resume filter below is partition pruning and the
+            # bucketed output write needs no shuffle at all: every scan task
+            # holds rows of exactly one bucket. A flat input falls back to
+            # computing the bucket and repartitioning before the write.
+            prebucketed = "_bucket" in raw.columns
+            if prebucketed:
+                _validate_bucket_layout(raw, cfg.num_buckets)
+            else:
+                raw = raw.withColumn("_bucket", bucket_col(num_buckets=cfg.num_buckets))
+            df = with_rid(raw)
 
-    raw = spark.read.parquet(input_path)
-    # A `_bucket` column discovered from the layout means the input already IS
-    # the production table — partitioned by bucket(num_buckets, image_id), the
-    # parquet stand-in for the Iceberg bucket transform (cfg.num_buckets must
-    # match the layout). Then the resume filter below is partition pruning and
-    # the bucketed output write needs no shuffle at all: every scan task holds
-    # rows of exactly one bucket. A flat input falls back to computing the
-    # bucket and repartitioning before the write.
-    prebucketed = "_bucket" in raw.columns
-    if prebucketed:
-        _validate_bucket_layout(raw, cfg.num_buckets)
-    else:
-        raw = raw.withColumn("_bucket", bucket_col(num_buckets=cfg.num_buckets))
-    df = with_rid(raw)
+        with rec.step("read_manifest"):
+            done = completed_buckets(spark, checkpoint_dir)
+        pending = [b for b in range(cfg.num_buckets) if b not in done]
+        if max_buckets is not None:
+            pending = pending[:max_buckets]
+        if not pending:
+            return summary
+        summary["processed_buckets"] = pending
 
-    done = completed_buckets(spark, checkpoint_dir)
-    pending = [b for b in range(cfg.num_buckets) if b not in done]
-    if max_buckets is not None:
-        pending = pending[:max_buckets]
-    if not pending:
-        return {"processed_buckets": [], "rows_in": 0, "rows_kept": 0}
-
-    # dedup decisions come from the FULL input (phash groups span buckets) via a
-    # narrow columnar scan. The decisions table is ~duplicate-rate · n rows, so
-    # its broadcast is size-gated (VERDICT r1 item 4, `_gated`): pinned and
-    # counted (one cheap action over the 3-column lineage — the price of
-    # knowing the size before choosing a join strategy), then either broadcast
-    # whole into ONE write action, or — when the dup rate makes it too large to
-    # ship to every executor — spilled bucket-partitioned next to the
-    # checkpoint, and pending buckets are processed in groups whose
-    # partition-pruned decision slice fits the budget. Decision rows land in
-    # the same _bucket as their data rows (both derive from image_id), so each
-    # group's join is a broadcast of only that group's slice and `bytes` still
-    # never shuffles; on Iceberg the same fallback is a storage-partitioned
-    # join against a bucket(B, image_id) decisions table. Per-group commits
-    # also tighten resume granularity: a kill mid-run loses at most one group.
-    # Contamination verdicts take the same gate; the pin scope releases both.
-    budget = cfg.max_broadcast_decisions
-    spill_dir = os.path.join(checkpoint_dir, "dup_decisions", cfg.run_id)
-    summary = {"processed_buckets": pending, "rows_in": 0, "rows_kept": 0}
-    with pin_scope():
-        dups = decisions_for(df, cfg)
-        contaminated = contamination_decisions(spark, df, cfg)
+        # dedup decisions come from the FULL input (phash groups span buckets)
+        # via a narrow columnar scan. The decisions table is ~duplicate-rate · n
+        # rows, so its broadcast is size-gated (VERDICT r1 item 4, `_gated`):
+        # pinned and counted (one cheap action over the 3-column lineage — the
+        # price of knowing the size before choosing a join strategy), then
+        # either broadcast whole into ONE write action, or — when the dup rate
+        # makes it too large to ship to every executor — spilled
+        # bucket-partitioned next to the checkpoint, and pending buckets are
+        # processed in groups whose partition-pruned decision slice fits the
+        # budget. Decision rows land in the same _bucket as their data rows
+        # (both derive from image_id), so each group's join is a broadcast of
+        # only that group's slice and `bytes` still never shuffles; on Iceberg
+        # the same fallback is a storage-partitioned join against a
+        # bucket(B, image_id) decisions table. Per-group commits also tighten
+        # resume granularity: a kill mid-run loses at most one group.
+        # Contamination verdicts take the same gate; the run record releases
+        # both.
+        budget = cfg.max_broadcast_decisions
+        spill_dir = os.path.join(checkpoint_dir, "dup_decisions", cfg.run_id)
+        with rec.step("decisions_plan"):
+            dups = decisions_for(df, cfg)
+            contaminated = contamination_decisions(spark, df, cfg)
         if contaminated is not None:
-            with _step("contamination_count"):
+            with rec.step("contamination_count"):
                 contaminated, _ = _gated(contaminated, budget)
-        with _step("dup_decisions_count"):
+        with rec.step("dup_decisions_count"):
             dups, n_act = _gated(dups, budget)
         if n_act <= budget:
             groups = [pending]
             slice_for = lambda grp: dups  # noqa: E731 — hinted by the gate
         else:
-            with _step("dup_decisions_spill"):
+            with rec.step("dup_decisions_spill"):
                 (
                     dups.withColumn("_bucket", bucket_col(num_buckets=cfg.num_buckets))
                     .write.mode("overwrite")
                     .partitionBy("_bucket")
                     .parquet(spill_dir)
                 )
-            # Group pending buckets by their ACTUAL per-bucket decision counts
-            # (one tiny aggregate over the already-persisted decisions), not a
-            # uniform n/num_buckets estimate — a skewed bucket could otherwise
-            # push one group's pruned slice past the broadcast budget
-            # (ADVICE r2). Greedy fill: each group's decision sum stays within
-            # max_broadcast_decisions (single oversized buckets get their own
-            # group — their slice is the irreducible minimum).
-            by_bucket = {
-                r["_bucket"]: r["cnt"]
-                for r in dups.withColumn(
-                    "_bucket", bucket_col(num_buckets=cfg.num_buckets)
-                )
-                .groupBy("_bucket")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
+                # Group pending buckets by their ACTUAL per-bucket decision
+                # counts (one tiny aggregate over the already-persisted
+                # decisions), not a uniform n/num_buckets estimate — a skewed
+                # bucket could otherwise push one group's pruned slice past
+                # the broadcast budget (ADVICE r2). Greedy fill: each group's
+                # decision sum stays within max_broadcast_decisions (single
+                # oversized buckets get their own group — their slice is the
+                # irreducible minimum).
+                by_bucket = {
+                    r["_bucket"]: r["cnt"]
+                    for r in dups.withColumn(
+                        "_bucket", bucket_col(num_buckets=cfg.num_buckets)
+                    )
+                    .groupBy("_bucket")
+                    .agg(F.count(F.lit(1)).alias("cnt"))
+                    .collect()
+                }
             groups, cur, cur_n = [], [], 0
             for bkt in pending:
                 c = by_bucket.get(bkt, 0)
@@ -969,7 +953,7 @@ def run_filter(
                 return F.broadcast(sl) if n_grp <= budget else sl
 
         for gi, grp in enumerate(groups):
-            m = _process_group(df, cfg, grp, gi, slice_for(grp), output_dir,
+            m = _process_group(df, cfg, grp, gi, slice_for, output_dir,
                                checkpoint_dir, prebucketed, contaminated)
             summary["rows_in"] += int(m["rows_in"])
             summary["rows_kept"] += int(m["rows_kept"])
@@ -1020,18 +1004,42 @@ def _write_selected(
     if batch_id is not None:
         kept = kept.withColumn("_batch_id", F.lit(int(batch_id)))
         parts = ["_batch_id", "_bucket"]
-    (
-        kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*parts)
-        # rows are bytes-dominated and image bytes are already codec-compressed;
-        # container-level snappy would burn write+read CPU for ~0% size win,
-        # and dictionary encoding would hash every multi-KB blob into a
-        # dictionary that always overflows — pure wasted CPU on this schema
-        .option("compression", "uncompressed")
-        .option("parquet.enable.dictionary", "false")
-        .parquet(path)
+    # A write that keeps NO rows makes the observed plan's kept side empty at
+    # runtime; AQE's AQEPropagateEmptyRelation then replaces the subtree and
+    # the CollectMetrics row is never delivered — obs.get fails on an empty
+    # observation, so the manifest never commits (a flat input's post-shuffle
+    # stage, or a stream micro-batch whose snapshot's partition stats make
+    # the emptiness visible to AQE; `RunRecord.candidates` hits the same
+    # behavior). Exclude that single rule around this write; AQE itself stays
+    # on. Set on the frame's own session (a micro-batch runs in a clone of
+    # the stream's).
+    sess_conf = scored.sparkSession.conf
+    _EXCLUDED = "spark.sql.adaptive.optimizer.excludedRules"
+    _EMPTY_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    prev_excluded = sess_conf.get(_EXCLUDED, None)
+    sess_conf.set(
+        _EXCLUDED,
+        _EMPTY_RULE if not prev_excluded else f"{prev_excluded},{_EMPTY_RULE}",
     )
+    try:
+        (
+            kept.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*parts)
+            # rows are bytes-dominated and image bytes are already
+            # codec-compressed; container-level snappy would burn write+read
+            # CPU for ~0% size win, and dictionary encoding would hash every
+            # multi-KB blob into a dictionary that always overflows — pure
+            # wasted CPU on this schema
+            .option("compression", "uncompressed")
+            .option("parquet.enable.dictionary", "false")
+            .parquet(path)
+        )
+    finally:
+        if prev_excluded is None:
+            sess_conf.unset(_EXCLUDED)
+        else:
+            sess_conf.set(_EXCLUDED, prev_excluded)
     return obs.get
 
 
@@ -1040,7 +1048,7 @@ def _process_group(
     cfg: FilterConfig,
     grp: list[int],
     group_idx: int,
-    dups: DataFrame,
+    slice_for,
     output_dir: str,
     checkpoint_dir: str,
     prebucketed: bool,
@@ -1048,14 +1056,17 @@ def _process_group(
 ) -> dict:
     """Score, write, and checkpoint one group of buckets (the whole pending set
     in broadcast mode) as ONE Spark action with observe() metrics riding along.
+    `slice_for(grp)` gives the group's (hinted) dup-decision table.
 
     Bucket prune: on Iceberg/bucketed-parquet layouts the isin filter is
     partition pruning — each group's action scans only its own files; on a
     flat file it is a pushed-down row filter (every group re-reads the file,
     which is why flat layouts are the test path, never the 10^12 one)."""
-    work = df.filter(F.col("_bucket").isin(grp))
-    scored = finalize(score_rows(work, cfg), cfg, dups, contaminated)
-    with _step(f"score+write g{group_idx}"):
+    rec = current()
+    with rec.step(f"finalize_plan g{group_idx}"):
+        work = df.filter(F.col("_bucket").isin(grp))
+        scored = finalize(score_rows(work, cfg), cfg, slice_for(grp), contaminated)
+    with rec.step(f"score+write g{group_idx}"):
         m = _write_selected(
             scored,
             cfg,
@@ -1065,7 +1076,7 @@ def _process_group(
             prebucketed,
         )
 
-    with _step(f"metrics_write g{group_idx}"):
+    with rec.step(f"metrics_write g{group_idx}"):
         if int(m.get("n_bucket_mismatch", 0)) > 0:
             # staged data exists but the manifest is NOT committed — the
             # group stays pending, and a rerun with a corrected num_buckets

@@ -53,6 +53,7 @@ from data_quality_check_spark.pipeline.run import (
     decide,
     with_rid,
 )
+from data_quality_check_spark.record import current, run_record
 
 
 def read_image_stream(
@@ -156,25 +157,13 @@ def run_stream_filter(
     def _token(batch_id: int) -> str:
         return f"{_ckpt_key()}-b{int(batch_id)}"
 
-    _snap_cell: dict = {}
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from data_quality_check_spark.operators.dedup import (
-            _release_local_checkpoint,
-            pin_scope,
-        )
-
-        # dedup_incremental pins its signature tables; scope them to this
-        # micro-batch so a long-lived stream releases storage per batch
-        # instead of accumulating pins for the query's lifetime — and release
-        # the batch's scored snapshot the same way, crash or not
-        with pin_scope():
-            try:
-                _process_batch(batch_df, batch_id)
-            finally:
-                snap = _snap_cell.pop("snap", None)
-                if snap is not None:
-                    _release_local_checkpoint(snap)
+        # one run record per micro-batch: dedup_incremental's signature pins,
+        # the decision gate's pins and the scored snapshot are released when
+        # the batch ends, crash or not, so a long-lived stream does not
+        # accumulate storage for the query's lifetime
+        with run_record():
+            _process_batch(batch_df, batch_id)
 
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if seen_artifacts is not None and seen_artifacts.token_applied(
@@ -218,7 +207,7 @@ def run_stream_filter(
         if "_bucket" not in df.columns:
             df = df.withColumn("_bucket", bucket_col(num_buckets=cfg.num_buckets))
         # the batch job's decisions, scoped to the micro-batch (see the module
-        # docstring); the gate's pins release with this batch's pin_scope
+        # docstring); the gate's pins release with this batch's run record
         scored = decide(df, cfg)
         if seen_artifacts is not None:
             from data_quality_check_spark.operators.dedup import dedup_incremental
@@ -237,9 +226,7 @@ def run_stream_filter(
             # table is batch-sized — broadcast it onto the scored rows and
             # fold the verdict into keep/drop_reason BEFORE the metrics
             # observe, so corpus drops are first-class in the metric row.
-            scored_snap = scored.localCheckpoint(eager=True)
-            _snap_cell["snap"] = scored_snap
-            scored = scored_snap
+            scored = current().snapshot(scored)
             dec = (
                 dedup_incremental(
                     scored.filter(F.col("row_selected")).select("image_id", "caption"),
@@ -276,39 +263,14 @@ def run_stream_filter(
             )
         # AFTER the corpus overlay: n_scrubbed must count kept-and-scrubbed
         # rows, not rows later dropped as corpus duplicates.
-        # An ALL-DROPPED batch makes the observed plan's kept side empty at
-        # runtime; AQE's AQEPropagateEmptyRelation then replaces the subtree
-        # and the CollectMetrics row is never delivered — obs.get fails on an
-        # empty observation (the snapshot's known partition stats make the
-        # emptiness visible to AQE; `dedup.candidate_counts` hits the same
-        # behavior).
-        # Exclude that single rule around this write; AQE itself stays on. Set
-        # on the micro-batch's own session (NOT the closure's `spark`: the
-        # query runs in a clone of it).
-        sess_conf = scored.sparkSession.conf
-        _EXCLUDED = "spark.sql.adaptive.optimizer.excludedRules"
-        _EMPTY_RULE = (
-            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+        m = _write_selected(
+            scored,
+            cfg,
+            [],
+            os.path.join(output_dir, "filtered"),
+            f"stream-metrics-{cfg.run_id}-{batch_id}",
+            batch_id=batch_id,
         )
-        prev_excluded = sess_conf.get(_EXCLUDED, None)
-        sess_conf.set(
-            _EXCLUDED,
-            _EMPTY_RULE if not prev_excluded else f"{prev_excluded},{_EMPTY_RULE}",
-        )
-        try:
-            m = _write_selected(
-                scored,
-                cfg,
-                [],
-                os.path.join(output_dir, "filtered"),
-                f"stream-metrics-{cfg.run_id}-{batch_id}",
-                batch_id=batch_id,
-            )
-        finally:
-            if prev_excluded is None:
-                sess_conf.unset(_EXCLUDED)
-            else:
-                sess_conf.set(_EXCLUDED, prev_excluded)
         import pandas as pd
 
         row = {

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from data_quality_check_spark.operators import dedup as DD
 from data_quality_check_spark.operators import similarity as SIM
+from data_quality_check_spark.record import ambient, current, run_record
 
 
 @pytest.fixture(scope="module")
@@ -304,8 +305,7 @@ def test_connected_components_long_path_converges(spark):
     from pyspark.sql import functions as F
 
     from data_quality_check_spark.operators.dedup import connected_components, release_pins
-
-    from data_quality_check_spark.operators.dedup import _release_local_checkpoint
+    from data_quality_check_spark.record import release_snapshot
 
     before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     edges = spark.range(299).select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
@@ -314,7 +314,7 @@ def test_connected_components_long_path_converges(spark):
     assert len(rows) == 300
     assert all(r["comp"] == 0 for r in rows)
     release_pins()
-    _release_local_checkpoint(labels)  # done acting on the result
+    release_snapshot(labels)  # done acting on the result
     # no NEW storage blocks survive this test (session may carry others' caches)
     assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) <= before
 
@@ -381,14 +381,13 @@ def test_lsh_candidate_fraction_subquadratic(spark, sf_dir):
     n(n-1)/2 pairs (round 2's r=3 config passed ~93%) while still recovering
     every planted near-dup pair at the production threshold."""
     from data_quality_check_spark import gate_fixtures as GF
-    from data_quality_check_spark.operators.dedup import candidate_counts
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     gate = GF.planted_embeddings_df(emb)
     n = gate.count()
-    candidate_counts(reset=True)  # drop observations from earlier tests
-    got = SIM.neardup_pairs_lsh(gate, threshold=0.9).collect()
-    counts = candidate_counts()
+    with run_record() as rec:
+        got = SIM.neardup_pairs_lsh(gate, threshold=0.9).collect()
+        counts = rec.candidates()
     assert "neardup_pairs_lsh" in counts, counts
     frac = counts["neardup_pairs_lsh"] / (n * (n - 1) / 2)
     assert frac <= 0.05, f"candidate fraction {frac:.4f} exceeds 5% — not sub-quadratic"
@@ -447,8 +446,6 @@ def test_hamming_bucket_cap_escalation_bounded_and_exact(spark):
     shares chunk 0 → one giant one-level bucket) must stay sub-quadratic in
     candidates under bucket_cap escalation while keeping recall EXACTLY 1
     (second-level pigeonhole over the complement bits)."""
-    from data_quality_check_spark.operators.dedup import candidate_counts
-
     rng = np.random.RandomState(11)
     n = 2000
     common_low16 = 0xBEEF
@@ -466,15 +463,14 @@ def test_hamming_bucket_cap_escalation_bounded_and_exact(spark):
     df = spark.createDataFrame(
         [(i, int(s)) for i, s in enumerate(sigs)], "id long, phash long"
     )
-    candidate_counts(reset=True)
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in DD.hamming_near_pairs(
-            df, "id", "phash", max_hamming=3, bucket_cap=100
-        ).collect()
-    }
-    counts = candidate_counts()
-    DD.release_pins()
+    with run_record() as rec:
+        got = {
+            (r.id_a, r.id_b, r.hamming)
+            for r in DD.hamming_near_pairs(
+                df, "id", "phash", max_hamming=3, bucket_cap=100
+            ).collect()
+        }
+        counts = rec.candidates()
     # brute force ground truth
     arr = np.array([np.uint64(s) for s in sigs], dtype=np.uint64)
     expect = set()
@@ -542,18 +538,13 @@ def test_dedup_incremental_candidate_fraction(spark, sf_dir):
     pass only a tiny fraction of the n_new x n_seen (cross) and
     n_new(n_new-1)/2 (self) pair universes — the banded candidate volume is
     what makes increment-vs-corpus dedup sub-quadratic."""
-    from data_quality_check_spark.operators.dedup import candidate_counts
-
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     new = docs.filter(F.col("doc_id") % 4 == 0)
     seen = docs.filter(F.col("doc_id") % 4 != 0)
     n_new, n_seen = new.count(), seen.count()
-    candidate_counts(reset=True)
-    try:
+    with run_record() as rec:
         DD.dedup_incremental(new, seen, "doc_id", "text", 0.6, ngram=3).collect()
-        counts = candidate_counts()
-    finally:
-        DD.release_pins()
+        counts = rec.candidates()
     assert {"dedup_incremental_cross", "dedup_incremental_self"} <= counts.keys()
     cross_frac = counts["dedup_incremental_cross"] / (n_new * n_seen)
     self_frac = counts["dedup_incremental_self"] / (n_new * (n_new - 1) / 2)
@@ -679,47 +670,60 @@ def test_ivf_assignment_ignores_batch_composition(spark):
     assert (got["cell"].iloc[60:] == 0).all()  # valid rows keep their cell
 
 
-def test_pin_scope_isolates_and_releases(spark, docs):
-    """VERDICT r3 item 8: pins made inside pin_scope() register to the scope
-    (not the global registry) and are released on exit; concurrent threads
-    each keep their own pins and compute correct results."""
+def test_run_record_isolates_and_releases(spark, docs):
+    """VERDICT r3 item 8: pins made inside a run record register to it (not
+    the thread's ambient record) and are released on exit; pins made outside
+    any record drain through release_pins(); concurrent threads each keep
+    their own record and compute the single-thread answer."""
     import threading
 
-    from data_quality_check_spark.operators.dedup import (
-        _PINNED,
-        _pin,
-        pin_scope,
-        release_pins,
-    )
+    from data_quality_check_spark.operators.dedup import release_pins
 
     pdf, df = docs
     release_pins()
-    # scoped pin: global registry untouched, released (uncached) on exit
-    with pin_scope():
-        pinned = _pin(df.select("doc_id"))
+    # pin inside a record: the ambient record is untouched, the pin is
+    # released (uncached) on exit
+    with run_record() as rec:
+        pinned = current().pin(df.select("doc_id"))
         pinned.count()
         assert pinned.storageLevel.useMemory
-        assert all(p is not pinned for p in _PINNED)
+        assert any(p is pinned for p in rec.pins)
+        assert all(p is not pinned for p in ambient().pins)
     assert not pinned.storageLevel.useMemory
-    # outside any scope, _pin goes global again and release_pins drains it
-    g = _pin(df.select("doc_id"))
-    assert any(p is g for p in _PINNED)
+    assert rec.pins == []
+    # outside any record, pins go to the ambient record and release_pins
+    # drains it
+    g = current().pin(df.select("doc_id"))
+    assert any(p is g for p in ambient().pins)
     assert release_pins() >= 1
+    assert ambient().pins == []
 
-    # two threads under pin_scope run pinned self-join queries concurrently
-    # and both get the single-thread answer
+    # a nested record releases its own pins and hands its steps and candidate
+    # observations to the enclosing record
+    with run_record() as outer:
+        with run_record() as inner:
+            with inner.step("probe"):
+                inner.observe_candidates(df.select("doc_id"), "probe_op")
+            inner_pin = inner.pin(df.select("doc_id"))
+        assert not inner_pin.storageLevel.useMemory
+        assert [name for name, _ in outer.steps] == ["probe"]
+        assert set(outer.observations) == {"probe_op"}
+
+    # two threads, each in its own record, run pinned self-join queries
+    # concurrently and both get the single-thread answer and only their own
+    # candidate observation
     want = sorted(
         (r.id_a, r.id_b)
         for r in DD.minhash_lsh_pairs(
             df, "doc_id", "text", num_hashes=32, bands=16, threshold=0.5, ngram=1
         ).collect()
     )
-    release_pins()  # the unscoped `want` run pinned globally — drain it
-    results, errors = {}, []
+    release_pins()  # the `want` run pinned to the ambient record — drain it
+    results, records, errors = {}, {}, []
 
     def run(tag):
         try:
-            with pin_scope():
+            with run_record() as rec:
                 got = sorted(
                     (r.id_a, r.id_b)
                     for r in DD.minhash_lsh_pairs(
@@ -728,15 +732,22 @@ def test_pin_scope_isolates_and_releases(spark, docs):
                     ).collect()
                 )
                 results[tag] = got
+                records[tag] = rec
+                assert ambient().pins == []
         except Exception as e:  # surfaced below — a thread must not die silently
             errors.append((tag, repr(e)))
 
     ts = [threading.Thread(target=run, args=(i,)) for i in range(2)]
     [t.start() for t in ts]
-    [t.join() for t in ts]
+    [t.join(timeout=600) for t in ts]
+    assert not any(t.is_alive() for t in ts)
     assert not errors, errors
     assert results[0] == results[1] == want
-    assert len(_PINNED) == 0  # nothing leaked into the global registry
+    assert records[0].observations["minhash_lsh_pairs"] is not (
+        records[1].observations["minhash_lsh_pairs"]
+    )
+    assert records[0].pins == records[1].pins == []
+    assert ambient().pins == []  # nothing leaked into this thread's ambient record
 
 
 def test_duplicate_span_rewrite_semantics(spark):
@@ -1080,15 +1091,14 @@ def test_containment_banded_subset_of_exact_with_high_recall(spark):
         (r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
         for r in DD.containment_pairs(df, "doc_id", "text", 0.9, ngram=3).collect()
     }
-    DD.candidate_counts()  # reset observer
-    banded = {
-        (r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
-        for r in DD.containment_pairs_banded(
-            df, "doc_id", "text", 0.9, ngram=3
-        ).collect()
-    }
-    counts = DD.candidate_counts()
-    DD.release_pins()
+    with run_record() as rec:
+        banded = {
+            (r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
+            for r in DD.containment_pairs_banded(
+                df, "doc_id", "text", 0.9, ngram=3
+            ).collect()
+        }
+        counts = rec.candidates()
     assert set(banded) <= set(exact)
     for pair, vals in banded.items():
         assert exact[pair] == vals
@@ -1224,19 +1234,18 @@ def test_containment_asym_short_in_long_recall_and_exactness(spark):
     planted = [(1000 + i, " ".join(hosts[i][1].split()[:6])) for i in range(0, 300, 10)]
     df = spark.createDataFrame(hosts + planted, ["doc_id", "text"])
 
-    DD.candidate_counts()  # reset observer
-    got = {
-        (r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
-        for r in DD.containment_pairs_asym(
-            df, "doc_id", "text", 0.9, ngram=3, min_size_ratio=10.0
-        ).collect()
-    }
-    counts = DD.candidate_counts()
-    exact = {
-        (r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
-        for r in DD.containment_pairs(df, "doc_id", "text", 0.9, ngram=3).collect()
-    }
-    DD.release_pins()
+    with run_record() as rec:
+        got = {
+            (r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
+            for r in DD.containment_pairs_asym(
+                df, "doc_id", "text", 0.9, ngram=3, min_size_ratio=10.0
+            ).collect()
+        }
+        counts = rec.candidates()
+        exact = {
+            (r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
+            for r in DD.containment_pairs(df, "doc_id", "text", 0.9, ngram=3).collect()
+        }
 
     expect_pairs = {(i, 1000 + i) for i in range(0, 300, 10)}
     # recall 1.0 on the planted extreme-asymmetry pairs, values exact

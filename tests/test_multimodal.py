@@ -174,15 +174,16 @@ def test_image_embedding_neardup_planted_recall(spark):
         centered_image_embeddings,
         synthetic_image_bytes_df,
     )
-    from data_quality_check_spark.operators.dedup import candidate_counts
+    from data_quality_check_spark.record import run_record
 
     n = 400
     docs = spark.range(n).select(F.col("id").alias("doc_id"))
     # the SAME embed-and-center chain the registered query runs (shared helper)
     centered = centered_image_embeddings(synthetic_image_bytes_df(docs))
-    pairs = SIM.neardup_pairs_lsh(
-        centered, threshold=0.9, dim=IMG_FEATURE_GRID * IMG_FEATURE_GRID
-    ).collect()
+    with run_record() as rec:
+        pairs = SIM.neardup_pairs_lsh(
+            centered, threshold=0.9, dim=IMG_FEATURE_GRID * IMG_FEATURE_GRID
+        ).collect()
     got = {(r.id_a, r.id_b): r.cosine for r in pairs}
     planted = [
         (i - 1, i) for i in range(n) if i % IMG_BYTES_EVERY == IMG_BYTES_EVERY - 1 and i > 0
@@ -190,7 +191,7 @@ def test_image_embedding_neardup_planted_recall(spark):
     for p in planted:
         assert p in got, f"planted pair {p} missed"
         assert got[p] >= 0.999
-    cand = candidate_counts().get("neardup_pairs_lsh")
+    cand = rec.candidates().get("neardup_pairs_lsh")
     assert cand is not None
     assert cand / (n * (n - 1) / 2) <= 0.05
 

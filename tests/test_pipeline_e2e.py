@@ -1274,3 +1274,118 @@ def test_f1_gate_label_duplicates_and_contradictions(spark, tmp_path):
     assert obs["tp"] == 2 and obs["tn"] == 1 and obs["fp"] == 0 and obs["fn"] == 0
     assert obs["n_unlabeled"] == 1
     assert check["passed"] and obs["f1"] == 1.0
+
+
+@pytest.mark.parametrize("max_broadcast", [2_000_000, 1], ids=["broadcast", "spill"])
+def test_flat_run_keeping_no_rows_commits_every_bucket(spark, tmp_path, max_broadcast):
+    """A flat input whose commit group keeps no rows: AQE re-plans the empty
+    post-shuffle write stage, and the write step must still deliver its
+    metrics row, so the manifest commits every bucket (broadcast mode and
+    decision-spill mode)."""
+    path = str(tmp_path / "images.parquet")
+    write_images_parquet(path, n=300)
+    cfg = FilterConfig(target_langs=["xx"], num_buckets=8,
+                       max_broadcast_decisions=max_broadcast)
+    summary = run_filter(spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"), cfg)
+    assert summary["processed_buckets"] == list(range(8))
+    assert summary["rows_kept"] == 0
+    assert summary["rows_in"] >= 300
+    manifest = spark.read.parquet(str(tmp_path / "ckpt" / "manifest")).toPandas()
+    assert sorted(manifest["bucket"]) == list(range(8))
+    assert manifest["rows_kept"].sum() == 0
+    assert manifest["rows_in"].sum() == summary["rows_in"]
+    if max_broadcast == 1:  # the spill path really ran
+        assert os.path.isdir(tmp_path / "ckpt" / "dup_decisions" / cfg.run_id)
+
+
+def test_run_records_stay_separate_across_threads(
+    spark, fixture_paths, pipeline_out, sf_dir, tmp_path, monkeypatch
+):
+    """Two threads, each in its own run record, run concurrently: one runs
+    run_filter on the e2e fixture, the other minhash_lsh_pairs. Both get the
+    single-thread answer, each record holds only its own run's steps or
+    candidate counts, no thread's ambient record gains a pin, and every
+    frame pinned by either run is unpersisted once its record exits."""
+    import threading
+
+    from data_quality_check_spark.operators.dedup import minhash_lsh_pairs, release_pins
+    from data_quality_check_spark.record import RunRecord, ambient, run_record
+
+    _, path = fixture_paths
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select("doc_id", "text")
+
+    def pairs():
+        return sorted(
+            (r.id_a, r.id_b)
+            for r in minhash_lsh_pairs(
+                docs, "doc_id", "text", num_hashes=32, bands=16, threshold=0.5, ngram=3
+            ).collect()
+        )
+
+    want_pairs = pairs()
+    release_pins()  # the single-thread run pinned to this thread's ambient record
+    fresh_out, _, fresh_summary = pipeline_out
+
+    pinned, pin = [], RunRecord.pin
+
+    def recording_pin(self, df):
+        pinned.append(pin(self, df))
+        return pinned[-1]
+
+    monkeypatch.setattr(RunRecord, "pin", recording_pin)
+    got, records, errors = {}, {}, []
+
+    def filter_job():
+        with run_record() as rec:
+            got["summary"] = run_filter(
+                spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"), FilterConfig()
+            )
+            records["filter"], got["filter_ambient"] = rec, list(ambient().pins)
+
+    def lsh_job():
+        with run_record() as rec:
+            got["pairs"] = pairs()
+            records["lsh"], got["lsh_ambient"] = rec, list(ambient().pins)
+
+    def guarded(fn):
+        try:
+            fn()
+        except Exception as e:  # surfaced below — a thread must not die silently
+            errors.append(repr(e))
+
+    ts = [threading.Thread(target=guarded, args=(fn,)) for fn in (filter_job, lsh_job)]
+    [t.start() for t in ts]
+    [t.join(timeout=900) for t in ts]
+    assert not any(t.is_alive() for t in ts)
+    assert not errors, errors
+
+    summary = got["summary"]
+    assert got["pairs"] == want_pairs and len(want_pairs) > 0
+    assert {k: summary[k] for k in ("processed_buckets", "rows_in", "rows_kept")} == {
+        k: fresh_summary[k] for k in ("processed_buckets", "rows_in", "rows_kept")
+    }
+
+    def kept(out):
+        return (
+            spark.read.parquet(os.path.join(out, "filtered"))
+            .select("image_id", "scrubbed_caption")
+            .toPandas()
+            .sort_values("image_id")
+            .reset_index(drop=True)
+        )
+
+    pd.testing.assert_frame_equal(kept(fresh_out), kept(str(tmp_path / "out")))
+
+    f_rec, l_rec = records["filter"], records["lsh"]
+    step_names = [name for name, _ in f_rec.steps]
+    assert step_names == [name for name, _ in summary["steps"]]
+    assert {"read_input", "read_manifest", "decisions_plan", "dup_decisions_count",
+            "finalize_plan g0", "score+write g0", "metrics_write g0"} <= set(step_names)
+    assert f_rec.observations == {}
+    assert l_rec.steps == []
+    assert set(l_rec.observations) == {"minhash_lsh_pairs"}
+    assert isinstance(l_rec.candidates()["minhash_lsh_pairs"], int)
+
+    assert got["filter_ambient"] == got["lsh_ambient"] == ambient().pins == []
+    assert len(pinned) >= 2  # both runs pinned something
+    assert not any(df.storageLevel.useMemory for df in pinned)

@@ -1,0 +1,116 @@
+"""The run record (data_quality_check_spark/record.py) is the one place a run
+keeps state: no operator, pipeline or streaming module holds a module-level
+mutable registry, and a count the record cannot read says why."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+from data_quality_check_spark.record import NOT_DELIVERED, run_record
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "data_quality_check_spark")
+GUARDED = ("operators", "pipeline", "streaming")
+MUTATORS = {"append", "extend", "insert", "pop", "popitem", "remove", "clear",
+            "update", "setdefault", "add", "discard", "sort", "reverse"}
+
+
+def _registries(tree: ast.Module) -> list[str]:
+    """Module-level names that hold mutable shared state: a threading.local(),
+    an empty list/dict/set, a list/dict/set literal the module mutates in
+    place, or any module global a function rebinds through `global`."""
+    literal = (ast.List, ast.Dict, ast.Set, ast.ListComp, ast.DictComp, ast.SetComp)
+    found: list[str] = []
+    literals: dict[str, None] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [t.id for t in targets if isinstance(t, ast.Name)]
+            v = node.value
+            call = ast.unparse(v.func) if isinstance(v, ast.Call) else ""
+            if call.endswith("local") or call in ("list", "dict", "set"):
+                found += names
+            elif isinstance(v, (ast.List, ast.Set)) and not v.elts:
+                found += names
+            elif isinstance(v, ast.Dict) and not v.keys:
+                found += names
+            elif isinstance(v, literal):
+                literals.update(dict.fromkeys(names))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Global):
+            found += node.names
+        target = None
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+                and node.func.attr in MUTATORS:
+            target = node.func.value
+        elif isinstance(node, ast.Subscript) and isinstance(node.ctx, (ast.Store, ast.Del)):
+            target = node.value
+        elif isinstance(node, ast.AugAssign):
+            target = node.target
+        if isinstance(target, ast.Name) and target.id in literals:
+            found.append(target.id)
+    return sorted(set(found))
+
+
+def test_no_module_level_registry_in_operators_pipeline_streaming():
+    """Per-run state lives in a RunRecord; a module-level registry shared by
+    every thread of the process is what it replaced (dedup._PINNED,
+    _PIN_SCOPES, CANDIDATE_OBS, run.STEP_TIMINGS). Read-only constant tables
+    (column lists, keyword lists, weights) are fine."""
+    hits = []
+    for d in GUARDED:
+        for root, _, files in os.walk(os.path.join(PKG, d)):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    path = os.path.join(root, f)
+                    with open(path) as fh:
+                        tree = ast.parse(fh.read(), path)
+                    hits += [f"{os.path.relpath(path, PKG)}: {n}" for n in _registries(tree)]
+    assert not hits, hits
+
+
+def test_guard_flags_each_registry_shape():
+    src = """
+import threading
+A: list = []
+B = {}
+C = threading.local()
+D = ["x"]
+E = {"k": 1}
+F = ("ro",)
+G = ["ro"]
+D.append("y")
+def f():
+    global H
+    E["k"] = 2
+"""
+    assert _registries(ast.parse(src)) == ["A", "B", "C", "D", "E", "H"]
+
+
+def test_unread_candidate_count_is_none_with_reason(spark):
+    """An observation whose consuming action never ran is reported as None
+    with a reason, instead of silently vanishing from the counts."""
+    with run_record() as rec:
+        rec.observe_candidates(spark.range(10), "never_run")
+        ran = rec.observe_candidates(spark.range(7), "ran")
+        ran.collect()
+        assert rec.candidates() == {"never_run": None, "ran": 7}
+        assert rec.candidate_reasons() == {"never_run": NOT_DELIVERED}
+
+
+def test_steps_are_per_record(spark):
+    """A record's steps are its own: a sibling record starts empty, and a
+    nested record's steps pass to the enclosing one on exit."""
+    with run_record() as a:
+        with a.step("one"):
+            pass
+    with run_record() as b:
+        with run_record() as nested:
+            with nested.step("two"):
+                pass
+        with b.step("three"):
+            pass
+    assert [n for n, _ in a.steps] == ["one"]
+    assert [n for n, _ in b.steps] == ["two", "three"]
+    assert all(sec >= 0 for _, sec in a.steps + b.steps)

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_quality_check_spark.operators import dedup as DD
+from data_quality_check_spark.record import run_record
 from data_quality_check_spark.sources.tables import TableIO
 
 T = 0.6  # word-set Jaccard threshold used throughout
@@ -64,17 +65,17 @@ def test_artifact_path_matches_recompute(spark, corpus):
     seen_df, _, art = corpus
     new_df = _df(spark, _new_rows())
 
-    recompute = DD.dedup_incremental(new_df, seen_df, "doc_id", "text", threshold=T)
-    got_recompute = _decisions(recompute)
-    cc_recompute = DD.candidate_counts()
-    DD.release_pins()
+    with run_record() as rec:
+        recompute = DD.dedup_incremental(new_df, seen_df, "doc_id", "text", threshold=T)
+        got_recompute = _decisions(recompute)
+        cc_recompute = rec.candidates()
 
-    via_art = DD.dedup_incremental(
-        new_df, None, "doc_id", "text", threshold=T, seen_artifacts=art
-    )
-    got_art = _decisions(via_art)
-    cc_art = DD.candidate_counts()
-    DD.release_pins()
+    with run_record() as rec:
+        via_art = DD.dedup_incremental(
+            new_df, None, "doc_id", "text", threshold=T, seen_artifacts=art
+        )
+        got_art = _decisions(via_art)
+        cc_art = rec.candidates()
 
     assert got_art == got_recompute
     reasons = {r[0]: r[2] for r in got_art}

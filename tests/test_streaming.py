@@ -46,10 +46,10 @@ def _kept(spark, out_dir):
 
 def _selected_ids(spark, path, cfg) -> set:
     """Ids the batch decision path selects for `cfg` over the parquet at `path`."""
-    from data_quality_check_spark.operators.dedup import pin_scope
     from data_quality_check_spark.pipeline.run import decide
+    from data_quality_check_spark.record import run_record
 
-    with pin_scope():
+    with run_record():
         df = decide(spark.read.parquet(str(path)), cfg)
         return {r["image_id"] for r in df.filter("row_selected").select("image_id").collect()}
 
@@ -175,6 +175,12 @@ def test_stream_filter_incremental_resume(spark, fixture_files, tmp_path):
     assert s1["rows_in"] + s3["rows_in"] == 612
     total_rows = spark.read.parquet(str(tmp_path / "out" / "filtered")).count()
     assert total_rows == s1["rows_kept"] + s3["rows_kept"]
+    # write fan-out: each arrival writes ONE data file per non-empty bucket
+    # partition (the rest of a partition dir is Hadoop .crc sidecars)
+    part_dirs = list((tmp_path / "out" / "filtered").glob("_batch_id=*/_bucket=*"))
+    assert {d.parent.name for d in part_dirs} == {"_batch_id=0", "_batch_id=1"}
+    for d in part_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, sorted(os.listdir(d))
 
 
 def test_windowed_metrics_stream_matches_batch(spark, tmp_path):
