@@ -8,9 +8,13 @@
 
 Scale design notes (SURVEY.md §3.4, §4.2):
   * ONE heavy pass. Each commit group is a single Spark action (the filtered
-    write); per-bucket and per-run metrics ride along via `DataFrame.observe` —
+    write); per-run metrics and the per-bucket counts no file holds
+    (n_scrubbed; rows_in on a flat input) ride along via `DataFrame.observe` —
     computed by the very tasks that write the output, so nothing is persisted,
-    re-scanned, or re-decoded. The only other action is a cheap count of the
+    re-scanned, or re-decoded. Per-bucket rows_kept (and rows_in on a
+    partition-dir input) are read from Parquet footers on the driver: the
+    `_bucket=b` partitions the write just produced hold exactly those rows.
+    The only other action is a cheap count of the
     narrow dedup-decision table that gates its join strategy. The reference
     issues O(cols + rules) full-scan jobs for the same information
     (engine.py:439-553); this plan issues one per commit group.
@@ -182,33 +186,36 @@ class FilterConfig:
         return list(self.splits) if self.splits else []
 
 
+def _bucket_sql(id_col: str, num_buckets: int) -> str:
+    return f"CAST(pmod(xxhash64(`{id_col}`), {int(num_buckets)}) AS INT)"
+
+
 def bucket_col(id_col: str = "image_id", num_buckets: int = 16) -> F.Column:
     """Deterministic bucket id — the parquet stand-in for Iceberg bucket(B, image_id)."""
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_buckets)).cast("int")
+    return F.expr(_bucket_sql(id_col, num_buckets))
 
 
-def _validate_bucket_layout(raw: DataFrame, num_buckets: int) -> None:
+def _validate_bucket_layout(raw: DataFrame, num_buckets: int) -> dict[int, list[str]] | None:
     """Fail fast when a prebucketed input's layout disagrees with
     cfg.num_buckets. pending = range(num_buckets), so `_bucket` values outside
     that range match no group filter — their rows would be scored never,
     written never, yet the run would return success: silent data loss.
 
     Partition-dir layouts (the production shape) are validated driver-side by
-    parsing the partition values out of the file list — no Spark job. A
-    data-column `_bucket` (no `_bucket=` path segments) instead pays one
-    narrow pushed-down scan for out-of-range values; that shape is the
-    test/flat path, never the 10^12 one."""
+    parsing the partition values out of the file list — no Spark job — and
+    that file list, by bucket, is returned: its footers hold each bucket's
+    rows_in. A data-column `_bucket` (no `_bucket=` path segments) instead
+    pays one narrow pushed-down scan for out-of-range values and returns
+    None; that shape is the test/flat path, never the 10^12 one."""
     import re
 
-    vals: set[int] = set()
-    partition_layout = False
+    files: dict[int, list[str]] = {}
     for p in raw.inputFiles():
         m = re.search(r"/_bucket=(-?\d+)/", p)
         if m:
-            partition_layout = True
-            vals.add(int(m.group(1)))
-    if partition_layout:
-        bad = sorted(v for v in vals if v < 0 or v >= num_buckets)
+            files.setdefault(int(m.group(1)), []).append(p)
+    if files:
+        bad = sorted(v for v in files if v < 0 or v >= num_buckets)
     else:
         bad = [
             r["_bucket"]
@@ -226,6 +233,7 @@ def _validate_bucket_layout(raw: DataFrame, num_buckets: int) -> None:
             "layout's bucket count — those buckets would otherwise be silently "
             "skipped"
         )
+    return files or None
 
 
 def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> list[int]:
@@ -719,49 +727,105 @@ def _check_output_schema_fingerprint(checkpoint_dir: str, cfg: FilterConfig) -> 
     replace_file(path, write)
 
 
+def _sql_str(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _bucket_metric_aggs(
     pending: list[int],
     split_labels: list[str] | None = None,
     check_hash_buckets: int | None = None,
-) -> list:
-    """observe() aggregates: per-pending-bucket (rows_in, rows_kept, n_scrubbed)
-    + per-run global drop-reason and flag breakdowns (+ per-split kept counts
-    when the job assigns splits). All plain conditional counts (observe forbids
-    distinct aggregates — which `row_selected` makes unnecessary: output rows =
-    count_if(row_selected), exactly).
+    bucket_rows_in: bool = True,
+) -> F.Column:
+    """The observe() aggregates of one write, as ONE `named_struct` SQL
+    expression (built in one parse instead of one py4j Column per count):
+    per-run totals (rows_in, rows_kept, n_scrubbed), the drop-reason and flag
+    breakdowns, per-split kept counts when the job assigns splits, and the
+    per-bucket counts no file holds — `b{b}_scrubbed` for every pending
+    bucket, plus `b{b}_rows_in` when `bucket_rows_in` (a flat or
+    data-column-`_bucket` input; a partition-dir input's per-bucket rows_in
+    and every bucket's rows_kept come from Parquet footers instead, see
+    `_process_group`). All plain conditional counts (observe forbids
+    distinct aggregates — which `row_selected` makes unnecessary: output rows
+    = count_if(row_selected), exactly), so each row pays one conditional per
+    bucket count.
 
     `check_hash_buckets` (prebucketed inputs only) rides one more counter:
     rows whose layout `_bucket` disagrees with bucket_col(image_id). The spill
     path prunes decision slices by the COMPUTED bucket, so a layout bucketed
     by a different hash would silently join no decisions onto its rows;
     _process_group refuses to commit any group observing a mismatch."""
-    aggs = [
-        F.count(F.lit(1)).alias("rows_in"),
-        F.count_if(F.col("row_selected")).alias("rows_kept"),
-        F.count_if(F.col("_scrub_changed")).alias("n_scrubbed"),
+    fields = [
+        ("rows_in", "count(1)"),
+        ("rows_kept", "count_if(row_selected)"),
+        ("n_scrubbed", "count_if(_scrub_changed)"),
     ]
     if check_hash_buckets is not None:
-        aggs.append(
-            F.count_if(
-                F.col("_bucket") != bucket_col(num_buckets=check_hash_buckets)
-            ).alias("n_bucket_mismatch")
-        )
-    for r in DROP_REASONS:
-        aggs.append(F.count_if(F.col("drop_reason") == r).alias(f"n_{r}"))
-    for c in FLAG_COLS:
-        aggs.append(F.count_if(F.col(c)).alias(c.replace("flag_", "nf_")))
-    for s in split_labels or []:
-        aggs.append(
-            F.count_if(F.col("row_selected") & (F.col("split") == s)).alias(
-                f"split_{s}_kept"
-            )
-        )
+        fields.append((
+            "n_bucket_mismatch",
+            f"count_if(`_bucket` != {_bucket_sql('image_id', check_hash_buckets)})",
+        ))
+    fields += [(f"n_{r}", f"count_if(drop_reason = {_sql_str(r)})") for r in DROP_REASONS]
+    fields += [(c.replace("flag_", "nf_"), f"count_if({c})") for c in FLAG_COLS]
+    fields += [
+        (f"split_{s}_kept", f"count_if(row_selected AND split = {_sql_str(s)})")
+        for s in split_labels or []
+    ]
     for b in pending:
-        m = F.col("_bucket") == b
-        aggs.append(F.count_if(m).alias(f"b{b}_rows_in"))
-        aggs.append(F.count_if(m & F.col("row_selected")).alias(f"b{b}_kept"))
-        aggs.append(F.count_if(m & F.col("_scrub_changed")).alias(f"b{b}_scrubbed"))
-    return aggs
+        if bucket_rows_in:
+            fields.append((f"b{b}_rows_in", f"count_if(`_bucket` = {int(b)})"))
+        # the rare side first: most rows skip the bucket compare
+        fields.append((f"b{b}_scrubbed", f"count_if(_scrub_changed AND `_bucket` = {int(b)})"))
+    body = ", ".join(f"{_sql_str(k)}, {v}" for k, v in fields)
+    return F.expr(f"named_struct({body})").alias("m")
+
+
+def _footer_rows(uris: list[str]) -> int:
+    """Rows in the given parquet files, summed from their footers — read on
+    the driver with pyarrow, no Spark job. URIs are Hadoop-qualified
+    (`inputFiles()`, `_partition_files`)."""
+    import pyarrow.parquet as pq
+    from pyarrow.fs import FileSystem
+
+    n = 0
+    for u in uris:
+        fs, p = FileSystem.from_uri(u)
+        n += pq.read_metadata(p, filesystem=fs).num_rows
+    return n
+
+
+def _partition_uris(spark: SparkSession, path: str, buckets: list[int]) -> dict[int, str]:
+    """URI of each bucket's `_bucket=b` partition dir under the write path,
+    qualified through Hadoop's FileSystem as Spark's writer qualifies it (a
+    schemeless path resolves against fs.defaultFS)."""
+    hp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = fs.makeQualified(hp).toUri().toString().rstrip("/")
+    return {b: f"{root}/_bucket={b}" for b in buckets}
+
+
+def _partition_files(part_uri: str) -> list[str]:
+    """URIs of one partition dir's data files (none when it does not exist).
+    Names starting with `_` or `.` (markers, checksums) are skipped, as
+    Spark's reader skips them."""
+    from pyarrow.fs import FileSelector, FileSystem, FileType
+
+    fs, p = FileSystem.from_uri(part_uri)
+    return [
+        f"{part_uri}/{i.base_name}"
+        for i in fs.get_file_info(FileSelector(p, allow_not_found=True))
+        if i.type == FileType.File and not i.base_name.startswith(("_", "."))
+    ]
+
+
+def _clear_partitions(part_uris) -> None:
+    """Delete the given partition dirs where they exist."""
+    from pyarrow.fs import FileSystem, FileType
+
+    for u in part_uris:
+        fs, p = FileSystem.from_uri(u)
+        if fs.get_file_info(p).type == FileType.Directory:
+            fs.delete_dir(p)
 
 
 def _append_parquet(pdf, dir_path: str, run_id: str, fname: str | None = None) -> None:
@@ -780,18 +844,29 @@ def _append_parquet(pdf, dir_path: str, run_id: str, fname: str | None = None) -
     replace_file(os.path.join(dir_path, fname), lambda tmp: pq.write_table(table, tmp))
 
 
-def _write_checkpoint(checkpoint_dir: str, cfg: FilterConfig, pending: list[int], m: dict) -> None:
-    """Metrics + manifest from the observe() row — ≤num_buckets driver-local rows;
-    pyarrow appends skip a whole Spark job each. Manifest commit LAST: a bucket
-    is only "done" once data + metrics landed."""
+def _write_checkpoint(
+    checkpoint_dir: str,
+    cfg: FilterConfig,
+    m: dict,
+    rows_in: dict[int, int],
+    rows_kept: dict[int, int],
+) -> None:
+    """Metrics + manifest of one commit group — ≤num_buckets driver-local rows;
+    pyarrow appends skip a whole Spark job each. Per bucket (the keys of
+    `rows_kept`, in order): `rows_in` and `rows_kept` as `_process_group`
+    counted them (Parquet footers, or the observed count where no file holds
+    it) and `n_scrubbed` from the observe() row `m`; the run_metrics row is
+    `m`'s run totals. Manifest commit LAST: a bucket is only "done" once data
+    + metrics landed."""
     import pandas as pd
 
+    pending = list(rows_kept)
     now = pd.Timestamp.now(tz="UTC").as_unit("us")
     metrics_pdf = pd.DataFrame(
         {
             "bucket": pending,
-            "rows_in": [m[f"b{b}_rows_in"] for b in pending],
-            "rows_kept": [m[f"b{b}_kept"] for b in pending],
+            "rows_in": [rows_in[b] for b in pending],
+            "rows_kept": [rows_kept[b] for b in pending],
             "n_scrubbed": [m[f"b{b}_scrubbed"] for b in pending],
         }
     )
@@ -859,8 +934,9 @@ def run_filter(
             # holds rows of exactly one bucket. A flat input falls back to
             # computing the bucket and repartitioning before the write.
             prebucketed = "_bucket" in raw.columns
+            input_files = None
             if prebucketed:
-                _validate_bucket_layout(raw, cfg.num_buckets)
+                input_files = _validate_bucket_layout(raw, cfg.num_buckets)
             else:
                 raw = raw.withColumn("_bucket", bucket_col(num_buckets=cfg.num_buckets))
             df = with_rid(raw)
@@ -954,7 +1030,8 @@ def run_filter(
 
         for gi, grp in enumerate(groups):
             m = _process_group(df, cfg, grp, gi, slice_for, output_dir,
-                               checkpoint_dir, prebucketed, contaminated)
+                               checkpoint_dir, prebucketed, input_files,
+                               contaminated)
             summary["rows_in"] += int(m["rows_in"])
             summary["rows_kept"] += int(m["rows_kept"])
     return summary
@@ -968,11 +1045,13 @@ def _write_selected(
     obs_name: str,
     prebucketed: bool = False,
     batch_id: int | None = None,
+    bucket_rows_in: bool = True,
 ) -> dict:
     """The write step of both filter jobs (`_process_group`, the stream's
     micro-batch): ONE Spark action writing the selected rows of a finalized
     frame, partitioned by `_bucket` (under `_batch_id` when given), that
-    returns the observe() row of `_bucket_metric_aggs` over `buckets`.
+    returns the observe() row of `_bucket_metric_aggs` over `buckets` as a
+    flat dict.
     Dynamic partition overwrite is an option of THIS writer, not the
     session: a re-processed bucket or replayed micro-batch replaces exactly
     its own partitions, and the caller's own overwrite writes keep theirs."""
@@ -985,10 +1064,11 @@ def _write_selected(
     obs = Observation(obs_name)
     scored = scored.observe(
         obs,
-        *_bucket_metric_aggs(
+        _bucket_metric_aggs(
             buckets,
             cfg.split_labels(),
             check_hash_buckets=cfg.num_buckets if prebucketed else None,
+            bucket_rows_in=bucket_rows_in,
         ),
     )
     kept = scored.filter(F.col("row_selected")).select(*out_cols)
@@ -1040,7 +1120,7 @@ def _write_selected(
             sess_conf.unset(_EXCLUDED)
         else:
             sess_conf.set(_EXCLUDED, prev_excluded)
-    return obs.get
+    return obs.get["m"].asDict()
 
 
 def _process_group(
@@ -1052,42 +1132,74 @@ def _process_group(
     output_dir: str,
     checkpoint_dir: str,
     prebucketed: bool,
+    input_files: dict[int, list[str]] | None = None,
     contaminated: DataFrame | None = None,
 ) -> dict:
     """Score, write, and checkpoint one group of buckets (the whole pending set
     in broadcast mode) as ONE Spark action with observe() metrics riding along.
-    `slice_for(grp)` gives the group's (hinted) dup-decision table.
+    `slice_for(grp)` gives the group's (hinted) dup-decision table;
+    `input_files` is a partition-dir input's files by bucket
+    (`_validate_bucket_layout`), None for any other layout.
+
+    Per-bucket counts that files already hold come from Parquet footers read
+    on the driver: every bucket's rows_kept from the `_bucket=b` partitions
+    the write just produced, and — on a partition-dir input — its rows_in
+    from the input files. The group commits only when those sums equal the
+    observed totals.
 
     Bucket prune: on Iceberg/bucketed-parquet layouts the isin filter is
     partition pruning — each group's action scans only its own files; on a
     flat file it is a pushed-down row filter (every group re-reads the file,
     which is why flat layouts are the test path, never the 10^12 one)."""
     rec = current()
+    path = os.path.join(output_dir, "filtered")
     with rec.step(f"finalize_plan g{group_idx}"):
         work = df.filter(F.col("_bucket").isin(grp))
         scored = finalize(score_rows(work, cfg), cfg, slice_for(grp), contaminated)
+    with rec.step(f"bucket_clear g{group_idx}"):
+        # Dynamic partition overwrite replaces only the partitions a write
+        # touches, so a pending bucket that now keeps no rows would keep an
+        # earlier attempt's files. A pending bucket is not in the manifest:
+        # its partition is uncommitted, and the footer counts below need it
+        # to hold this write's files only.
+        parts = _partition_uris(df.sparkSession, path, grp)
+        _clear_partitions(parts.values())
     with rec.step(f"score+write g{group_idx}"):
         m = _write_selected(
             scored,
             cfg,
             grp,
-            os.path.join(output_dir, "filtered"),
+            path,
             f"metrics-{cfg.run_id}-g{group_idx}",
             prebucketed,
+            bucket_rows_in=input_files is None,
         )
+    with rec.step(f"bucket_counts g{group_idx}"):
+        rows_kept = {b: _footer_rows(_partition_files(u)) for b, u in parts.items()}
+        if input_files is None:
+            rows_in = {b: m[f"b{b}_rows_in"] for b in grp}
+        else:
+            rows_in = {b: _footer_rows(input_files.get(b, [])) for b in grp}
 
     with rec.step(f"metrics_write g{group_idx}"):
+        # staged data exists but the manifest is NOT committed on a refusal —
+        # the group stays pending, and a rerun rewrites its partitions
         if int(m.get("n_bucket_mismatch", 0)) > 0:
-            # staged data exists but the manifest is NOT committed — the
-            # group stays pending, and a rerun with a corrected num_buckets
-            # rewrites its partitions (dynamic overwrite)
             raise ValueError(
                 f"{m['n_bucket_mismatch']} rows have a layout _bucket that "
                 "disagrees with bucket(num_buckets, image_id) — the input was "
                 "bucketed with a different hash or bucket count, so decision-"
                 "slice pruning would be misaligned; refusing to commit"
             )
-        _write_checkpoint(checkpoint_dir, cfg, grp, m)
+        footer = (sum(rows_in.values()), sum(rows_kept.values()))
+        if footer != (m["rows_in"], m["rows_kept"]):
+            raise ValueError(
+                f"group {group_idx}: Parquet footers count (rows_in, rows_kept) "
+                f"= {footer}, the write observed {(m['rows_in'], m['rows_kept'])} "
+                "— input or output files changed under the run; refusing to "
+                "commit"
+            )
+        _write_checkpoint(checkpoint_dir, cfg, m, rows_in, rows_kept)
     return m
 
 

@@ -230,10 +230,10 @@ def test_scrub_col_equals_python(spark):
     assert [None if pd.isna(g) else g for g in got_series] == want_stripped
 
 
-def test_prebucketed_input_equals_flat(spark, fixture_paths, pipeline_out, tmp_path_factory):
-    """The production layout — input partitioned by bucket(B, image_id) — must
-    produce byte-identical results to the flat layout, with NO exchange in the
-    write plan (the storage-partitioned property the Iceberg design is for)."""
+@pytest.fixture(scope="module")
+def prebucketed_out(spark, tmp_path_factory):
+    """The e2e rows in the production layout: partitioned by
+    bucket(B, image_id) into `_bucket=NN/` dirs, and run_filter over them."""
     from data_quality_check_spark.pipeline.fixtures import write_images_parquet_spark
 
     cfg = FilterConfig()
@@ -241,13 +241,29 @@ def test_prebucketed_input_equals_flat(spark, fixture_paths, pipeline_out, tmp_p
     write_images_parquet_spark(
         spark, bdir, n=N_ROWS, num_files=cfg.num_buckets, bucket_by_id=cfg.num_buckets
     )
-    raw = spark.read.parquet(bdir)
-    assert "_bucket" in raw.columns  # discovered partition column
     out = str(tmp_path_factory.mktemp("out_b"))
     ckpt = str(tmp_path_factory.mktemp("ckpt_b"))
     summary = run_filter(spark, bdir, out, ckpt, cfg)
+    return bdir, out, ckpt, summary
 
-    flat_out, _, flat_summary = pipeline_out
+
+def _table(spark, ckpt, name):
+    """A checkpoint table without its per-run columns, sorted by bucket."""
+    pdf = spark.read.parquet(os.path.join(ckpt, name)).toPandas()
+    pdf = pdf.drop(columns=["run_id", "committed_at"])
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def test_prebucketed_input_equals_flat(spark, prebucketed_out, pipeline_out):
+    """The production layout — input partitioned by bucket(B, image_id) — must
+    produce byte-identical results to the flat layout, with NO exchange in the
+    write plan (the storage-partitioned property the Iceberg design is for),
+    and the same metrics and run_metrics tables."""
+    bdir, out, ckpt, summary = prebucketed_out
+    raw = spark.read.parquet(bdir)
+    assert "_bucket" in raw.columns  # discovered partition column
+
+    flat_out, flat_ckpt, flat_summary = pipeline_out
     assert summary["rows_in"] == flat_summary["rows_in"]
     assert summary["rows_kept"] == flat_summary["rows_kept"]
     a = (
@@ -265,6 +281,127 @@ def test_prebucketed_input_equals_flat(spark, fixture_paths, pipeline_out, tmp_p
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(a, b)
+    for t in ["metrics", "run_metrics"]:
+        pd.testing.assert_frame_equal(_table(spark, ckpt, t), _table(spark, flat_ckpt, t))
+
+
+def _assert_metrics_match_oracle(spark, bucketed_input, out, ckpt, num_buckets):
+    """The checkpoint's `metrics` and `manifest` tables equal a
+    groupBy("_bucket") oracle: rows_in over the input, rows_kept and
+    n_scrubbed over the written output."""
+    from data_quality_check_spark.pipeline.heuristics import trim_col
+
+    rows_in = bucketed_input.groupBy("_bucket").agg(F.count(F.lit(1)).alias("rows_in"))
+    outp = spark.read.parquet(os.path.join(out, "filtered")).groupBy("_bucket").agg(
+        F.count(F.lit(1)).alias("rows_kept"),
+        F.count_if(F.col("scrubbed_caption") != trim_col(F.col("caption"))).alias(
+            "n_scrubbed"
+        ),
+    )
+    want = (
+        pd.DataFrame({"bucket": range(num_buckets)})
+        .merge(rows_in.toPandas().rename(columns={"_bucket": "bucket"}), "left")
+        .merge(outp.toPandas().rename(columns={"_bucket": "bucket"}), "left")
+        .fillna(0)
+        .astype("int64")
+    )
+    metrics = _table(spark, ckpt, "metrics")
+    cols = ["bucket", "rows_in", "rows_kept", "n_scrubbed"]
+    pd.testing.assert_frame_equal(metrics[cols].astype("int64"), want[cols])
+    manifest = _table(spark, ckpt, "manifest")
+    cols = ["bucket", "rows_in", "rows_kept"]
+    pd.testing.assert_frame_equal(manifest[cols].astype("int64"), want[cols])
+    assert want["rows_kept"].sum() > 0 and want["n_scrubbed"].sum() > 0
+
+
+@pytest.fixture(scope="module")
+def small_flat(tmp_path_factory):
+    """300 e2e rows in one flat file (8-bucket runs)."""
+    path = str(tmp_path_factory.mktemp("small_flat") / "images.parquet")
+    write_images_parquet(path, n=300)
+    return path
+
+
+@pytest.mark.parametrize("layout", ["partition_dir", "data_column", "flat", "spill"])
+def test_per_bucket_metrics_match_oracle(
+    spark, layout, prebucketed_out, pipeline_out, small_flat, fixture_paths, tmp_path
+):
+    """Per-bucket rows_in / rows_kept / n_scrubbed are exact on every input
+    layout, whether a count comes from Parquet footers (partition-dir input,
+    every layout's rows_kept) or from the observed row (n_scrubbed; rows_in
+    on a flat or data-column input), and in decision-spill mode."""
+    from data_quality_check_spark.pipeline.run import bucket_col
+
+    if layout == "partition_dir":
+        bdir, out, ckpt, _ = prebucketed_out
+        inp, num_buckets = spark.read.parquet(bdir), FilterConfig().num_buckets
+    elif layout == "flat":
+        out, ckpt, _ = pipeline_out
+        num_buckets = FilterConfig().num_buckets
+        inp = spark.read.parquet(fixture_paths[1]).withColumn(
+            "_bucket", bucket_col(num_buckets=num_buckets)
+        )
+    else:
+        num_buckets = 8
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        inp = spark.read.parquet(small_flat).withColumn(
+            "_bucket", bucket_col(num_buckets=num_buckets)
+        )
+        if layout == "data_column":
+            path = str(tmp_path / "datacol.parquet")
+            inp.write.parquet(path)
+            cfg = FilterConfig(num_buckets=num_buckets)
+        else:
+            path = small_flat
+            cfg = FilterConfig(num_buckets=num_buckets, max_broadcast_decisions=1)
+        run_filter(spark, path, out, ckpt, cfg)
+        if layout == "spill":
+            manifest = spark.read.parquet(os.path.join(ckpt, "manifest"))
+            assert manifest.select("committed_at").distinct().count() > 1
+    _assert_metrics_match_oracle(spark, inp, out, ckpt, num_buckets)
+
+
+def test_footer_count_disagreeing_with_observed_refuses_group(
+    spark, small_flat, tmp_path, monkeypatch
+):
+    """A group whose Parquet-footer counts disagree with the totals its write
+    observed refuses to commit: no manifest row, no metrics row."""
+    from data_quality_check_spark.pipeline import run as RUN
+
+    real = RUN._footer_rows
+    monkeypatch.setattr(RUN, "_footer_rows", lambda uris: real(uris) + 1)
+    ckpt = tmp_path / "ckpt"
+    with pytest.raises(ValueError, match="footers count"):
+        run_filter(spark, small_flat, str(tmp_path / "out"), str(ckpt),
+                   FilterConfig(num_buckets=8))
+    assert not (ckpt / "manifest").exists()
+    assert not (ckpt / "metrics").exists()
+
+
+def test_rerun_into_same_output_clears_stale_partitions(spark, small_flat, tmp_path):
+    """Dynamic partition overwrite replaces only the partitions a write
+    touches. A second run into the same output dir (fresh checkpoint) whose
+    buckets now keep no rows must not leave the first run's files under a
+    manifest that says 0 rows were kept."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    s1 = run_filter(spark, small_flat, out, str(tmp_path / "ckpt1"),
+                    FilterConfig(num_buckets=8))
+    assert s1["rows_kept"] > 0
+    s2 = run_filter(spark, small_flat, out, str(tmp_path / "ckpt2"),
+                    FilterConfig(num_buckets=8, target_langs=["xx"]))
+    assert s2["rows_kept"] == 0
+    staged = sum(
+        pq.read_metadata(os.path.join(d, f)).num_rows
+        for d, _, files in os.walk(os.path.join(out, "filtered"))
+        for f in files
+        if not f.startswith(("_", "."))
+    )
+    assert staged == 0
+    manifest = spark.read.parquet(str(tmp_path / "ckpt2" / "manifest")).toPandas()
+    assert sorted(manifest["bucket"]) == list(range(8))
+    assert manifest["rows_kept"].sum() == 0
 
 
 def test_whitespace_captions_agree_with_golden(spark):
@@ -1274,6 +1411,30 @@ def test_f1_gate_label_duplicates_and_contradictions(spark, tmp_path):
     assert obs["tp"] == 2 and obs["tn"] == 1 and obs["fp"] == 0 and obs["fn"] == 0
     assert obs["n_unlabeled"] == 1
     assert check["passed"] and obs["f1"] == 1.0
+
+
+def test_f1_gate_labels_keyed_by_another_id_column(spark, golden, pipeline_out, tmp_path):
+    """The staged side of the F1 audit is run_filter's output, always keyed
+    `image_id`; the label table's id column is configurable. Labels keyed `id`
+    score exactly as the same labels keyed `image_id`."""
+    from data_quality_check_spark.pipeline.publish import AuditGates, audit_staged
+
+    out, ckpt, _ = pipeline_out
+    labels = golden.drop_duplicates(subset=["image_id"])[["image_id", "keep"]]
+    by_image_id = str(tmp_path / "labels_image_id.parquet")
+    by_id = str(tmp_path / "labels_id.parquet")
+    labels.to_parquet(by_image_id)
+    labels.rename(columns={"image_id": "id"}).to_parquet(by_id)
+
+    def f1_check(path, id_col):
+        gates = AuditGates(min_f1=0.99, labels_path=path, labels_id_col=id_col)
+        report = audit_staged(spark, out, ckpt, gates)
+        return next(c for c in report["checks"] if c["name"] == "min_keep_f1")
+
+    want = f1_check(by_image_id, "image_id")
+    got = f1_check(by_id, "id")
+    assert got == want
+    assert got["passed"] and got["observed"]["tp"] > 0
 
 
 @pytest.mark.parametrize("max_broadcast", [2_000_000, 1], ids=["broadcast", "spill"])

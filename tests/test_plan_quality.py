@@ -449,3 +449,54 @@ def test_containment_asym_plan_jvm_only_rare_prefix_probe(spark, sf_dir):
     )
     # shingle-set pin feeds probe derivation and both confirm sides
     assert "InMemoryTableScan" in plan
+
+
+@pytest.mark.parametrize("layout", ["partition_dir", "flat"])
+def test_run_filter_jobs_and_observed_aggregates_pinned(spark, tmp_path, monkeypatch, layout):
+    """A run_filter call on a small 8-bucket input runs no more Spark jobs
+    than it did when per-bucket counts moved to Parquet footers (16 with a
+    partition-dir input, 17 flat: the flat run adds the pre-write
+    repartition), and its write observes the run-global counts plus one
+    count per pending bucket (n_scrubbed), plus one more per bucket (rows_in)
+    when no input file holds the bucket's rows. The footer reads run on the
+    driver, not as jobs."""
+    from data_quality_check_spark.pipeline import run as RUN
+    from data_quality_check_spark.pipeline.fixtures import (
+        write_images_parquet,
+        write_images_parquet_spark,
+    )
+    from data_quality_check_spark.pipeline.heuristics import FLAG_COLS
+
+    buckets = 8
+    if layout == "partition_dir":
+        path = str(tmp_path / "images")
+        write_images_parquet_spark(spark, path, n=300, num_files=buckets, bucket_by_id=buckets)
+        # + n_bucket_mismatch, and one n_scrubbed per bucket
+        want_width, max_jobs = 3 + len(RUN.DROP_REASONS) + len(FLAG_COLS) + 1 + buckets, 16
+    else:
+        path = str(tmp_path / "images.parquet")
+        write_images_parquet(path, n=300)
+        # one n_scrubbed and one rows_in per bucket
+        want_width, max_jobs = 3 + len(RUN.DROP_REASONS) + len(FLAG_COLS) + 2 * buckets, 17
+    widths = []
+    real = RUN._write_selected
+
+    def recording(*a, **k):
+        m = real(*a, **k)
+        widths.append(len(m))
+        return m
+
+    monkeypatch.setattr(RUN, "_write_selected", recording)
+    sc = spark.sparkContext
+    group = f"pin-run-filter-{layout}"
+    sc.setJobGroup(group, group)
+    try:
+        summary = RUN.run_filter(spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+                                 RUN.FilterConfig(num_buckets=buckets))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert summary["rows_kept"] > 0
+    assert widths == [want_width]
+    assert 0 < jobs <= max_jobs, jobs
