@@ -200,9 +200,10 @@ def _f1_check(spark: SparkSession, staged: DataFrame | None, gates: AuditGates) 
     id ∈ staged ⇔ predicted keep; a legitimately-empty staging predicts
     drop-everything (pred=False for every label) rather than skipping the
     gate. The staged side is always run_filter's output, keyed `image_id`
-    (run.OUT_COLS); only the label table's id column varies (labels_id_col). An all-negative label table leaves F1 undefined (0/0) — that reads
-    as a FAILED check, surfaced as such, because an acceptance gate that
-    cannot measure must not pass."""
+    (run.OUT_COLS); only the label table's id column varies (labels_id_col).
+    An all-negative label table leaves F1 undefined (0/0) — that reads as a
+    FAILED check, surfaced as such, because an acceptance gate that cannot
+    measure must not pass."""
     from data_quality_check_spark.operators.curation import decision_eval
 
     labels = spark.read.parquet(gates.labels_path).select(
