@@ -194,8 +194,8 @@ def bench_queries(spark) -> "tuple[dict[str, float], float, dict[str, dict], flo
         default_model()
         yield from it
 
-    # two chained python stages: pipelines like langid→perplexity hold TWO workers
-    # per task, so a single-stage warmup would only spawn half the fleet
+    # two chained python stages: a plan with two ArrowEvalPython nodes holds TWO
+    # workers per task, so a single-stage warmup would only spawn half the fleet
     spark.range(CPUS * 1000, numPartitions=CPUS).mapInPandas(_warm, "id long").mapInPandas(
         _warm, "id long"
     ).count()

@@ -950,17 +950,18 @@ def q_range_clicks_after_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Model-stage UDF path on the gate table: hashed char-trigram langid + n-gram
-# perplexity (Arrow-batched iterator pandas UDFs, the north-rule scoring stages).
-# Oracle = full driver-process twin of the same kernels (oracles.model_scores_sql):
-# the value-hash cross-checks the Spark plumbing (Arrow batching, iterator UDF
-# state, the asNondeterministic fence, bit-exact F.round twin) against a
-# single-process execution.
+# perplexity in one Arrow-batched iterator pandas UDF (`fused.with_text_scores`,
+# the filter job's `CharTrigramLM.score` kernel). Oracle = full driver-process
+# twin in the golden two-call form (oracles.model_scores_sql: `predict`, then
+# `perplexity`): the value-hash cross-checks the Spark plumbing (Arrow
+# batching, iterator UDF state, the asNondeterministic fence, bit-exact
+# F.round twin) and the fused kernel against a single-process execution.
 @register("model_scores_documents", lambda: _OR.model_scores_sql(ORACLE_SF_DIR))
 def q_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_quality_check_spark.functions import langid as LID
+    from data_quality_check_spark.functions.fused import with_text_scores
 
     df = t(spark, sf_dir, "documents").select("doc_id", "text")
-    scored = LID.with_perplexity(LID.with_langid(df, "text"), "text", "lang")
+    scored = with_text_scores(df, "text")
     return scored.select(
         "doc_id",
         "lang",
@@ -1092,9 +1093,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_neardup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_quality_check_spark.operators.dedup import _clusters_from_pairs
 
-    return _clusters_from_pairs(
-        _shared_minhash_pairs(spark, sf_dir), "doc_id", max_iter=50
-    )
+    return _clusters_from_pairs(_shared_minhash_pairs(spark, sf_dir), "doc_id")
 
 
 # MinHash-LSH candidates confirmed by exact Jaccard: with r=3 rows × b=42 bands
@@ -1786,9 +1785,7 @@ FROM labels l JOIN sizes s USING (comp)
 def q_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_quality_check_spark.operators.dedup import _clusters_from_pairs
 
-    return _clusters_from_pairs(
-        _shared_phash_pairs(spark, sf_dir), "image_id", max_iter=50
-    )
+    return _clusters_from_pairs(_shared_phash_pairs(spark, sf_dir), "image_id")
 
 
 def _phash_keep_best_oracle() -> str:
@@ -1880,9 +1877,7 @@ def q_image_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_quality_check_spark.operators.dedup import _clusters_from_pairs
 
     img = synthetic_image_meta_df(t(spark, sf_dir, "documents"))
-    clusters = _clusters_from_pairs(
-        _shared_phash_pairs(spark, sf_dir), "image_id", max_iter=50
-    )
+    clusters = _clusters_from_pairs(_shared_phash_pairs(spark, sf_dir), "image_id")
     return CU.keep_best(img, clusters, "image_id", "byte_len")
 
 
@@ -1947,9 +1942,7 @@ def q_multimodal_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = img.select(
         "image_id", keep_img.alias("keep_image"), keep_cap.alias("keep_caption")
     )
-    clusters = _clusters_from_pairs(
-        _shared_phash_pairs(spark, sf_dir), "image_id", max_iter=50
-    )
+    clusters = _clusters_from_pairs(_shared_phash_pairs(spark, sf_dir), "image_id")
     losers = (
         CU.keep_best(img, clusters, "image_id", "byte_len")
         .filter(~F.col("keep"))
@@ -2209,17 +2202,17 @@ def q_drift_psi_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # CCNet-style per-language perplexity terciles (Wenzek et al. 2019,
 # arXiv:1911.00359): head/middle/tail buckets per language over the SAME
-# langid+ppl UDF chain as model_scores_documents, bucketed by exact ntile with
+# langid+ppl UDF as model_scores_documents, bucketed by exact ntile with
 # a (ppl, doc_id) total order — deterministic in both engines, no quantile
 # interpolation to drift. The 10^12-row path is curation.bucket_thresholds +
 # apply_bucket_thresholds (frozen per-group cuts, row-local labeling, zero
 # sort); the ntile form is the calibration-time / rewrite-time shape.
 @register("ppl_buckets_documents", lambda: _OR.ppl_buckets_sql(ORACLE_SF_DIR))
 def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_quality_check_spark.functions import langid as LID
+    from data_quality_check_spark.functions.fused import with_text_scores
 
     df = t(spark, sf_dir, "documents").select("doc_id", "text")
-    scored = LID.with_perplexity(LID.with_langid(df, "text"), "text", "lang")
+    scored = with_text_scores(df, "text")
     scored = scored.select("doc_id", "lang", F.round("ppl", 4).alias("ppl"))
     return CU.score_ntile_buckets(scored, F.col("ppl"), "lang", "doc_id", n=3)
 

@@ -1,13 +1,15 @@
 """Fused model stage: decode-check + language-ID + perplexity in ONE Python
 crossing.
 
-This is the filter job's only model-scoring path. Three chained column UDFs
-(decode check → `with_langid` → `with_perplexity`) would be three
-ArrowEvalPython nodes: the rowset would cross the JVM↔Python boundary three
-times per task, and per-crossing overhead (worker round-trip, Arrow
-[de]serialization) dominates wall time long before CPU does.
-`with_model_scores_fused` computes all three in one crossing; its output
-matches the python golden (`reference_impl.compute_golden`, tested).
+This is the package's only model-scoring path. Chained column UDFs (decode
+check → language ID → perplexity) would be one ArrowEvalPython node each: the
+rowset would cross the JVM↔Python boundary once per stage per task, and
+per-crossing overhead (worker round-trip, Arrow [de]serialization) dominates
+wall time long before CPU does. `with_model_scores_fused` (the filter job)
+computes all three in one crossing, `with_text_scores` (the text-only gate
+queries) language ID + perplexity in one; both call `CharTrigramLM.score`
+once per batch, and their output matches the python golden
+(`reference_impl.compute_golden`, `oracles.model_scores_sql`; tested).
 
 Shape matters as much as count: this is a *struct-returning pandas_udf*, NOT a
 `mapInPandas` over full rows — with mapInPandas the multi-KB `bytes` column
@@ -30,12 +32,16 @@ from pyspark.sql.types import BooleanType, DoubleType, StringType, StructField, 
 
 from data_quality_check_spark.pipeline import codecs
 
+_TEXT_FIELDS = [
+    StructField("lang", StringType()),
+    StructField("lang_conf", DoubleType()),
+    StructField("ppl", DoubleType()),
+]
+TEXT_SCHEMA = StructType(_TEXT_FIELDS)
 FUSED_SCHEMA = StructType(
     [
         StructField("flag_decode_failed", BooleanType()),
-        StructField("lang", StringType()),
-        StructField("lang_conf", DoubleType()),
-        StructField("ppl", DoubleType()),
+        *_TEXT_FIELDS,
         # scrub_text(caption.strip()) for EVERY row (keep-masking happens later,
         # JVM-side): the caption is already in Python for the language model, so
         # scrubbing here costs one compiled-re trigger scan instead of a JVM
@@ -83,6 +89,25 @@ def fused_scores_udf(
         )
 
 
+@F.pandas_udf(TEXT_SCHEMA)
+def text_scores_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    from data_quality_check_spark.functions.textmodel import default_model
+
+    model = default_model()  # cached per worker process
+    for texts in batches:
+        langs, conf, _, ppl = model.score(texts.fillna("").tolist())
+        yield pd.DataFrame({"lang": langs, "lang_conf": conf, "ppl": ppl})
+
+
+def with_text_scores(df: DataFrame, text_col: str) -> DataFrame:
+    """Adds lang, lang_conf and ppl from `text_col` — one python crossing,
+    map-side (no shuffle). The asNondeterministic fence is the one
+    `with_model_scores_fused` explains: a downstream filter or second
+    reference must not duplicate the UDF evaluation."""
+    m = text_scores_udf.asNondeterministic()(F.col(text_col))
+    return df.withColumn("_m", m).select("*", "_m.lang", "_m.lang_conf", "_m.ppl").drop("_m")
+
+
 def with_model_scores_fused(
     df: DataFrame,
     bytes_col: str = "bytes",
@@ -94,8 +119,8 @@ def with_model_scores_fused(
     (the scrubbed caption of every row, which `run.finalize` keep-masks) —
     one python crossing, `bytes` inbound-only, map-side (no shuffle).
 
-    Same kernels as `with_langid` + `with_perplexity` (langid.py) and the
-    python golden (`reference_impl.compute_golden`).
+    Same kernel as `with_text_scores` and the python golden
+    (`reference_impl.compute_golden`).
     """
     # asNondeterministic is an optimizer fence, not a semantics statement: the
     # UDF is pure, but without the fence Catalyst pushes the downstream keep/

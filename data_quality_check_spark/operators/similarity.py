@@ -526,7 +526,6 @@ def neardup_clusters_lsh(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Embedding near-dup CLUSTERS: banded-SRP pair generation feeding the
     shared pointer-jumping connected-components labeling (dedup.py) — the
@@ -538,7 +537,7 @@ def neardup_clusters_lsh(
         df, threshold=threshold, bands=bands, bits_per_band=bits_per_band,
         dim=dim, id_col=id_col, vec_col=vec_col,
     )
-    return _clusters_from_pairs(pairs, id_col, max_iter)
+    return _clusters_from_pairs(pairs, id_col)
 
 
 def _ivf_assigned(
@@ -901,7 +900,6 @@ def semdedup(
     seed: int = 13,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_iter: int = 50,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic deduplication
     via k-means clustering + within-cluster cosine threshold + centroid-
@@ -951,7 +949,7 @@ def semdedup(
         assigned, threshold=threshold, id_col=id_col, vec_col=vec_col,
         block_col="cell",
     )
-    comps = _clusters_from_pairs(pairs, id_col, max_iter)
+    comps = _clusters_from_pairs(pairs, id_col)
     members = assigned.select(id_col, "cell", "centroid_cosine").join(
         comps.select(id_col, "component"), id_col, "inner"
     )

@@ -121,11 +121,12 @@ SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}
 
 
 def model_scores_sql(sf_dir: str) -> str:
-    """Full driver-process twin of the langid + perplexity UDF chain (same
-    CharTrigramLM kernels, same rounding), materialized to scratch parquet.
-    The value-hash therefore checks the Spark plumbing — Arrow batching,
-    iterator UDF state, the asNondeterministic fence — against a single-
-    process execution of the identical model."""
+    """Full driver-process twin of the langid + perplexity UDF (same
+    CharTrigramLM tables, same rounding), materialized to scratch parquet.
+    It takes the golden two-call form (`predict`, then `perplexity`) where the
+    UDF takes the fused `score`, so the value-hash checks the fusion as well
+    as the Spark plumbing — Arrow batching, iterator UDF state, the
+    asNondeterministic fence — against a single-process execution."""
     from data_quality_check_spark.functions.textmodel import default_model
 
     docs = _read_cols(sf_dir, "documents", ["doc_id", "text"])
@@ -686,7 +687,7 @@ SELECT id_a, id_b, cosine FROM p WHERE cosine >= {threshold!r}
 def ppl_buckets_sql(sf_dir: str, n: int = 3) -> str:
     """CCNet-style per-language perplexity terciles over the model_scores
     golden: the langid+ppl kernels are reproduced driver-side (same
-    CharTrigramLM as the Spark UDFs — see `model_scores_sql`), the bucketing
+    CharTrigramLM as the Spark UDF — see `model_scores_sql`), the bucketing
     stays genuine DuckDB window SQL, so the value-hash cross-checks BOTH the
     UDF plumbing and the exact-ntile assignment against an independent engine.
     ntile with a (ppl, doc_id) total order has no interpolation to drift."""

@@ -32,6 +32,8 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from data_quality_check_spark.pipeline.run import read_manifest
+
 
 @dataclass
 class AuditGates:
@@ -69,12 +71,6 @@ class PublishRejected(RuntimeError):
         self.report = report
 
 
-def _read_manifest(checkpoint_dir: str):
-    import pyarrow.parquet as pq
-
-    return pq.read_table(os.path.join(checkpoint_dir, "manifest")).to_pandas()
-
-
 def _staged_counts(staged: DataFrame) -> dict:
     row = staged.agg(
         F.count(F.lit(1)).alias("rows"),
@@ -104,7 +100,7 @@ def audit_staged(
             "reference-label table to score against (a silently-skipped "
             "acceptance gate would be worse than none)"
         )
-    manifest = _read_manifest(checkpoint_dir)
+    manifest = read_manifest(checkpoint_dir)
     expect_kept = int(manifest["rows_kept"].sum())
     expect_in = int(manifest["rows_in"].sum())
     expect_buckets = int((manifest["rows_kept"] > 0).sum())

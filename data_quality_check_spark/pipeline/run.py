@@ -236,31 +236,25 @@ def _validate_bucket_layout(raw: DataFrame, num_buckets: int) -> dict[int, list[
     return files or None
 
 
-def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> list[int]:
-    path = os.path.join(checkpoint_dir, "manifest")
-    # fresh-run fast path: a missing manifest is the normal first-run case —
-    # skip the doomed read so Spark's ExecutionListenerBus doesn't log a
-    # PATH_NOT_FOUND ERROR per fresh run. Existence is probed through Hadoop's
-    # FileSystem (NOT os.path), so a schemeless path resolves against
-    # fs.defaultFS exactly as spark.read would — an HDFS manifest stays
-    # visible. Any probe failure falls through to the read attempt.
+def read_manifest(checkpoint_dir: str):
+    """The checkpoint's manifest as a pandas frame: one row per committed
+    bucket. `_write_checkpoint` appends it with local file I/O, so it is read
+    the same way — pyarrow on the driver, no Spark job. A missing manifest
+    raises FileNotFoundError; an unreadable file raises too."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(checkpoint_dir, "manifest")).to_pandas()
+
+
+def completed_buckets(checkpoint_dir: str) -> list[int]:
+    """Buckets the manifest records as committed; none before the first
+    commit. An unreadable manifest raises instead of reading as "no bucket
+    done", which would re-run every bucket and append duplicate metrics."""
     try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return []
-    except Exception:
-        # no classic-JVM gateway (Spark Connect) or a py4j hiccup: fall
-        # through to the read attempt. A local os.path probe here would be
-        # wrong for a schemeless path on an HDFS-defaultFS cluster (silent
-        # resume loss); the read is correct everywhere and only noisier.
-        pass
-    try:
-        rows = spark.read.parquet(path).select("bucket").distinct().collect()
-        return sorted(r["bucket"] for r in rows)
-    except Exception:
+        manifest = read_manifest(checkpoint_dir)
+    except FileNotFoundError:
         return []
+    return sorted({int(b) for b in manifest.get("bucket", ())})
 
 
 def _gated(df: DataFrame, budget: int) -> tuple[DataFrame, int]:
@@ -942,7 +936,7 @@ def run_filter(
             df = with_rid(raw)
 
         with rec.step("read_manifest"):
-            done = completed_buckets(spark, checkpoint_dir)
+            done = completed_buckets(checkpoint_dir)
         pending = [b for b in range(cfg.num_buckets) if b not in done]
         if max_buckets is not None:
             pending = pending[:max_buckets]
@@ -989,21 +983,16 @@ def run_filter(
                     .parquet(spill_dir)
                 )
                 # Group pending buckets by their ACTUAL per-bucket decision
-                # counts (one tiny aggregate over the already-persisted
-                # decisions), not a uniform n/num_buckets estimate — a skewed
-                # bucket could otherwise push one group's pruned slice past
-                # the broadcast budget (ADVICE r2). Greedy fill: each group's
-                # decision sum stays within max_broadcast_decisions (single
-                # oversized buckets get their own group — their slice is the
-                # irreducible minimum).
+                # counts (the spill's Parquet footers, read on the driver —
+                # no Spark job), not a uniform n/num_buckets estimate — a
+                # skewed bucket could otherwise push one group's pruned slice
+                # past the broadcast budget (ADVICE r2). Greedy fill: each
+                # group's decision sum stays within max_broadcast_decisions
+                # (single oversized buckets get their own group — their slice
+                # is the irreducible minimum).
                 by_bucket = {
-                    r["_bucket"]: r["cnt"]
-                    for r in dups.withColumn(
-                        "_bucket", bucket_col(num_buckets=cfg.num_buckets)
-                    )
-                    .groupBy("_bucket")
-                    .agg(F.count(F.lit(1)).alias("cnt"))
-                    .collect()
+                    b: _footer_rows(_partition_files(u))
+                    for b, u in _partition_uris(spark, spill_dir, pending).items()
                 }
             groups, cur, cur_n = [], [], 0
             for bkt in pending:

@@ -157,6 +157,11 @@ def run_stream_filter(
     def _token(batch_id: int) -> str:
         return f"{_ckpt_key()}-b{int(batch_id)}"
 
+    def _metrics_file(batch_id: int) -> str:
+        return os.path.join(
+            checkpoint_dir, "stream_run_metrics", f"batch-{int(batch_id):010d}.parquet"
+        )
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # one run record per micro-batch: dedup_incremental's signature pins,
         # the decision gate's pins and the scored snapshot are released when
@@ -175,30 +180,22 @@ def run_stream_filter(
             # WRONG, not just wasteful: the batch's own captions are in the
             # corpus now, so a recomputed verdict would drop every row as its
             # own corpus_duplicate. Replay = restore totals from the committed
-            # metrics row and do nothing else.
+            # metrics row (its own per-batch file, read on the driver) and do
+            # nothing else.
+            import pyarrow.parquet as pq
+
             try:
-                rows = (
-                    spark.read.parquet(
-                        os.path.join(checkpoint_dir, "stream_run_metrics")
-                    )
-                    .filter(F.col("batch_id") == int(batch_id))
-                    .select("rows_in", "rows_kept")
-                    .collect()
-                )
-            except Exception:
-                # a missing/unreadable metrics DIRECTORY is the same
-                # divergence as a missing row — surface the safety
-                # explanation, not a raw PATH_NOT_FOUND
-                rows = []
-            if not rows:
+                m = pq.read_table(
+                    _metrics_file(batch_id), columns=["rows_in", "rows_kept"]
+                ).to_pylist()[0]
+            except FileNotFoundError as exc:
                 raise RuntimeError(
                     f"batch {batch_id} is recorded as applied in the seen "
                     "corpus but its stream_run_metrics row is missing — the "
                     "metrics table and the checkpoint have diverged (was the "
                     "metrics directory deleted?); reprocessing is NOT safe "
                     "(the batch's captions are in the corpus already)"
-                )
-            m = rows[0]
+                ) from exc
             totals["batches"] += 1
             totals["rows_in"] += int(m["rows_in"])
             totals["rows_kept"] += int(m["rows_kept"])
@@ -286,12 +283,8 @@ def run_stream_filter(
         # batch_id, and one directory with two schemas reads back
         # footer-dependently); deterministic per-batch filename → a replayed
         # batch REPLACES its metrics row instead of double-counting
-        _append_parquet(
-            pdf,
-            os.path.join(checkpoint_dir, "stream_run_metrics"),
-            cfg.run_id,
-            fname=f"batch-{int(batch_id):010d}.parquet",
-        )
+        metrics_dir, fname = os.path.split(_metrics_file(batch_id))
+        _append_parquet(pdf, metrics_dir, cfg.run_id, fname=fname)
         totals["batches"] += 1
         totals["rows_in"] += int(m["rows_in"])
         totals["rows_kept"] += int(m["rows_kept"])

@@ -274,14 +274,15 @@ def test_connected_components_topologies(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_raises_on_no_convergence(spark):
+def test_connected_components_raises_on_no_convergence(spark, monkeypatch):
+    monkeypatch.setattr(DD, "CC_MAX_ROUNDS", 1)
     edges = spark.createDataFrame([(i, i + 1) for i in range(1, 8)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="converge"):
-        DD.connected_components(edges, max_iter=1)
+        DD.connected_components(edges)
 
 
-def test_neardup_clusters_transitive_and_excludes_singletons(spark):
-    docs = spark.createDataFrame(
+def _transitive_docs(spark):
+    return spark.createDataFrame(
         [
             # a-b and b-c are near-dups; a-c only via transitivity → one cluster of 3
             (1, "the quick brown fox jumps over the lazy dog tonight"),
@@ -291,10 +292,28 @@ def test_neardup_clusters_transitive_and_excludes_singletons(spark):
         ],
         "doc_id long, text string",
     )
+
+
+def test_neardup_clusters_transitive_and_excludes_singletons(spark):
+    docs = _transitive_docs(spark)
     got = DD.neardup_clusters(docs, "doc_id", "text", threshold=0.5, ngram=3).collect()
     by_id = {r.doc_id: (r.component, r.csize) for r in got}
     assert set(by_id) == {1, 2, 3}  # singleton 4 excluded
     assert by_id[1] == by_id[2] == by_id[3] == (1, 3)
+
+
+def test_neardup_clusters_minhash_matches_exact(spark):
+    """The README's headline dedup call: MinHash-LSH pair generation feeds the
+    same clustering as the exact-Jaccard pairs, so the clusters agree."""
+    docs = _transitive_docs(spark)
+
+    def clusters(fn):
+        got = fn(docs, "doc_id", "text", threshold=0.5, ngram=3).collect()
+        return sorted(tuple(r) for r in got)
+
+    exact = clusters(DD.neardup_clusters)
+    assert exact == [(1, 1, 3), (2, 1, 3), (3, 1, 3)]
+    assert clusters(DD.neardup_clusters_minhash) == exact
 
 
 def test_connected_components_long_path_converges(spark):

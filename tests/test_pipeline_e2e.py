@@ -194,6 +194,36 @@ def test_metrics_and_manifest(spark, pipeline_out):
     assert metrics["n_scrubbed"].sum() > 0
 
 
+def test_completed_buckets_reads_manifest_without_spark_jobs(spark, pipeline_out, tmp_path):
+    """The resume read of the manifest runs on the driver (no Spark job), and
+    an unreadable manifest file raises instead of reading as "no bucket
+    done" — a silent full re-run that would append duplicate metrics rows."""
+    import shutil
+
+    import pyarrow as pa
+
+    from data_quality_check_spark.pipeline.run import completed_buckets
+
+    _, ckpt, _ = pipeline_out
+    sc = spark.sparkContext
+    group = "completed-buckets-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        done = completed_buckets(ckpt)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert done == list(range(FilterConfig().num_buckets))
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert completed_buckets(str(tmp_path / "fresh")) == []
+
+    bad = tmp_path / "bad"
+    shutil.copytree(os.path.join(ckpt, "manifest"), bad / "manifest")
+    (bad / "manifest" / "part-garbage.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        completed_buckets(str(bad))
+
+
 def test_scrub_col_equals_python(spark):
     from data_quality_check_spark.functions.scrub import (
         scrub_col,

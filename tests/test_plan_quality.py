@@ -208,6 +208,46 @@ def test_filter_pass_runs_fused_udf_once(spark, tmp_path):
     assert _plan(out).count("ArrowEvalPython") == 1
 
 
+@pytest.mark.parametrize("name", ["model_scores_documents", "ppl_buckets_documents"])
+def test_text_model_queries_cross_into_python_once(spark, name):
+    """The gate queries score language and perplexity in ONE Python crossing
+    (`fused.with_text_scores`), not a langid UDF chained into a perplexity UDF."""
+    from data_quality_check_spark import entry_queries as EQ
+
+    assert _plan(EQ.queries()[name](spark, SF_DIR)).count("ArrowEvalPython") == 1
+
+
+def test_udf_bodies_call_only_the_fused_model_kernel():
+    """Inside a pandas_udf the trigram model is called through
+    `CharTrigramLM.score` only: `predict` + `perplexity` is the golden
+    two-call form (reference_impl, oracles) and twice the encode+gather work."""
+    import ast
+    import pathlib
+
+    import data_quality_check_spark
+
+    def is_pandas_udf(dec):
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        name = target.attr if isinstance(target, ast.Attribute) else getattr(target, "id", "")
+        return name == "pandas_udf"
+
+    offenders = []
+    for path in pathlib.Path(data_quality_check_spark.__file__).parent.rglob("*.py"):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if not any(is_pandas_udf(d) for d in fn.decorator_list):
+                continue
+            offenders += [
+                f"{path.name}:{node.lineno} {fn.name}"
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("predict", "perplexity")
+            ]
+    assert not offenders, offenders
+
+
 def test_embedding_lsh_band_join_is_narrow_and_pinned(spark, sf_dir):
     """The banded-SRP near-dup candidate stage must (a) self-join on the
     narrow (band, chunk) key — the wide embedding column joins back by id

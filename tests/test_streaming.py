@@ -415,6 +415,11 @@ def test_stream_corpus_dedup_against_seen_artifacts(spark, tmp_path):
         pa.Table.from_pandas(pdf.iloc[30:], schema=schema, preserve_index=False),
         str(landing / "part-001.parquet"),
     )
+    # the file source takes files in modification-time order (millisecond
+    # resolution; a tie falls back to the listing order, which can put
+    # part-001 first): date b2 a second after b1 so b1 is the first batch
+    t0 = os.stat(landing / "part-000.parquet").st_mtime_ns
+    os.utime(landing / "part-001.parquet", ns=(t0 + 10**9, t0 + 10**9))
 
     # baseline WITHOUT corpus dedup — the independent expectation source
     cfg = FilterConfig(num_buckets=4)
@@ -492,6 +497,37 @@ def test_stream_corpus_dedup_against_seen_artifacts(spark, tmp_path):
     assert art.fingerprints().count() == fp_before_replay
     m2 = spark.read.parquet(str(tmp_path / "ckpt" / "stream_run_metrics")).toPandas()
     assert len(m2) == len(m)  # one metrics row per batch_id, replay kept it
+
+
+def test_stream_replay_without_metrics_file_refuses(spark, tmp_path):
+    """A replayed batch that the seen corpus records as applied restores its
+    totals from its own metrics file. With that file deleted it cannot, and
+    reprocessing would drop its rows as their own corpus duplicates: the
+    replay raises the diverged-metrics error instead."""
+    from data_quality_check_spark.operators.dedup import SeenCorpusArtifacts
+    from data_quality_check_spark.sources.tables import TableIO
+
+    landing = tmp_path / "landing"
+    write_images_parquet(str(landing), n=40, num_files=2)
+    art = SeenCorpusArtifacts(
+        TableIO(spark, str(tmp_path / "corpus_wh"), backend="parquet"), ngram=1
+    )
+    art.init(
+        spark.createDataFrame(
+            [("seen-0", "a bootstrap caption no fixture row carries")],
+            "doc_id string, caption string",
+        ),
+        "doc_id",
+        "caption",
+    )
+    ckpt = tmp_path / "ckpt"
+    args = (spark, str(landing), str(tmp_path / "out"), str(ckpt), FilterConfig(num_buckets=4))
+    assert run_stream_filter(*args, seen_artifacts=art)["batches"] == 1
+
+    shutil.rmtree(ckpt / "stream" / "commits")  # offsets survive, commit doesn't
+    os.remove(ckpt / "stream_run_metrics" / "batch-0000000000.parquet")
+    with pytest.raises(Exception, match="diverged"):
+        run_stream_filter(*args, seen_artifacts=art)
 
 
 def test_stream_corpus_dedup_duplicate_rows_no_fanout(spark, tmp_path):
