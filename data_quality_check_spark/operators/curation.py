@@ -131,7 +131,6 @@ def contamination_overlap(
     text_col: str,
     ngram: int = 3,
     threshold_pct: int = 50,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Flag training documents whose shingle sets overlap an evaluation set —
     the train/test contamination check every LLM data pipeline runs before a
@@ -143,24 +142,23 @@ def contamination_overlap(
     (100*n_shared >= threshold_pct*n_tok) so engines can't drift on float
     rounding.
 
-    The eval shingle universe is deduped then broadcast (eval benchmarks are
-    tiny next to the train corpus); the train side never shuffles its text —
-    only (id, matched-token) pairs move, re-aggregated map-side by id.
-    `broadcast_eval=False` drops the hint for corpus-vs-corpus overlap checks
-    where the "eval" side is itself huge: the probe becomes a plain shuffled
-    equi-join on the token, with AQE handling hot-shingle skew.
+    The eval shingle universe is deduped, then sized by `RunRecord.local`:
+    an eval benchmark (tiny next to the train corpus) broadcasts as a local
+    relation, and the train side never shuffles its text — only
+    (id, matched-token) pairs move, re-aggregated map-side by id. A
+    corpus-vs-corpus check whose "eval" side is past `record.BROADCAST_ROWS`
+    probes the pinned universe through a plain shuffled equi-join on the
+    token instead, with AQE handling hot-shingle skew.
     """
     toks = train.select(
         F.col(id_col).alias("_id"), shingles_col(text_col, ngram).alias("_toks")
     ).filter(F.size("_toks") > 0)
     exploded = toks.select("_id", F.size("_toks").alias("n_tok"),
                            F.explode("_toks").alias("tok"))
-    eval_toks = (
+    eval_toks, _ = current().local(
         eval_df.select(F.explode(shingles_col(text_col, ngram)).alias("tok"))
         .distinct()
     )
-    if broadcast_eval:
-        eval_toks = F.broadcast(eval_toks)
     shared = exploded.join(eval_toks, "tok").groupBy(
         "_id", "n_tok"
     ).agg(F.count(F.lit(1)).alias("n_shared"))
@@ -457,7 +455,6 @@ def dedup_survivors(
     clusters: DataFrame,
     id_col: str,
     quality_col: str,
-    max_broadcast_ids: int = 2_000_000,
 ) -> DataFrame:
     """The deduped corpus: every singleton (no near-dup partner) plus the ONE
     keep-best winner per cluster. Emits ({id_col}, was_clustered) — join back
@@ -465,28 +462,21 @@ def dedup_survivors(
     election.
 
     Losers are removed with an anti-join on the (dup-rate-proportional) loser
-    id set. The broadcast is SIZE-GATED (VERDICT r2 item 2, mirroring
-    pipeline.run's max_broadcast_decisions): the elected table is pinned
-    anyway — one cheap count on it decides the join strategy. At or below
-    `max_broadcast_ids` clustered rows both joins broadcast (id rows are
-    ~16 B; 2M ≈ 32 MB per executor); above it — a 30%-duplicate crawl at
-    10^12 rows would otherwise try to ship ~10^11 ids to every executor —
-    they fall back to plain shuffled joins, where AQE and the id-hash
-    partitioning take over. Output is identical on both paths
-    (tests/test_curation.py pins it).
+    id set. The broadcast is SIZE-GATED (VERDICT r2 item 2) by the same gate
+    as pipeline.run's decision tables, `RunRecord.local`: the election feeds
+    both joins, so it runs once, and at or below `record.BROADCAST_ROWS`
+    clustered rows both joins broadcast it as a local relation; above it — a
+    30%-duplicate crawl at 10^12 rows would otherwise try to ship ~10^11 ids
+    to every executor — they shuffle against the pinned election, where AQE
+    and the id-hash partitioning take over. Output is identical on both
+    paths (tests/test_curation.py pins it).
     """
-    # the election feeds BOTH the loser anti-join and the winner flag join —
-    # pin it so the corpus-clusters join + window run once, not per branch
-    elected = current().pin(keep_best(df, clusters, id_col, quality_col))
-    small = elected.count() <= max_broadcast_ids
-    hint = F.broadcast if small else (lambda d: d)
+    elected, _ = current().local(keep_best(df, clusters, id_col, quality_col))
     losers = elected.filter(~F.col("keep")).select(id_col)
     winners = elected.filter(F.col("keep")).select(id_col)
-    kept = df.select(id_col).join(hint(losers), id_col, "left_anti")
+    kept = df.select(id_col).join(losers, id_col, "left_anti")
     return kept.join(
-        hint(winners.withColumn("was_clustered", F.lit(True))),
-        id_col,
-        "left",
+        winners.withColumn("was_clustered", F.lit(True)), id_col, "left"
     ).select(id_col, F.coalesce("was_clustered", F.lit(False)).alias("was_clustered"))
 
 

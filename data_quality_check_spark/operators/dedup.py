@@ -607,7 +607,6 @@ def duplicate_span_stats(
     text_col: str,
     span_words: int = 8,
     min_docs: int = 2,
-    max_broadcast_spans: int = 2_000_000,
 ) -> DataFrame:
     """C4-style duplicated-span statistics: per document, how many of its
     fixed-width word spans also occur in ≥ `min_docs` documents (C4 §2.2
@@ -625,12 +624,12 @@ def duplicate_span_stats(
       * the global span-frequency agg is a partial/final hash agg keyed on the
         fingerprint (uniformly distributed — no salting needed);
       * the dup-span set (≥min_docs) is usually a small fraction of all spans:
-        it broadcasts when ≤ `max_broadcast_spans` (counted on the pinned agg
-        output — same size gate as `dedup_survivors`), else falls back to a
-        shuffled left join where AQE handles any residual skew. A boilerplate
-        span shared by millions of docs is ONE key on the build side either
-        way — the probe side stays balanced because each doc row carries it
-        independently.
+        `RunRecord.local` broadcasts it as a local relation when it fits
+        `record.BROADCAST_ROWS`, else it falls back to a shuffled left join
+        against the pinned set, where AQE handles any residual skew. A
+        boilerplate span shared by millions of docs is ONE key on the build
+        side either way — the probe side stays balanced because each doc row
+        carries it independently.
 
     The span lineage feeds both the frequency agg and the probe side but is
     deliberately NOT pinned: like the exploded Jaccard token table (BENCH.md
@@ -655,16 +654,13 @@ def duplicate_span_stats(
         # truncation, so engines agree exactly).
         F.expr("CAST(conv(substr(md5(_s), 1, 15), 16, 10) AS BIGINT)").alias("sp"),
     )
-    dup_sp = current().pin(
+    dup_sp, _ = current().local(
         spans.groupBy("sp")
         .agg(F.count_distinct("id").alias("nd"))
         .filter(F.col("nd") >= min_docs)
         .select("sp")
     )
-    hint = F.broadcast if dup_sp.count() <= max_broadcast_spans else (lambda d: d)
-    flagged = spans.join(
-        hint(dup_sp.withColumn("_dup", F.lit(1))), "sp", "left"
-    )
+    flagged = spans.join(dup_sp.withColumn("_dup", F.lit(1)), "sp", "left")
     return (
         flagged.groupBy("id")
         .agg(

@@ -14,8 +14,10 @@ Scale design notes (SURVEY.md §3.4, §4.2):
     re-scanned, or re-decoded. Per-bucket rows_kept (and rows_in on a
     partition-dir input) are read from Parquet footers on the driver: the
     `_bucket=b` partitions the write just produced hold exactly those rows.
-    The only other action is a cheap count of the
-    narrow dedup-decision table that gates its join strategy. The reference
+    The only other actions are the bounded collects of `RunRecord.local`,
+    which bring the narrow dup-phash and dedup-decision tables to the driver
+    when they fit; the write then broadcasts those rows as local relations,
+    without another job. The reference
     issues O(cols + rules) full-scan jobs for the same information
     (engine.py:439-553); this plan issues one per commit group.
   * `bytes` never shuffles on the production layout: a pre-bucketed input
@@ -29,7 +31,7 @@ Scale design notes (SURVEY.md §3.4, §4.2):
     narrow (image_id, phash, rid) scan — `bytes`/`caption` never read — and
     the resulting small "dup decisions" table (phash-losers to drop + the
     surviving row id for multi-row ids) joins back as a broadcast. The
-    broadcast is size-gated: past `max_broadcast_decisions` rows the table
+    broadcast is size-gated: past `record.BROADCAST_ROWS` rows the table
     spills bucket-partitioned beside the checkpoint and pending buckets are
     processed in groups against their partition-pruned slice (on Iceberg: a
     storage-partitioned join against a bucket(B, image_id) decisions table).
@@ -46,8 +48,8 @@ Scale design notes (SURVEY.md §3.4, §4.2):
     empty ones), so resume converges.
   * ONE filter core for both jobs: the streaming twin
     (streaming/stream_filter.py) runs `decide` and `_write_selected` on each
-    micro-batch — the same decision tables, size gate (`_gated`) and
-    bucketed write as `run_filter`, so one FilterConfig means one verdict.
+    micro-batch — the same decision tables, size gate (`RunRecord.local`)
+    and bucketed write as `run_filter`, so one FilterConfig means one verdict.
   * per-language skew: the model stage is one map-side Arrow UDF
     (functions/fused.py), so there is no language-keyed shuffle and no skewed
     key to salt; the Zipf-heavy language mix costs nothing extra.
@@ -72,6 +74,7 @@ if __package__ in (None, ""):  # spark-submit runs this file as a plain script;
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from data_quality_check_spark import record
 from data_quality_check_spark.functions.fused import with_model_scores_fused
 from data_quality_check_spark.pipeline.heuristics import (
     FLAG_COLS,
@@ -128,11 +131,6 @@ class FilterConfig:
     min_lang_conf: float = 0.15
     max_ppl: float = 30_000.0
     num_buckets: int = 64  # checkpoint/commit granularity; also the write-task fan-out
-    # dedup decisions above this row count stop broadcasting and spill to a
-    # bucket-partitioned intermediate, processed in bucket groups whose pruned
-    # slice fits the budget (decision rows are 3 narrow columns, ~50 B each;
-    # 2M rows ≈ 100 MB per executor — a safe explicit-broadcast size).
-    max_broadcast_decisions: int = 2_000_000
     # None → exact-phash dedup only; k → ALSO group ids whose phashes are
     # within Hamming k (perceptual near-dups: re-encodes, slight crops) via
     # banded pairs + connected components over the DISTINCT-phash table.
@@ -257,17 +255,6 @@ def completed_buckets(checkpoint_dir: str) -> list[int]:
     return sorted({int(b) for b in manifest.get("bucket", ())})
 
 
-def _gated(df: DataFrame, budget: int) -> tuple[DataFrame, int]:
-    """The size gate of every dup-rate-sized table (dup phashes, near-dup
-    acting phashes, dup and contamination decisions): pin it to the current
-    run record, count it once, and broadcast-hint it only when its n rows fit
-    `budget` — past it the join shuffles instead of shipping the table to
-    every executor. Returns (table, n)."""
-    df = current().pin(df)
-    n = df.count()
-    return (F.broadcast(df) if n <= budget else df), n
-
-
 def _decisions_from_candidates(cand: DataFrame, gkey: str) -> DataFrame:
     """Shared id-level decision tail for dup_decisions / near_dup_decisions:
     candidate rows (image_id, <gkey>, rid) → (image_id, is_loser, keep_rid).
@@ -293,7 +280,7 @@ def _decisions_from_candidates(cand: DataFrame, gkey: str) -> DataFrame:
     )
 
 
-def dup_decisions(df: DataFrame, max_broadcast: int = 2_000_000) -> DataFrame:
+def dup_decisions(df: DataFrame) -> DataFrame:
     """Small table of ids needing dedup action, from a narrow
     (image_id, phash, rid) columnar scan — `bytes` is never read.
 
@@ -316,25 +303,23 @@ def dup_decisions(df: DataFrame, max_broadcast: int = 2_000_000) -> DataFrame:
     at 32 cores / 8M rows).
 
     The dup-phash table is dup-rate-proportional, same magnitude as the final
-    decisions table the callers size-gate, so its broadcast goes through the
-    same `_gated` — a high-dup corpus falls back to a shuffled semi-join
-    instead of OOMing every executor.
+    decisions table the callers size-gate, so it goes through the same gate,
+    `RunRecord.local`: it reaches the join as a broadcast local relation, and
+    a high-dup corpus past `record.BROADCAST_ROWS` falls back to a shuffled
+    semi-join instead of OOMing every executor.
     """
     narrow = df.select("image_id", "phash", "rid")
-    dup_ph, _ = _gated(
+    dup_ph, _ = current().local(
         narrow.groupBy("phash")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
-        .select("phash"),
-        max_broadcast,
+        .select("phash")
     )
     cand = narrow.join(dup_ph, "phash")
     return _decisions_from_candidates(cand, "phash")
 
 
-def near_dup_decisions(
-    df: DataFrame, max_hamming: int = 3, max_broadcast: int = 2_000_000
-) -> DataFrame:
+def near_dup_decisions(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """dup_decisions extended to PERCEPTUAL near-dups: ids whose phashes sit
     within Hamming `max_hamming` of each other form ONE group (connected
     components over pigeonhole-banded pairs, dedup.hamming_near_pairs), and
@@ -372,13 +357,12 @@ def near_dup_decisions(
     # The semi-join broadcast is SIZE-GATED like the final decisions table
     # (ADVICE r2): acting is dup-rate-proportional, and at the ~10^9-distinct-
     # phash scale this module targets, a high perceptual-dup rate could exceed
-    # executor broadcast memory. The gate's pin makes its count cheap (the
-    # Hamming-pair + CC lineage runs once, not once per consumer).
-    acting, _ = _gated(
+    # executor broadcast memory. `RunRecord.local` runs the Hamming-pair + CC
+    # lineage once, whichever side of the cap acting lands on.
+    acting, _ = current().local(
         ph_counts.join(labels, "phash", "left")
         .filter((F.col("n") > 1) | F.col("comp").isNotNull())
-        .select("phash", F.coalesce("comp", "phash").alias("gkey")),
-        max_broadcast,
+        .select("phash", F.coalesce("comp", "phash").alias("gkey"))
     )
     cand = narrow.join(acting, "phash")
     return _decisions_from_candidates(cand, "gkey")
@@ -388,10 +372,8 @@ def decisions_for(df: DataFrame, cfg: FilterConfig) -> DataFrame:
     """Exact-phash decisions, or the perceptual near-dup variant when
     cfg.near_dup_hamming is set."""
     if cfg.near_dup_hamming is not None:
-        return near_dup_decisions(
-            df, cfg.near_dup_hamming, max_broadcast=cfg.max_broadcast_decisions
-        )
-    return dup_decisions(df, max_broadcast=cfg.max_broadcast_decisions)
+        return near_dup_decisions(df, cfg.near_dup_hamming)
+    return dup_decisions(df)
 
 
 def with_rid(df: DataFrame) -> DataFrame:
@@ -428,25 +410,23 @@ def score_rows(df: DataFrame, cfg: FilterConfig) -> DataFrame:
     return with_model_scores_fused(with_flags(df))
 
 
-def decide(df: DataFrame, cfg: FilterConfig, dups: DataFrame | None = None) -> DataFrame:
+def decide(df: DataFrame, cfg: FilterConfig) -> DataFrame:
     """All per-row scoring stages; adds flags, lang, ppl, dup flag, keep, reason.
-    Honors the FULL FilterConfig — near_dup_hamming, contamination_eval_path
-    and `max_broadcast_decisions` — with run_filter's own decision tables and
-    `_gated` size gate, so its verdicts AND its join strategy agree with
-    run_filter's for the same config. The streaming twin runs it on every
-    micro-batch. Pins go to the current run record (open a `run_record()`
-    to release them with it). A caller-supplied `dups` is joined as given
-    (hint it yourself if you know it is small)."""
+    Honors the FULL FilterConfig — near_dup_hamming and
+    contamination_eval_path — with run_filter's own decision tables, and
+    sizes their joins with the same `RunRecord.local` gate, so its verdicts
+    AND its join strategy agree with run_filter's for the same config. The
+    streaming twin runs it on every micro-batch. Pins go to the current run
+    record (open a `run_record()` to release them with it)."""
     if "rid" not in df.columns:
         df = with_rid(df)
-    budget = cfg.max_broadcast_decisions
-    if dups is None:
-        dups, _ = _gated(decisions_for(df, cfg), budget)
+    rec = current()
+    dups, _ = rec.local(decisions_for(df, cfg))
     # un-gated, the eval-overlap lineage would re-execute per action, and a
     # handful of contaminated ids would shuffle-join
     contaminated = contamination_decisions(df.sparkSession, df, cfg)
     if contaminated is not None:
-        contaminated, _ = _gated(contaminated, budget)
+        contaminated, _ = rec.local(contaminated)
     return finalize(score_rows(df, cfg), cfg, dups, contaminated=contaminated)
 
 
@@ -575,7 +555,8 @@ def contamination_decisions(
     caption) scan — bytes never read — with the eval shingle universe
     broadcast (curation.contamination_overlap); like dup_decisions it is
     computed over the FULL input so a resumed run reaches the same verdicts.
-    The caller size-gates the broadcast of the result."""
+    The caller passes the result through `RunRecord.local`, which broadcasts
+    it when it fits."""
     if not cfg.contamination_eval_path:
         return None
     from data_quality_check_spark.operators.curation import contamination_overlap
@@ -946,32 +927,31 @@ def run_filter(
 
         # dedup decisions come from the FULL input (phash groups span buckets)
         # via a narrow columnar scan. The decisions table is ~duplicate-rate · n
-        # rows, so its broadcast is size-gated (VERDICT r1 item 4, `_gated`):
-        # pinned and counted (one cheap action over the 3-column lineage — the
-        # price of knowing the size before choosing a join strategy), then
-        # either broadcast whole into ONE write action, or — when the dup rate
-        # makes it too large to ship to every executor — spilled
-        # bucket-partitioned next to the checkpoint, and pending buckets are
-        # processed in groups whose partition-pruned decision slice fits the
-        # budget. Decision rows land in the same _bucket as their data rows
-        # (both derive from image_id), so each group's join is a broadcast of
-        # only that group's slice and `bytes` still never shuffles; on Iceberg
-        # the same fallback is a storage-partitioned join against a
-        # bucket(B, image_id) decisions table. Per-group commits also tighten
-        # resume granularity: a kill mid-run loses at most one group.
-        # Contamination verdicts take the same gate; the run record releases
-        # both.
-        budget = cfg.max_broadcast_decisions
+        # rows, so its broadcast is size-gated (VERDICT r1 item 4,
+        # `RunRecord.local`): one bounded collect over the 3-column lineage —
+        # the price of knowing the size before choosing a join strategy —
+        # then either broadcast whole into ONE write action as a local
+        # relation, or — when the dup rate makes it too large to ship to every
+        # executor — spilled bucket-partitioned next to the checkpoint, and
+        # pending buckets are processed in groups whose partition-pruned
+        # decision slice fits `record.BROADCAST_ROWS`. Decision rows land in
+        # the same _bucket as their data rows (both derive from image_id), so
+        # each group's join is a broadcast of only that group's slice and
+        # `bytes` still never shuffles; on Iceberg the same fallback is a
+        # storage-partitioned join against a bucket(B, image_id) decisions
+        # table. Per-group commits also tighten resume granularity: a kill
+        # mid-run loses at most one group. Contamination verdicts take the
+        # same gate; the run record releases both.
         spill_dir = os.path.join(checkpoint_dir, "dup_decisions", cfg.run_id)
         with rec.step("decisions_plan"):
             dups = decisions_for(df, cfg)
             contaminated = contamination_decisions(spark, df, cfg)
         if contaminated is not None:
             with rec.step("contamination_count"):
-                contaminated, _ = _gated(contaminated, budget)
+                contaminated, _ = rec.local(contaminated)
         with rec.step("dup_decisions_count"):
-            dups, n_act = _gated(dups, budget)
-        if n_act <= budget:
+            dups, fits = rec.local(dups)
+        if fits:
             groups = [pending]
             slice_for = lambda grp: dups  # noqa: E731 — hinted by the gate
         else:
@@ -987,35 +967,33 @@ def run_filter(
                 # no Spark job), not a uniform n/num_buckets estimate — a
                 # skewed bucket could otherwise push one group's pruned slice
                 # past the broadcast budget (ADVICE r2). Greedy fill: each
-                # group's decision sum stays within max_broadcast_decisions
+                # group's decision sum stays within record.BROADCAST_ROWS
                 # (single oversized buckets get their own group — their slice
                 # is the irreducible minimum).
                 by_bucket = {
                     b: _footer_rows(_partition_files(u))
                     for b, u in _partition_uris(spark, spill_dir, pending).items()
                 }
+                # one read: its schema inference is a Spark job, and each
+                # group's filter below still prunes to its own partitions
+                spilled = spark.read.parquet(spill_dir)
             groups, cur, cur_n = [], [], 0
             for bkt in pending:
                 c = by_bucket.get(bkt, 0)
-                if cur and cur_n + c > budget:
+                if cur and cur_n + c > record.BROADCAST_ROWS:
                     groups.append(cur)
                     cur, cur_n = [], 0
                 cur.append(bkt)
                 cur_n += c
             if cur:
                 groups.append(cur)
-            # a group's pruned slice is within max_broadcast_decisions by
-            # construction (greedy fill) EXCEPT a single oversized bucket,
-            # which gets its own group — that irreducible slice joins
-            # un-hinted (shuffle join) instead of blowing the budget
+            # a group's pruned slice fits the gate by construction (greedy
+            # fill) EXCEPT a single oversized bucket, which gets its own group
+            # — the gate hands that irreducible slice back pinned, and it
+            # joins un-hinted (shuffle join) instead of blowing the budget
             def slice_for(grp):
-                sl = (
-                    spark.read.parquet(spill_dir)
-                    .filter(F.col("_bucket").isin(grp))
-                    .drop("_bucket")
-                )
-                n_grp = sum(by_bucket.get(b, 0) for b in grp)
-                return F.broadcast(sl) if n_grp <= budget else sl
+                sl = spilled.filter(F.col("_bucket").isin(grp)).drop("_bucket")
+                return rec.local(sl)[0]
 
         for gi, grp in enumerate(groups):
             m = _process_group(df, cfg, grp, gi, slice_for, output_dir,

@@ -2,7 +2,8 @@
 
 A `RunRecord` owns the frames a run pins (`pin`), the eager localCheckpoint
 snapshots it consumes (`snapshot`), its step wall times (`step`) and its
-candidate-count observations (`observe_candidates`, `candidates`).
+candidate-count observations (`observe_candidates`, `candidates`). `local` is
+the one broadcast-or-shuffle choice for every size-dependent join build side.
 
     with run_record() as rec:
         pairs = minhash_lsh_pairs(df, "id", "text", threshold=0.5).collect()
@@ -25,6 +26,11 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.storagelevel import StorageLevel
+
+# the row cap of `RunRecord.local`: a table at or under it is collected and
+# broadcast as a local relation. Build sides are a few narrow columns (~50 B a
+# row), so 2M rows is ~100 MB per executor.
+BROADCAST_ROWS = 2_000_000
 
 # the reason recorded for a count whose metrics row never arrived
 NOT_DELIVERED = (
@@ -94,6 +100,25 @@ class RunRecord:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         self.pins.append(df)
         return df
+
+    def local(self, df: DataFrame) -> tuple[DataFrame, bool]:
+        """The size gate of every join build side whose size depends on the
+        data (dup phashes, decision tables, dup spans, elected ids, eval
+        shingles): `(frame, fits)`.
+
+        The frame is pinned, then at most `BROADCAST_ROWS + 1` rows are
+        collected as Arrow. When they fit, the pin is dropped and the rows come
+        back as a broadcast-hinted local relation: consumers never re-run the
+        lineage, and building the broadcast takes no Spark job. Past the cap
+        the pinned frame comes back un-hinted, so its joins shuffle; the
+        collect has already filled the pin, so the lineage runs once on
+        either side of the cap."""
+        pinned = self.pin(df)
+        rows = pinned.limit(BROADCAST_ROWS + 1).toArrow()
+        if rows.num_rows > BROADCAST_ROWS:
+            return pinned, False
+        self.pins.pop().unpersist()  # the pin taken above
+        return F.broadcast(df.sparkSession.createDataFrame(rows, schema=df.schema)), True
 
     def snapshot(self, df: DataFrame) -> DataFrame:
         """An eager localCheckpoint of `df`, released with the record. Only

@@ -14,7 +14,7 @@ Design:
     resolve `_metadata`;
   * `foreachBatch` runs the batch job's own filter core on each micro-batch:
     `run.decide` (the same decision tables, near_dup_hamming and
-    contamination options and `_gated` size gate as `run_filter`) and
+    contamination options and `RunRecord.local` size gate as `run_filter`) and
     `run._write_selected` (the same optional columns, observe() metrics and
     bucketed write) — so one FilterConfig means the same keep/drop/scrub
     verdicts in both jobs, by construction;

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_check_spark import record
 from data_quality_check_spark.operators import curation as CU
 from data_quality_check_spark.operators import dedup as DD
 
@@ -140,13 +141,14 @@ def test_repetition_stats_zero_token_and_repeat_edge(spark):
     assert not bool(out.loc[4, "repetitive"])
 
 
-def test_contamination_shuffle_fallback_same_result(spark, docs):
+def test_contamination_shuffle_fallback_same_result(spark, docs, monkeypatch):
     train = docs.filter(F.col("doc_id") % 50 != 0)
     ev = docs.filter(F.col("doc_id") % 50 == 0)
     a = CU.contamination_overlap(train, ev, "doc_id", "text", ngram=3).toPandas()
-    # broadcast_eval=False drops the HINT (the planner may still pick a
-    # broadcast when the side is small); disable auto-broadcast to genuinely
-    # drive the shuffled-join path the huge-eval case would take
+    # an eval universe past record.BROADCAST_ROWS comes back un-hinted (the
+    # planner may still pick a broadcast when the side is small); disable
+    # auto-broadcast to genuinely drive the shuffled-join path the huge-eval
+    # case would take
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
@@ -154,14 +156,14 @@ def test_contamination_shuffle_fallback_same_result(spark, docs):
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
+    monkeypatch.setattr(record, "BROADCAST_ROWS", 0)
     try:
-        nob = CU.contamination_overlap(
-            train, ev, "doc_id", "text", ngram=3, broadcast_eval=False
-        )
+        nob = CU.contamination_overlap(train, ev, "doc_id", "text", ngram=3)
         plan = _plan(nob)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
         b = nob.toPandas()
     finally:
+        DD.release_pins()
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
@@ -205,18 +207,19 @@ def test_pack_scalable_broadcasts_bucket_sums(spark, docs):
     assert "BroadcastHashJoin" in plan
 
 
-def test_dedup_survivors_size_gate_paths_identical(spark, docs):
-    """VERDICT r2 item 2: past max_broadcast_ids the loser/winner joins must
-    take the shuffled (non-broadcast) path and produce IDENTICAL output —
-    a forced gate (threshold 0) exercises the fallback branch."""
+def test_dedup_survivors_size_gate_paths_identical(spark, docs, monkeypatch):
+    """VERDICT r2 item 2: past record.BROADCAST_ROWS the loser/winner joins
+    must take the shuffled (non-broadcast) path and produce IDENTICAL output
+    — a forced gate (cap 0) exercises the fallback branch."""
     clusters = DD.neardup_clusters(docs, "doc_id", "text", 0.6, ngram=3)
     clusters = clusters.persist()
     try:
         broadcast_path = CU.dedup_survivors(
             docs, clusters, "doc_id", "n_chars"
         ).toPandas()
+        monkeypatch.setattr(record, "BROADCAST_ROWS", 0)
         shuffled_path = CU.dedup_survivors(
-            docs, clusters, "doc_id", "n_chars", max_broadcast_ids=0
+            docs, clusters, "doc_id", "n_chars"
         ).toPandas()
     finally:
         clusters.unpersist()

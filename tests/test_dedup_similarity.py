@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_check_spark import record
 from data_quality_check_spark.operators import dedup as DD
 from data_quality_check_spark.operators import similarity as SIM
 from data_quality_check_spark.record import ambient, current, run_record
@@ -597,22 +598,19 @@ def test_duplicate_span_stats_semantics(spark):
     }
 
 
-def test_duplicate_span_stats_gate_paths_identical(spark):
+def test_duplicate_span_stats_gate_paths_identical(spark, monkeypatch):
     """The size-gated broadcast of the dup-span set must not change output:
-    force the shuffled-join fallback (max_broadcast_spans=0) and compare."""
+    force the shuffled-join fallback (record.BROADCAST_ROWS=0) and compare."""
     docs = [(i, f"a b c d e f g h uniq{i} t u v w x y z q") for i in range(30)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     a = sorted(
         map(tuple, DD.duplicate_span_stats(df, "doc_id", "text").collect())
     )
+    monkeypatch.setattr(record, "BROADCAST_ROWS", 0)
     b = sorted(
-        map(
-            tuple,
-            DD.duplicate_span_stats(
-                df, "doc_id", "text", max_broadcast_spans=0
-            ).collect(),
-        )
+        map(tuple, DD.duplicate_span_stats(df, "doc_id", "text").collect())
     )
+    DD.release_pins()
     assert a == b
     # 17 words -> 3 spans: the leading 8 words and the final 1-word remnant
     # are corpus-wide duplicates, the uniq{i} middle span is solo

@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_check_spark import record
 from data_quality_check_spark.pipeline import codecs
 from data_quality_check_spark.pipeline.fixtures import generate_images_pdf, write_images_parquet
 from data_quality_check_spark.pipeline.reference_impl import compute_golden
@@ -354,7 +355,8 @@ def small_flat(tmp_path_factory):
 
 @pytest.mark.parametrize("layout", ["partition_dir", "data_column", "flat", "spill"])
 def test_per_bucket_metrics_match_oracle(
-    spark, layout, prebucketed_out, pipeline_out, small_flat, fixture_paths, tmp_path
+    spark, layout, prebucketed_out, pipeline_out, small_flat, fixture_paths, tmp_path,
+    monkeypatch,
 ):
     """Per-bucket rows_in / rows_kept / n_scrubbed are exact on every input
     layout, whether a count comes from Parquet footers (partition-dir input,
@@ -383,7 +385,8 @@ def test_per_bucket_metrics_match_oracle(
             cfg = FilterConfig(num_buckets=num_buckets)
         else:
             path = small_flat
-            cfg = FilterConfig(num_buckets=num_buckets, max_broadcast_decisions=1)
+            cfg = FilterConfig(num_buckets=num_buckets)
+            monkeypatch.setattr(record, "BROADCAST_ROWS", 1)
         run_filter(spark, path, out, ckpt, cfg)
         if layout == "spill":
             manifest = spark.read.parquet(os.path.join(ckpt, "manifest"))
@@ -564,9 +567,9 @@ def test_synthetic_phash_planted_pairs_exact(spark):
     assert {(r.id_a, r.id_b, r.hamming) for r in pairs} == expected
 
 
-def test_dup_broadcast_fallback_identical(spark, tmp_path_factory):
+def test_dup_broadcast_fallback_identical(spark, tmp_path_factory, monkeypatch):
     """A ~50% duplicate-rate input forced down the non-broadcast path
-    (max_broadcast_decisions tiny → bucket-partitioned decision spill +
+    (record.BROADCAST_ROWS tiny → bucket-partitioned decision spill +
     per-group commits) must produce byte-identical output and checkpoint
     totals to the broadcast path (VERDICT r1 item 4)."""
     root = tmp_path_factory.mktemp("dupheavy")
@@ -587,7 +590,8 @@ def test_dup_broadcast_fallback_identical(spark, tmp_path_factory):
         return s, pdf, ckpt
 
     s_b, pdf_b, _ = run(FilterConfig(num_buckets=16), "bcast")
-    cfg_f = FilterConfig(num_buckets=16, max_broadcast_decisions=10)
+    cfg_f = FilterConfig(num_buckets=16)
+    monkeypatch.setattr(record, "BROADCAST_ROWS", 10)
     s_f, pdf_f, ckpt_f = run(cfg_f, "fallback")
 
     assert s_f["rows_in"] == s_b["rows_in"]
@@ -642,10 +646,10 @@ def test_near_dup_decisions_groups_by_phash_hamming(spark):
     assert got_n == set(near) and got_e == set(exact)
 
 
-def test_near_dup_acting_broadcast_gate_identical(spark):
+def test_near_dup_acting_broadcast_gate_identical(spark, monkeypatch):
     """ADVICE r2: the internal `acting` semi-join broadcast in
     near_dup_decisions is size-gated; forcing the shuffled path
-    (max_broadcast=0) must yield identical decisions."""
+    (record.BROADCAST_ROWS=0) must yield identical decisions."""
     from data_quality_check_spark.operators.dedup import release_pins
     from data_quality_check_spark.pipeline.run import near_dup_decisions
 
@@ -660,7 +664,8 @@ def test_near_dup_acting_broadcast_gate_identical(spark):
     df = spark.createDataFrame(rows, "image_id string, phash long, rid long")
     bcast = sorted(map(tuple, near_dup_decisions(df, 3).collect()))
     release_pins()
-    shuffled = sorted(map(tuple, near_dup_decisions(df, 3, max_broadcast=0).collect()))
+    monkeypatch.setattr(record, "BROADCAST_ROWS", 0)
+    shuffled = sorted(map(tuple, near_dup_decisions(df, 3).collect()))
     release_pins()
     assert bcast == shuffled
 
@@ -1037,23 +1042,19 @@ def test_overwrite_mode_restored_after_run(spark, fixture_paths, tmp_path_factor
             spark.conf.set(key, prev)
 
 
-def test_decide_gate_zero_matches_broadcast_path(spark, fixture_paths):
-    """decide() must honor max_broadcast_decisions: with the gate at 0 the
-    decisions join is un-hinted (shuffle join) yet verdict-identical to the
-    broadcast path — previously finalize force-broadcast the full table no
-    matter the config."""
+def test_decide_gate_zero_matches_broadcast_path(spark, fixture_paths, monkeypatch):
+    """decide() sizes its joins with the run_filter gate: with
+    record.BROADCAST_ROWS at 0 the decisions join is un-hinted (shuffle join)
+    yet verdict-identical to the broadcast path — previously finalize
+    force-broadcast the full table no matter the size."""
     from data_quality_check_spark.pipeline.run import decide
 
     _, path = fixture_paths
     df = spark.read.parquet(path)
     cols = ["image_id", "keep", "drop_reason", "row_selected"]
     a = sorted(map(tuple, decide(df, FilterConfig()).select(*cols).collect()))
-    b = sorted(
-        map(
-            tuple,
-            decide(df, FilterConfig(max_broadcast_decisions=0)).select(*cols).collect(),
-        )
-    )
+    monkeypatch.setattr(record, "BROADCAST_ROWS", 0)
+    b = sorted(map(tuple, decide(df, FilterConfig()).select(*cols).collect()))
     assert a == b
 
 
@@ -1467,16 +1468,16 @@ def test_f1_gate_labels_keyed_by_another_id_column(spark, golden, pipeline_out, 
     assert got["passed"] and got["observed"]["tp"] > 0
 
 
-@pytest.mark.parametrize("max_broadcast", [2_000_000, 1], ids=["broadcast", "spill"])
-def test_flat_run_keeping_no_rows_commits_every_bucket(spark, tmp_path, max_broadcast):
+@pytest.mark.parametrize("cap", [2_000_000, 1], ids=["broadcast", "spill"])
+def test_flat_run_keeping_no_rows_commits_every_bucket(spark, tmp_path, monkeypatch, cap):
     """A flat input whose commit group keeps no rows: AQE re-plans the empty
     post-shuffle write stage, and the write step must still deliver its
     metrics row, so the manifest commits every bucket (broadcast mode and
     decision-spill mode)."""
     path = str(tmp_path / "images.parquet")
     write_images_parquet(path, n=300)
-    cfg = FilterConfig(target_langs=["xx"], num_buckets=8,
-                       max_broadcast_decisions=max_broadcast)
+    monkeypatch.setattr(record, "BROADCAST_ROWS", cap)
+    cfg = FilterConfig(target_langs=["xx"], num_buckets=8)
     summary = run_filter(spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"), cfg)
     assert summary["processed_buckets"] == list(range(8))
     assert summary["rows_kept"] == 0
@@ -1485,7 +1486,7 @@ def test_flat_run_keeping_no_rows_commits_every_bucket(spark, tmp_path, max_broa
     assert sorted(manifest["bucket"]) == list(range(8))
     assert manifest["rows_kept"].sum() == 0
     assert manifest["rows_in"].sum() == summary["rows_in"]
-    if max_broadcast == 1:  # the spill path really ran
+    if cap == 1:  # the spill path really ran
         assert os.path.isdir(tmp_path / "ckpt" / "dup_decisions" / cfg.run_id)
 
 

@@ -491,15 +491,23 @@ def test_containment_asym_plan_jvm_only_rare_prefix_probe(spark, sf_dir):
     assert "InMemoryTableScan" in plan
 
 
-@pytest.mark.parametrize("layout", ["partition_dir", "flat"])
+# the Spark jobs of one run_filter call on the 8-bucket input below, as
+# measured: each size gate (`RunRecord.local`) is one bounded collect whose
+# rows broadcast from the driver, so no gate adds a count or a broadcast job.
+RUN_FILTER_MAX_JOBS = {"partition_dir": 13, "flat": 14, "near_dup": 50, "spill": 46}
+
+
+@pytest.mark.parametrize("layout", list(RUN_FILTER_MAX_JOBS))
 def test_run_filter_jobs_and_observed_aggregates_pinned(spark, tmp_path, monkeypatch, layout):
     """A run_filter call on a small 8-bucket input runs no more Spark jobs
-    than it did when per-bucket counts moved to Parquet footers (16 with a
-    partition-dir input, 17 flat: the flat run adds the pre-write
-    repartition), and its write observes the run-global counts plus one
-    count per pending bucket (n_scrubbed), plus one more per bucket (rows_in)
-    when no input file holds the bucket's rows. The footer reads run on the
-    driver, not as jobs."""
+    than `RUN_FILTER_MAX_JOBS` (the flat run adds the pre-write repartition;
+    `near_dup` is a partition-dir input with near_dup_hamming=3; `spill` is a
+    flat input whose decisions pass the patched broadcast cap, so they spill
+    and every bucket group commits on its own), and each write observes the
+    run-global counts plus one count per pending bucket (n_scrubbed), plus
+    one more per bucket (rows_in) when no input file holds the bucket's rows.
+    The footer reads run on the driver, not as jobs."""
+    from data_quality_check_spark import record
     from data_quality_check_spark.pipeline import run as RUN
     from data_quality_check_spark.pipeline.fixtures import (
         write_images_parquet,
@@ -508,22 +516,27 @@ def test_run_filter_jobs_and_observed_aggregates_pinned(spark, tmp_path, monkeyp
     from data_quality_check_spark.pipeline.heuristics import FLAG_COLS
 
     buckets = 8
-    if layout == "partition_dir":
+    cfg = RUN.FilterConfig(num_buckets=buckets)
+    if layout in ("partition_dir", "near_dup"):
         path = str(tmp_path / "images")
         write_images_parquet_spark(spark, path, n=300, num_files=buckets, bucket_by_id=buckets)
-        # + n_bucket_mismatch, and one n_scrubbed per bucket
-        want_width, max_jobs = 3 + len(RUN.DROP_REASONS) + len(FLAG_COLS) + 1 + buckets, 16
+        per_bucket = 1  # n_scrubbed; + n_bucket_mismatch below
+        base = 3 + len(RUN.DROP_REASONS) + len(FLAG_COLS) + 1
     else:
         path = str(tmp_path / "images.parquet")
         write_images_parquet(path, n=300)
-        # one n_scrubbed and one rows_in per bucket
-        want_width, max_jobs = 3 + len(RUN.DROP_REASONS) + len(FLAG_COLS) + 2 * buckets, 17
-    widths = []
+        per_bucket = 2  # n_scrubbed and rows_in
+        base = 3 + len(RUN.DROP_REASONS) + len(FLAG_COLS)
+    if layout == "near_dup":
+        cfg.near_dup_hamming = 3
+    if layout == "spill":
+        monkeypatch.setattr(record, "BROADCAST_ROWS", 1)
+    writes = []
     real = RUN._write_selected
 
     def recording(*a, **k):
         m = real(*a, **k)
-        widths.append(len(m))
+        writes.append((len(m), len(a[2])))  # (metrics width, the group's buckets)
         return m
 
     monkeypatch.setattr(RUN, "_write_selected", recording)
@@ -531,12 +544,13 @@ def test_run_filter_jobs_and_observed_aggregates_pinned(spark, tmp_path, monkeyp
     group = f"pin-run-filter-{layout}"
     sc.setJobGroup(group, group)
     try:
-        summary = RUN.run_filter(spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-                                 RUN.FilterConfig(num_buckets=buckets))
+        summary = RUN.run_filter(spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"), cfg)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert summary["rows_kept"] > 0
-    assert widths == [want_width]
-    assert 0 < jobs <= max_jobs, jobs
+    assert sum(n for _, n in writes) == buckets
+    assert (len(writes) > 1) == (layout == "spill"), writes
+    assert all(width == base + per_bucket * n for width, n in writes), writes
+    assert 0 < jobs <= RUN_FILTER_MAX_JOBS[layout], jobs

@@ -7,6 +7,7 @@ from __future__ import annotations
 import ast
 import os
 
+from data_quality_check_spark import record
 from data_quality_check_spark.record import NOT_DELIVERED, run_record
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -114,3 +115,52 @@ def test_steps_are_per_record(spark):
     assert [n for n, _ in a.steps] == ["one"]
     assert [n for n, _ in b.steps] == ["two", "three"]
     assert all(sec >= 0 for _, sec in a.steps + b.steps)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_fitting_frame_is_a_broadcast_local_relation(spark):
+    """A table under the cap comes back as driver rows: a LocalTableScan with
+    no cache behind it, the gate's pin already released, the same rows, and
+    a join against it broadcasts."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(200).select((F.col("id") % 7).alias("k")).distinct()
+    with run_record() as rec:
+        frame, fits = rec.local(df)
+        assert fits and rec.pins == []
+        plan = _plan(frame)
+        assert "LocalTableScan" in plan and "InMemoryTableScan" not in plan, plan
+        assert sorted(r.k for r in frame.collect()) == list(range(7))
+        assert frame.schema == df.schema
+        joined = spark.range(50).withColumnRenamed("id", "k").join(frame, "k")
+        assert "BroadcastHashJoin" in _plan(joined)
+        assert joined.count() == 7
+
+
+def test_local_over_cap_frame_is_pinned_and_its_lineage_runs_once(spark, monkeypatch):
+    """Past the cap the gate hands back the pinned frame, un-hinted. The
+    bounded collect already filled the pin, so consumers read the cache: a
+    Python UDF under an aggregate (the shape of every gated table) evaluates
+    each row exactly once across the gate and two later actions."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(record, "BROADCAST_ROWS", 3)
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        evals.add(1)
+        return x
+
+    df = spark.range(0, 10, 1, 2).select(counted("id").alias("v")).distinct()
+    with run_record() as rec:
+        frame, fits = rec.local(df)
+        assert not fits
+        assert [p is frame for p in rec.pins] == [True]
+        assert "InMemoryTableScan" in _plan(frame)
+        assert sorted(r.v for r in frame.collect()) == list(range(10))
+        assert frame.count() == 10
+    assert evals.value == 10
