@@ -21,7 +21,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from data_quality_check_spark.functions.text import fingerprint_col
 from data_quality_check_spark.record import ambient, current, release_snapshot, run_record
@@ -1803,18 +1805,78 @@ def connected_components(
     path-shaped near-dup chains (templated/boilerplate text commonly forms long
     Jaccard chains) can no longer exhaust the round budget (ADVICE r1). Past
     `CC_MAX_ROUNDS` rounds it raises rather than returning a partial
-    labeling. Each round is two equi-joins + one
-    map-side-combined min aggregate; `localCheckpoint` truncates the per-round
-    lineage (at cluster scale: `checkpoint` to the reliable store), and the
-    previous round's checkpoint blocks are released explicitly.
+    labeling.
+
+    Two paths, one gate. The (src, dst) edges are pinned and go through
+    `RunRecord.bounded_collect`, the gate `RunRecord.local` uses, so the edge
+    lineage runs once on either side of the cap:
+      * edges that fit (a few hundred pair rows per clustering query) are
+        labeled on the driver in numpy and come back as a local relation;
+      * past the cap the rounds run in Spark over the pinned edges
+        (`_label_in_spark`).
+    A null endpoint links nothing; both paths give it one (null, min label of
+    its non-null neighbors) row.
 
     This is the step a dedup pipeline runs AFTER pair generation
     (jaccard/minhash/simhash): pairs → clusters → keep one winner per cluster.
     """
-    sym = edges.select(
-        F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
+    rec = current()
+    pinned = rec.pin(
+        edges.select(
+            F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
+        )
     )
-    sym = sym.union(sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    rows = rec.bounded_collect(pinned)
+    if rows is None:
+        return _label_in_spark(pinned)
+    # the Spark path's schema: id is nullable iff an endpoint column is
+    nullable = pinned.schema["src"].nullable or pinned.schema["dst"].nullable
+    schema = StructType([StructField("id", LongType(), nullable), StructField("comp", LongType())])
+    return edges.sparkSession.createDataFrame(_label_on_driver(rows), schema=schema)
+
+
+def _label_on_driver(rows: pa.Table) -> pa.Table:
+    """`connected_components` over collected (src, dst) edges. `np.unique`
+    compacts the ids to indices in sorted order, so the minimum index of a
+    component is its minimum id. Each round takes the min over both edge
+    directions (`np.minimum.at`), then jumps pointers (`comp = new[new]`)."""
+    n = rows.num_rows
+    ends = pa.concat_arrays([rows.column(c).combine_chunks() for c in ("src", "dst")])
+    ids, inv = np.unique(ends.drop_null().to_numpy(), return_inverse=True)
+    idx = np.full(2 * n, -1)
+    idx[ends.is_valid().to_numpy(zero_copy_only=False)] = inv
+    a, b = idx[:n], idx[n:]
+    linked = (a >= 0) & (b >= 0)
+    src, dst = a[linked], b[linked]
+    comp = np.arange(len(ids))
+    for _ in range(CC_MAX_ROUNDS):
+        new = comp.copy()
+        np.minimum.at(new, src, comp[dst])
+        np.minimum.at(new, dst, comp[src])
+        new = new[new]
+        if np.array_equal(new, comp):
+            break
+        comp = new
+    else:
+        raise RuntimeError(f"connected_components did not converge in {CC_MAX_ROUNDS} rounds")
+    labels = pa.table({"id": ids, "comp": ids[comp]})
+    if linked.all():
+        return labels
+    # the null vertex: min label over the non-null ends of its edges
+    nbrs = np.concatenate([a[b < 0], b[a < 0]])
+    nbrs = nbrs[nbrs >= 0]
+    null_comp = ids[comp[nbrs]].min() if len(nbrs) else None
+    null = pa.table({"id": pa.nulls(1, pa.int64()), "comp": pa.array([null_comp], pa.int64())})
+    return pa.concat_tables([labels, null])
+
+
+def _label_in_spark(edges: DataFrame) -> DataFrame:
+    """`connected_components` over the pinned (src, dst) edges past the
+    driver cap. Each round is two equi-joins + one map-side-combined min
+    aggregate; `localCheckpoint` truncates the per-round lineage (at cluster
+    scale: `checkpoint` to the reliable store), and the previous round's
+    checkpoint blocks are released explicitly."""
+    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.distinct().localCheckpoint(eager=True)  # reused every round: scan once
     labels = (
         sym.select(F.col("src").alias("id"))
@@ -1823,8 +1885,6 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     try:
-        from pyspark.sql import Observation
-
         for _ in range(CC_MAX_ROUNDS):
             neighbor = sym.join(labels, sym.src == labels.id).select(
                 F.col("dst").alias("id"), F.col("comp")
@@ -1911,6 +1971,10 @@ def neardup_clusters_minhash(
 
 
 def _clusters_from_pairs(pairs: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, component, csize) per vertex of the pair edges. The pairs run
+    once, eagerly, through `connected_components`' one gate: labeled on the
+    driver when they fit its cap, else by the Spark loop. Either way the
+    sizes aggregate and its join read the labels only."""
     labels = connected_components(pairs)
     sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("csize"))
     return (

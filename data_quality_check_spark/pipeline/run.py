@@ -357,8 +357,9 @@ def near_dup_decisions(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     # The semi-join broadcast is SIZE-GATED like the final decisions table
     # (ADVICE r2): acting is dup-rate-proportional, and at the ~10^9-distinct-
     # phash scale this module targets, a high perceptual-dup rate could exceed
-    # executor broadcast memory. `RunRecord.local` runs the Hamming-pair + CC
-    # lineage once, whichever side of the cap acting lands on.
+    # executor broadcast memory. The Hamming-pair lineage already ran once,
+    # behind `connected_components`' own gate; `RunRecord.local` runs the
+    # phash-count + label join once, whichever side of the cap acting lands on.
     acting, _ = current().local(
         ph_counts.join(labels, "phash", "left")
         .filter((F.col("n") > 1) | F.col("comp").isNotNull())

@@ -2,8 +2,10 @@
 
 A `RunRecord` owns the frames a run pins (`pin`), the eager localCheckpoint
 snapshots it consumes (`snapshot`), its step wall times (`step`) and its
-candidate-count observations (`observe_candidates`, `candidates`). `local` is
-the one broadcast-or-shuffle choice for every size-dependent join build side.
+candidate-count observations (`observe_candidates`, `candidates`).
+`bounded_collect` is the one size gate: `local` builds every size-dependent
+join build side's broadcast-or-shuffle choice on it, and
+`dedup.connected_components` its driver-or-Spark labeling.
 
     with run_record() as rec:
         pairs = minhash_lsh_pairs(df, "id", "text", threshold=0.5).collect()
@@ -24,12 +26,13 @@ import time
 from collections.abc import Iterator
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.storagelevel import StorageLevel
 
-# the row cap of `RunRecord.local`: a table at or under it is collected and
-# broadcast as a local relation. Build sides are a few narrow columns (~50 B a
-# row), so 2M rows is ~100 MB per executor.
+# the row cap of `RunRecord.bounded_collect`: a table at or under it is
+# collected to the driver (and `local` broadcasts it). Gated tables are a few
+# narrow columns (~50 B a row), so 2M rows is ~100 MB per executor.
 BROADCAST_ROWS = 2_000_000
 
 # the reason recorded for a count whose metrics row never arrived
@@ -101,23 +104,32 @@ class RunRecord:
         self.pins.append(df)
         return df
 
+    def bounded_collect(self, pinned: DataFrame) -> pa.Table | None:
+        """At most `BROADCAST_ROWS + 1` rows of a frame this record pinned, as
+        Arrow; None past the cap. When the rows fit, the pin is dropped and the
+        caller works from the table. Past the cap the collect has filled the
+        pin, so the pinned frame's consumers read the cache: the lineage runs
+        once on either side of the cap."""
+        rows = pinned.limit(BROADCAST_ROWS + 1).toArrow()
+        if rows.num_rows > BROADCAST_ROWS:
+            return None
+        self.pins.remove(pinned)
+        pinned.unpersist()
+        return rows
+
     def local(self, df: DataFrame) -> tuple[DataFrame, bool]:
         """The size gate of every join build side whose size depends on the
         data (dup phashes, decision tables, dup spans, elected ids, eval
         shingles): `(frame, fits)`.
 
-        The frame is pinned, then at most `BROADCAST_ROWS + 1` rows are
-        collected as Arrow. When they fit, the pin is dropped and the rows come
-        back as a broadcast-hinted local relation: consumers never re-run the
-        lineage, and building the broadcast takes no Spark job. Past the cap
-        the pinned frame comes back un-hinted, so its joins shuffle; the
-        collect has already filled the pin, so the lineage runs once on
-        either side of the cap."""
+        The frame is pinned and `bounded_collect`ed. When the rows fit they
+        come back as a broadcast-hinted local relation: consumers never re-run
+        the lineage, and building the broadcast takes no Spark job. Past the
+        cap the pinned frame comes back un-hinted, so its joins shuffle."""
         pinned = self.pin(df)
-        rows = pinned.limit(BROADCAST_ROWS + 1).toArrow()
-        if rows.num_rows > BROADCAST_ROWS:
+        rows = self.bounded_collect(pinned)
+        if rows is None:
             return pinned, False
-        self.pins.pop().unpersist()  # the pin taken above
         return F.broadcast(df.sparkSession.createDataFrame(rows, schema=df.schema)), True
 
     def snapshot(self, df: DataFrame) -> DataFrame:

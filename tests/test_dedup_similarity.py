@@ -263,7 +263,36 @@ def test_neardup_blocked(vectors):
         assert r.cosine >= 0.98
 
 
-def test_connected_components_topologies(spark):
+# the two labeling paths of connected_components and the cap that selects
+# each: the Spark loop takes -1, so that even an empty edge set takes it
+CC_CAPS = {"driver": record.BROADCAST_ROWS, "spark": -1}
+
+
+def _cc(edges, path: str, monkeypatch):
+    """connected_components on `path`, checked from its plan: the driver
+    path's labels are a local relation, the loop's are not."""
+    with monkeypatch.context() as m:
+        m.setattr(record, "BROADCAST_ROWS", CC_CAPS[path])
+        out = DD.connected_components(edges)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("LocalTableScan" in plan) == (path == "driver"), plan
+    return out
+
+
+def _labels_both_paths(edges, monkeypatch):
+    """connected_components' rows (sorted by id, nulls first), which both
+    paths must give with the same schema."""
+    got = {}
+    for path in CC_CAPS:
+        out = _cc(edges, path, monkeypatch)
+        rows = sorted(map(tuple, out.collect()), key=lambda r: (r[0] is not None, r[0]))
+        DD.release_pins()
+        got[path] = rows, out.schema
+    assert got["driver"] == got["spark"]
+    return got["driver"][0]
+
+
+def test_connected_components_topologies(spark, monkeypatch):
     """Chain (forces multi-round propagation), triangle, and an isolated pair:
     component = min id reachable, regardless of edge direction/order."""
     edges = spark.createDataFrame(
@@ -271,15 +300,65 @@ def test_connected_components_topologies(spark):
         [(2, 1), (2, 3), (4, 3), (4, 5), (10, 11), (11, 12), (10, 12), (21, 20)],
         "id_a long, id_b long",
     )
-    got = {r.id: r.comp for r in DD.connected_components(edges).collect()}
+    got = dict(_labels_both_paths(edges, monkeypatch))
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
 def test_connected_components_raises_on_no_convergence(spark, monkeypatch):
     monkeypatch.setattr(DD, "CC_MAX_ROUNDS", 1)
     edges = spark.createDataFrame([(i, i + 1) for i in range(1, 8)], "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="converge"):
-        DD.connected_components(edges)
+    for path in CC_CAPS:
+        with pytest.raises(RuntimeError, match="converge"):
+            _cc(edges, path, monkeypatch)
+        DD.release_pins()
+
+
+def test_connected_components_paths_agree_on_random_graph(spark, monkeypatch):
+    """Seeded random blocks over sparse 40-bit ids (duplicate edges, both
+    orientations, a self-loop) plus a shuffled 300-vertex path: the driver
+    path and the Spark loop give the same rows and schema, and each vertex
+    gets the min id of its union-find component."""
+    rng = np.random.default_rng(7)
+    ids = rng.choice(1 << 40, size=200, replace=False)
+    edges = [
+        tuple(int(v) for v in rng.choice(block, 2))
+        for block in np.array_split(ids, 8)
+        for _ in range(30)
+    ]
+    path = [(10**12 + i, 10**12 + i + 1) for i in range(299)]
+    edges += [e if rng.random() < 0.5 else e[::-1] for e in rng.permutation(path).tolist()]
+    edges += [(int(ids[0]), int(ids[0]))]
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    got = _labels_both_paths(spark.createDataFrame(edges, "id_a long, id_b long"), monkeypatch)
+    assert got == sorted((v, find(v)) for v in parent)
+    assert len({c for _, c in got}) > 2
+
+
+def test_connected_components_paths_agree_on_empty_edges(spark, monkeypatch):
+    assert _labels_both_paths(spark.createDataFrame([], "id_a long, id_b long"), monkeypatch) == []
+
+
+def test_connected_components_paths_agree_on_null_endpoints(spark, monkeypatch):
+    """A null endpoint joins nothing in the Spark loop: it links no vertices
+    and yields one (None, min label of its non-null neighbors) row, or
+    (None, None) with none. The driver path gives the same rows."""
+    edges = spark.createDataFrame(
+        [(None, None), (None, 8), (8, 9), (7, 9), (12, None), (20, 21)], "id_a long, id_b long"
+    )
+    got = _labels_both_paths(edges, monkeypatch)
+    assert got == [(None, 7), (7, 7), (8, 7), (9, 7), (12, 12), (20, 20), (21, 20)]
+    lone = spark.createDataFrame([(None, None), (4, 5)], "id_a long, id_b long")
+    assert _labels_both_paths(lone, monkeypatch) == [(None, None), (4, 4), (5, 4)]
 
 
 def _transitive_docs(spark):
@@ -317,26 +396,26 @@ def test_neardup_clusters_minhash_matches_exact(spark):
     assert clusters(DD.neardup_clusters_minhash) == exact
 
 
-def test_connected_components_long_path_converges(spark):
+def test_connected_components_long_path_converges(spark, monkeypatch):
     """Pointer jumping must converge in O(log diameter) rounds: a 300-vertex
-    path (diameter 299) finishes far inside the 50-round budget, where pure
-    min-label propagation needed one round per hop and crashed at 25
-    (ADVICE r1). Also checks pins/checkpoints are released afterwards."""
-    from pyspark.sql import functions as F
-
-    from data_quality_check_spark.operators.dedup import connected_components, release_pins
+    path (diameter 299) finishes far inside the 50-round budget on both
+    paths, where pure min-label propagation needed one round per hop and
+    crashed at 25 (ADVICE r1). Also checks pins/checkpoints are released
+    afterwards."""
     from data_quality_check_spark.record import release_snapshot
 
     before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     edges = spark.range(299).select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    labels = connected_components(edges)
-    rows = labels.collect()
-    assert len(rows) == 300
-    assert all(r["comp"] == 0 for r in rows)
-    release_pins()
-    release_snapshot(labels)  # done acting on the result
-    # no NEW storage blocks survive this test (session may carry others' caches)
-    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) <= before
+    for path in CC_CAPS:
+        labels = _cc(edges, path, monkeypatch)
+        rows = labels.collect()
+        assert len(rows) == 300
+        assert all(r["comp"] == 0 for r in rows)
+        assert [f.nullable for f in labels.schema] == [False, True]
+        DD.release_pins()
+        release_snapshot(labels)  # done acting on the result
+        # no NEW storage blocks survive (session may carry others' caches)
+        assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) <= before, path
 
 
 def test_embedding_neardup_lsh_recall_on_planted_neardups(spark):

@@ -491,10 +491,47 @@ def test_containment_asym_plan_jvm_only_rare_prefix_probe(spark, sf_dir):
     assert "InMemoryTableScan" in plan
 
 
+def _jobs(spark, group: str, fn):
+    """(the Spark jobs `fn()` runs, counted through a job group; its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+# warm Spark jobs of one clustering query on the test tables, as measured
+# (its scratch pair table already built): the edges pass one bounded collect
+# and are labeled on the driver. The per-round Spark loop ran 19, 17 and 50.
+CLUSTER_QUERY_MAX_JOBS = {
+    "neardup_clusters_minhash_documents": 5,
+    "phash_clusters_images": 5,
+    "semdedup_embeddings": 15,
+}
+
+
+@pytest.mark.parametrize("name", list(CLUSTER_QUERY_MAX_JOBS))
+def test_clustering_query_jobs_pinned(spark, sf_dir, name):
+    from data_quality_check_spark import entry_queries as EQ
+    from data_quality_check_spark.operators.dedup import release_pins
+
+    def run():
+        EQ.queries()[name](spark, sf_dir).collect()
+        release_pins()
+
+    run()  # builds the scratch pair tables
+    jobs, _ = _jobs(spark, f"pin-cluster-{name}", run)
+    assert 0 < jobs <= CLUSTER_QUERY_MAX_JOBS[name], jobs
+
+
 # the Spark jobs of one run_filter call on the 8-bucket input below, as
 # measured: each size gate (`RunRecord.local`) is one bounded collect whose
-# rows broadcast from the driver, so no gate adds a count or a broadcast job.
-RUN_FILTER_MAX_JOBS = {"partition_dir": 13, "flat": 14, "near_dup": 50, "spill": 46}
+# rows broadcast from the driver, so no gate adds a count or a broadcast job;
+# `near_dup`'s components are labeled on the driver.
+RUN_FILTER_MAX_JOBS = {"partition_dir": 13, "flat": 14, "near_dup": 34, "spill": 46}
 
 
 @pytest.mark.parametrize("layout", list(RUN_FILTER_MAX_JOBS))
@@ -540,15 +577,9 @@ def test_run_filter_jobs_and_observed_aggregates_pinned(spark, tmp_path, monkeyp
         return m
 
     monkeypatch.setattr(RUN, "_write_selected", recording)
-    sc = spark.sparkContext
-    group = f"pin-run-filter-{layout}"
-    sc.setJobGroup(group, group)
-    try:
-        summary = RUN.run_filter(spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"), cfg)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs, summary = _jobs(spark, f"pin-run-filter-{layout}", lambda: RUN.run_filter(
+        spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"), cfg
+    ))
     assert summary["rows_kept"] > 0
     assert sum(n for _, n in writes) == buckets
     assert (len(writes) > 1) == (layout == "spill"), writes

@@ -7,6 +7,8 @@ from __future__ import annotations
 import ast
 import os
 
+import pytest
+
 from data_quality_check_spark import record
 from data_quality_check_spark.record import NOT_DELIVERED, run_record
 
@@ -163,4 +165,35 @@ def test_local_over_cap_frame_is_pinned_and_its_lineage_runs_once(spark, monkeyp
         assert "InMemoryTableScan" in _plan(frame)
         assert sorted(r.v for r in frame.collect()) == list(range(10))
         assert frame.count() == 10
+    assert evals.value == 10
+
+
+@pytest.mark.parametrize("cap", [record.BROADCAST_ROWS, 3], ids=["fits", "over_cap"])
+def test_connected_components_edge_lineage_runs_once_on_each_side_of_the_cap(
+    spark, monkeypatch, cap
+):
+    """connected_components gates its edges with `bounded_collect`, the gate
+    `local` uses: a Python UDF under the edge lineage evaluates each row once
+    whether the edges fit (labeled on the driver, no pin left behind) or pass
+    the cap (the Spark loop reads the pin the collect filled)."""
+    from pyspark.sql import functions as F
+
+    from data_quality_check_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(record, "BROADCAST_ROWS", cap)
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        evals.add(1)
+        return x
+
+    edges = spark.range(0, 10, 1, 2).select(
+        counted("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    with run_record() as rec:
+        labels = connected_components(edges)
+        assert len(rec.pins) == (cap == 3)
+        assert sorted(map(tuple, labels.collect())) == [(i, 0) for i in range(11)]
+        assert labels.count() == 11
     assert evals.value == 10
